@@ -220,12 +220,14 @@ def _bucket_of(term_col: Column, n_buckets: int) -> Column:
 
 def _bucket_ids(spark, qterms: list[str], n_buckets: int) -> set[int]:
     """Bucket ids of the query terms, via constant-folded LITERAL
-    expressions: Catalyst evaluates ``pmod(xxhash64('term'), nb)`` with
-    the exact engine hash during optimization, so ``first()`` collects
-    from a LocalRelation — zero tasks, zero Python workers
-    (OPTIMIZATION r12: the previous createDataFrame(qterms) probe
-    parallelized a default-parallelism pickled RDD, a 32-task +
-    32-Python-worker job per search just to hash ≤ 17 strings)."""
+    expressions over ``VALUES (0)``: Catalyst evaluates
+    ``pmod(xxhash64('term'), nb)`` with the exact engine hash during
+    optimization and folds the one-row VALUES into a LocalRelation, so
+    ``first()`` collects on the driver — no Spark job (a SELECT without
+    FROM plans a OneRowRelation scan, a 1-task job per search). No terms
+    means no buckets, without SQL."""
+    if not qterms:
+        return set()
 
     def q(t: str) -> str:
         return "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -235,28 +237,20 @@ def _bucket_ids(spark, qterms: list[str], n_buckets: int) -> set[int]:
         + ", ".join(
             f"pmod(xxhash64({q(t)}), {n_buckets}) AS b{i}" for i, t in enumerate(qterms)
         )
+        + " FROM VALUES (0)"
     ).first()
     return {int(v) for v in row}
 
 
-def _doclens_from_tf(base: DataFrame, tf: DataFrame, id_col: str) -> DataFrame:
-    """(id, dl) doclens from a (term, id, tf) relation. Carries EVERY doc
-    of ``base`` (dl=0 for token-less docs): it doubles as the index's
-    doc-id registry, so redelivered empty docs are still recognized by
-    the upsert anti-join."""
-    return (
-        base.select(F.col(id_col))
-        .join(tf.groupBy(id_col).agg(F.sum("tf").alias("dl")), id_col, "left")
-        .select(id_col, F.coalesce("dl", F.lit(0)).alias("dl"))
-    )
-
-
-def _doc_tf_dl(base: DataFrame, id_col: str, text_col: str):
-    """(term, id, tf) postings and (id, dl) doclens for a doc batch."""
-    tf = doc_terms(base, id_col, text_col).groupBy("term", id_col).agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    return tf, _doclens_from_tf(base, tf, id_col)
+def _doclens(base: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, dl) doclens of a doc batch: dl = the doc's non-empty token
+    count, which is Σtf over its :func:`doc_terms` rows, computed per row
+    — no aggregation, no join. Carries EVERY doc of ``base`` (dl=0 for
+    token-less docs): it doubles as the index's doc-id registry, so
+    redelivered empty docs are still recognized by the upsert
+    anti-join."""
+    terms = F.array_remove(_toks(text_col, "split"), "")
+    return base.select(F.col(id_col), F.size(terms).cast("long").alias("dl"))
 
 
 def build_inverted_index_manifest(
@@ -272,8 +266,8 @@ def build_inverted_index_manifest(
     only — a 100 TB corpus needs delta postings merged atomically; the
     reference analog is its idempotent incremental serving load,
     load_to_redshift_lambda.py:88-100, honored here for the engine's own
-    search index). Four stores under ONE manifest version (atomic across
-    stores — sinks/manifest.py):
+    search index). Three stores plus the corpus stats under ONE manifest
+    version (atomic across stores — sinks/manifest.py):
 
     - ``postings`` (term, id, tf) — hive-partitioned by ``term_bucket``,
       APPEND-ONLY: a delta adds files, never rewrites history;
@@ -281,7 +275,9 @@ def build_inverted_index_manifest(
     - ``termstats`` (term, df) — vocabulary-sized, REWRITTEN per commit
       (df must reflect base+delta; postings rows stay df-free precisely
       so history never needs rewriting when df changes);
-    - ``stats`` one row (n_docs, total_tokens) — rewritten per commit.
+    - the corpus stats ``(n_docs, total_tokens)`` — in the commit meta
+      (``corpus``), next to ``layout`` and ``delta_ids``, so a search
+      or upsert reads them from the manifest it already loaded.
 
     Search reads a PINNED version: a racing upsert can never tear a
     running search, and time travel = search an older version."""
@@ -301,7 +297,8 @@ def upsert_inverted_index(
     """Merge a new-crawl delta into the index as ONE atomic manifest
     commit: per-term df refresh, appended postings/doclens, corpus-stat
     refresh — readers pinned to the previous version are untouched, and
-    the new version exposes all four stores' updates together.
+    the new version exposes all three stores' updates and the new stats
+    together.
 
     Idempotent by construction twice over: (a) ``delta_id`` (e.g. a
     crawl-batch id) recorded in the commit meta makes an exact replay an
@@ -311,6 +308,19 @@ def upsert_inverted_index(
     redelivery commits nothing. Returns the committed version, or None
     for a no-op replay."""
     return _commit_index_delta(delta_docs, table, delta_id=delta_id)
+
+
+def _corpus_stats(spark, table: str, m: dict, version: int) -> tuple[int, int]:
+    """``(n_docs, total_tokens)`` of an index version: from the commit
+    meta, or from the one-row ``stats`` store of an index committed
+    before the meta carried them."""
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    corpus = m["meta"].get("corpus")
+    if corpus is not None:
+        return int(corpus["n_docs"]), int(corpus["total_tokens"])
+    row = M.read_store(spark, table, "stats", version=version).first()
+    return int(row["n_docs"]), int(row["total_tokens"])
 
 
 def _commit_index_delta(
@@ -323,6 +333,7 @@ def _commit_index_delta(
 ) -> int | None:
     import json
 
+    from pyspark.sql import Observation
     from pyspark.sql import types as T
 
     from cashback_data_pipeline_spark.sinks import manifest as M
@@ -359,14 +370,13 @@ def _commit_index_delta(
                 return None  # exact replay of an already-committed delta
             id_col, text_col = layout["id_col"], layout["text_col"]
             # carry forward the append-only stores' files untouched;
-            # termstats/stats are superseded by this commit's rewrite
+            # termstats is superseded by this commit's rewrite
             keep = set(M.store_files(prev, "postings")) | set(M.store_files(prev, "doclens"))
             old_files = [f for f in prev["files"] if f in keep]
             old_termstats = M.read_store(
                 spark, table, "termstats", version=cur, schema=_ts_schema()
             )
-            srow = M.read_store(spark, table, "stats", version=cur).first()
-            old_stats = (int(srow["n_docs"]), int(srow["total_tokens"]))
+            old_stats = _corpus_stats(spark, table, prev, cur)
         nb = layout["n_term_buckets"]
         id_field = T.StructField.fromJson(layout["id_field"])
 
@@ -393,62 +403,60 @@ def _commit_index_delta(
             # belt-and-braces idempotence: redelivered ids contribute
             # nothing even when the caller supplied no delta_id
             base = base.join(known, id_col, "left_anti")
-        base = base.localCheckpoint()  # one tokenize source for tf/df/stats
+        # the commit's two sizes are observed while the checkpoints that
+        # materialize base and tf run (n_new = rows of base, delta_tokens
+        # = Σtf): no sizing job of their own
+        n_obs, t_obs = Observation(), Observation()
+        base = base.observe(n_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
         tf = None
         try:
-            tf, dl = _doc_tf_dl(base, id_col, text_col)
-            # OPTIMIZATION r12 (guide §5): the commit runs FIVE actions
-            # over tf/dl (sizing agg, postings/doclens/termstats/stats
-            # writes) and, without this, each re-ran the tokenize+explode
-            # aggregation from base — profiled as 3-4 full ~7 s 32-task
-            # tokenize stages per commit. tf is the compact (term, id,
-            # tf) relation; checkpoint it so tokenize runs once.
-            tf = tf.localCheckpoint()
-            dl = _doclens_from_tf(base, tf, id_col)
-            # one sizing pass instead of two (count + token sum)
-            srow = dl.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("t"),
-            ).first()
-            n_new, delta_tokens = int(srow["n"]), int(srow["t"])
+            n_new = int(n_obs.get["n"])
             if n_new == 0 and cur is not None:
                 return None  # nothing genuinely new — no version churn
-            df_delta = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            termstats = (
-                df_delta
-                if old_termstats is None
-                else old_termstats.select("term", F.col("df").alias("df_old"))
-                .join(df_delta.select("term", F.col("df").alias("df_new")), "term", "full_outer")
-                .select(
-                    "term",
-                    (
-                        F.coalesce("df_old", F.lit(0)) + F.coalesce("df_new", F.lit(0))
-                    ).alias("df"),
-                )
+            tf = doc_terms(base, id_col, text_col).groupBy("term", id_col).agg(
+                F.count(F.lit(1)).alias("tf")
             )
-            stats = local_rows_df(
-                spark,
-                [(old_stats[0] + n_new, old_stats[1] + int(delta_tokens))],
-                "n_docs long, total_tokens long",
+            # OPTIMIZATION r12 (guide §5): the postings and termstats
+            # writes both read tf and, without this, each re-ran the
+            # tokenize+explode aggregation from base — profiled as 3-4
+            # full ~7 s 32-task tokenize stages per commit. tf is the
+            # compact (term, id, tf) relation; checkpoint it so tokenize
+            # runs once.
+            tf = tf.observe(t_obs, F.coalesce(F.sum("tf"), F.lit(0)).alias("t")).localCheckpoint()
+            delta_tokens = int(t_obs.get["t"])
+            # df per term = its tf rows in this delta plus the committed
+            # df, folded in the ONE shuffle that also lays the store out
+            # by term_bucket (the aggregate's keys include the bucket, so
+            # the bucket partitioning satisfies it)
+            df_parts = tf.select("term", F.lit(1).cast("long").alias("df"))
+            if old_termstats is not None:
+                df_parts = df_parts.unionByName(old_termstats.select("term", "df"))
+            termstats = (
+                df_parts.withColumn("term_bucket", _bucket_of(F.col("term"), nb))
+                .repartition("term_bucket")
+                .groupBy("term_bucket", "term")
+                .agg(F.sum("df").alias("df"))
+                .select("term", "df", "term_bucket")
+                .sortWithinPartitions("term")
             )
 
             # TWO commit dirs on purpose: postings/doclens files live as
             # long as the version chain references them, but each commit
-            # SUPERSEDES the previous termstats/stats — and vacuum works
-            # at data-dir granularity, so dead vocabulary-sized termstats
+            # SUPERSEDES the previous termstats — and vacuum works at
+            # data-dir granularity, so dead vocabulary-sized termstats
             # sharing a dir with live postings would be unreclaimable
             # forever (one leak per delta). Separate dirs make each
-            # superseded termstats/stats dir fully unreferenced and
-            # vacuumable once the retention horizon passes.
+            # superseded termstats dir fully unreferenced and vacuumable
+            # once the retention horizon passes.
             cid = M.new_commit_id()
             cid_superseded = M.new_commit_id()
             postings = tf.withColumn("term_bucket", _bucket_of(F.col("term"), nb))
-            # the four store writes are INDEPENDENT jobs over the
-            # checkpointed tf (or driver-local stats) — submit them from
-            # a small thread pool so each job's tail backfills the next
-            # job's tasks instead of serializing four scheduling
-            # latencies (OPTIMIZATION r12, guide §2.6 "overlap
-            # independent jobs"); files keep their deterministic order
+            # the three store writes are INDEPENDENT jobs over the
+            # checkpointed tf and base — submit them from a small pool so
+            # each job's tail backfills the next job's tasks instead of
+            # serializing three scheduling latencies (OPTIMIZATION r12,
+            # guide §2.6 "overlap independent jobs"); files keep their
+            # deterministic order
             from concurrent.futures import ThreadPoolExecutor
 
             writes = [
@@ -457,20 +465,20 @@ def _commit_index_delta(
                     cid, "postings", "term_bucket",
                 ),
                 # doclens files sized by ROWS (same discipline as
-                # build_inverted_index): one footer per ~2M docs
-                (dl.repartition(max(1, -(-n_new // 2_000_000))), cid, "doclens", None),
+                # build_inverted_index): one footer per ~2M docs, merged
+                # from base's partitions without a shuffle
                 (
-                    termstats.withColumn("term_bucket", _bucket_of(F.col("term"), nb))
-                    .repartition("term_bucket")
-                    .sortWithinPartitions("term"),
-                    cid_superseded, "termstats", "term_bucket",
+                    _doclens(base, id_col, text_col).coalesce(max(1, -(-n_new // 2_000_000))),
+                    cid, "doclens", None,
                 ),
-                (stats, cid_superseded, "stats", None),
+                (termstats, cid_superseded, "termstats", "term_bucket"),
             ]
-            with ThreadPoolExecutor(max_workers=4) as pool:
+            schemas: dict = {}
+            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
                 futures = [
                     pool.submit(
-                        M.write_store_files, wdf, table, wcid, wstore, partition_by=wpart
+                        M.write_store_files, wdf, table, wcid, wstore,
+                        partition_by=wpart, schemas=schemas,
                     )
                     for wdf, wcid, wstore, wpart in writes
                 ]
@@ -481,9 +489,18 @@ def _commit_index_delta(
                 delta_ids.append(delta_id)
             # meta grows O(#deltas); at one crawl batch per commit that is
             # the commit count — the same order as the manifest dir itself
-            meta = {"layout": layout, "delta_ids": delta_ids}
+            meta = {
+                "layout": layout,
+                "delta_ids": delta_ids,
+                "corpus": {
+                    "n_docs": old_stats[0] + n_new,
+                    "total_tokens": old_stats[1] + delta_tokens,
+                },
+            }
+            files = old_files + files
+            meta = M.with_store_schemas(meta, prev, files, schemas)
             schema_json = json.dumps(postings.schema.jsonValue())
-            if M._try_commit(table, (cur or 0) + 1, old_files + files, cur, schema_json, meta=meta):
+            if M._try_commit(table, (cur or 0) + 1, files, cur, schema_json, meta=meta):
                 return (cur or 0) + 1
             # CAS lost: a racing writer committed — recompute this delta
             # against the winner's version (orphaned files → vacuum)
@@ -511,9 +528,9 @@ def compact_inverted_index(spark, table: str) -> int:
     per-file sorted runs, so row-group min/max pruning weakens as deltas
     pile up) and coalesces doclens, all as ONE new manifest version:
     searches in flight stay pinned, a concurrent delta commit just
-    retries the CAS, and ``delta_ids`` carry forward so a replayed crawl
-    batch is STILL a no-op after compaction. A crash mid-compaction
-    publishes nothing (orphans → vacuum)."""
+    retries the CAS, and ``delta_ids`` and the corpus stats carry
+    forward so a replayed crawl batch is STILL a no-op after compaction.
+    A crash mid-compaction publishes nothing (orphans → vacuum)."""
     from pyspark.sql import types as T
 
     from cashback_data_pipeline_spark.sinks import manifest as M
@@ -526,11 +543,11 @@ def compact_inverted_index(spark, table: str) -> int:
         layout = prev["meta"]["layout"]
         nb = layout["n_term_buckets"]
         id_field = T.StructField.fromJson(layout["id_field"])
-        id_col = layout["id_col"]
 
         cid = M.new_commit_id()
-        cid_superseded = M.new_commit_id()  # termstats/stats: vacuumable when superseded
+        cid_superseded = M.new_commit_id()  # termstats: vacuumable when superseded
         files: list[str] = []
+        schemas: dict = {}
         postings = M.read_store(
             spark,
             table,
@@ -548,6 +565,7 @@ def compact_inverted_index(spark, table: str) -> int:
             cid,
             "postings",
             partition_by="term_bucket",
+            schemas=schemas,
         )
         ts = M.read_store(
             spark,
@@ -566,6 +584,7 @@ def compact_inverted_index(spark, table: str) -> int:
             cid_superseded,
             "termstats",
             partition_by="term_bucket",
+            schemas=schemas,
         )
         dl = M.read_store(
             spark,
@@ -574,16 +593,16 @@ def compact_inverted_index(spark, table: str) -> int:
             version=cur,
             schema=T.StructType([id_field, T.StructField("dl", T.LongType())]),
         )
-        files += M.write_store_files(dl.coalesce(4), table, cid, "doclens")
-        files += M.write_store_files(
-            M.read_store(spark, table, "stats", version=cur), table, cid_superseded, "stats"
-        )
+        files += M.write_store_files(dl.coalesce(4), table, cid, "doclens", schemas=schemas)
+        n_docs, total_tokens = _corpus_stats(spark, table, prev, cur)
 
         meta = {
             "layout": layout,
             "delta_ids": prev["meta"].get("delta_ids", []),
+            "corpus": {"n_docs": n_docs, "total_tokens": total_tokens},
             "compaction": True,
         }
+        meta = M.with_store_schemas(meta, prev, files, schemas)
         if M._try_commit(table, cur + 1, files, cur, prev["schema"], meta=meta):
             return cur + 1
 
@@ -604,7 +623,10 @@ def search_inverted_index_manifest(
     segment are never opened — same ≤ k-bucket access path as
     :func:`search_inverted_index`, same score contract as
     :func:`bm25_topk` (quantized total order), so base+delta search must
-    hash-match the full-scan BM25 over the union corpus."""
+    hash-match the full-scan BM25 over the union corpus. The corpus
+    stats come from the commit meta, the stores' schemas from the
+    commit's recorded read schemas: the only Spark jobs are the
+    scoring query's own."""
     import re
 
     from pyspark.sql import types as T
@@ -631,8 +653,7 @@ def search_inverted_index_manifest(
             ),
         )
 
-    srow = M.read_store(spark, table, "stats", version=v).first()
-    n_docs, total_tokens = int(srow["n_docs"]), int(srow["total_tokens"])
+    n_docs, total_tokens = _corpus_stats(spark, table, m, v)
     if not n_docs or not total_tokens:
         return _empty()
     avgdl = float(total_tokens) / n_docs

@@ -845,6 +845,7 @@ def _commit_ivf_delta(
             listed = assigned.withColumn("__list", F.col("centroid_id"))
 
             cid = M.new_commit_id()
+            schemas: dict = {}
             if cur is None:
                 # own commit dir: a later compaction supersedes v1's lists
                 # but keeps the frozen centroids forever — sharing a dir
@@ -859,24 +860,29 @@ def _commit_ivf_delta(
                     f_lists = pool.submit(
                         M.write_store_files,
                         listed.repartition("__list"), table, cid, "lists",
-                        partition_by="__list",
+                        partition_by="__list", schemas=schemas,
                     )
                     f_cents = pool.submit(
-                        M.write_store_files, cents, table, cid2, "centroids"
+                        M.write_store_files, cents, table, cid2, "centroids",
+                        schemas=schemas,
                     )
                     files = f_lists.result() + f_cents.result()
             else:
                 files = M.write_store_files(
-                    listed.repartition("__list"), table, cid, "lists", partition_by="__list"
+                    listed.repartition("__list"), table, cid, "lists",
+                    partition_by="__list", schemas=schemas,
                 )
             delta_ids = list((prev or {}).get("meta", {}).get("delta_ids", []))
             if delta_id is not None:
                 delta_ids.append(delta_id)
-            meta = {"layout": layout, "delta_ids": delta_ids}
+            files = old_files + files
+            meta = M.with_store_schemas(
+                {"layout": layout, "delta_ids": delta_ids}, prev, files, schemas
+            )
             if M._try_commit(
                 table,
                 (cur or 0) + 1,
-                old_files + files,
+                files,
                 cur,
                 json.dumps(listed.schema.jsonValue()),
                 meta=meta,
@@ -940,6 +946,7 @@ def compact_ivf_index(
         prev = M.read_manifest(table, cur)
         layout = prev["meta"]["layout"]
         cid = M.new_commit_id()
+        schemas: dict = {}
         lists = M.read_store(
             spark,
             table,
@@ -978,18 +985,23 @@ def compact_ivf_index(
                 )
             listed = assigned.withColumn("__list", F.col("centroid_id"))
             files = M.write_store_files(
-                listed.repartition("__list"), table, cid, "lists", partition_by="__list"
+                listed.repartition("__list"), table, cid, "lists",
+                partition_by="__list", schemas=schemas,
             )
             # the retrained quantizer gets its own commit dir so the old
             # one stays vacuum-reclaimable at dir granularity
-            files += M.write_store_files(cents, table, M.new_commit_id(), "centroids")
+            files += M.write_store_files(
+                cents, table, M.new_commit_id(), "centroids", schemas=schemas
+            )
             meta["retrain"] = True
         else:
             listed = lists.withColumn("__list", F.col("centroid_id"))
             files = M.write_store_files(
-                listed.repartition("__list"), table, cid, "lists", partition_by="__list"
+                listed.repartition("__list"), table, cid, "lists",
+                partition_by="__list", schemas=schemas,
             )
             files += M.store_files(prev, "centroids")  # immutable, reused as-is
+        meta = M.with_store_schemas(meta, prev, files, schemas)
         if M._try_commit(table, cur + 1, files, cur, prev["schema"], meta=meta):
             return cur + 1
 

@@ -14,6 +14,11 @@ Design notes (100 TB stance):
   warehouse prefix before rewriting (pull_data_glue_job_lambda.py:66-78);
   dynamic partition overwrite is the Spark-native equivalent that scales
   (only touched partitions rewritten).
+- ``codegen.cache.maxEntries=1024``: Spark's LRU of compiled
+  whole-stage-codegen classes holds 100 by default, fewer than one corpus
+  iteration's ~260 (curation, index build/upsert/search, IVF), so every
+  class was evicted and recompiled by Janino before its next use. 1024 is
+  ~4× that working set. A static conf: only :func:`configure` sets it.
 """
 
 from __future__ import annotations
@@ -34,6 +39,43 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # genuinely large snapshots still fan out (OPTIMIZATION r12, guide §6).
 DEFAULT_LISTING_THRESHOLD = os.environ.get("SPARK_GRAFT_LISTING_THRESHOLD", "512")
 
+# The engine's session configs: (key, value, launch_only). Both
+# configure() and apply_session_conf() read this one table; launch-only
+# (static) entries take effect only when a session is built, so
+# apply_session_conf() skips them.
+ENGINE_CONF: tuple[tuple[str, str, bool], ...] = (
+    ("spark.sql.session.timeZone", "UTC", False),
+    ("spark.sql.ansi.enabled", "false", False),
+    ("spark.sql.adaptive.enabled", "true", False),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true", False),
+    ("spark.sql.adaptive.skewJoin.enabled", "true", False),
+    ("spark.sql.sources.partitionOverwriteMode", "dynamic", False),
+    # cached plans keep AQE partition coalescing (default false): the
+    # engine's DML/load paths cache commit-sized intermediates
+    # (count + write share one materialization), and without this
+    # every post-shuffle stage over a cached relation runs
+    # shuffle-partition-many tasks regardless of size — measured
+    # ~0.5 s per lifecycle query of pure per-task fixed cost
+    # (OPTIMIZATION r12, guide §2.2: fewer, larger partitions)
+    ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true", False),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true", False),
+    # driver testdata stores TIMESTAMP(NANOS) which Spark's reader
+    # rejects; read as long and convert (sources.readers.read_testdata)
+    ("spark.sql.legacy.parquet.nanosAsLong", "true", False),
+    # INT96 (the legacy default) carries NO parquet footer statistics,
+    # which would blind file-level data skipping (sinks/filestats.py)
+    # on every timestamp column; micros is the modern interchange type
+    ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS", False),
+    # the manifest batch DataSource prunes files from pushed filters
+    # (sources/manifest_source.py); off by default in Spark 4.1
+    ("spark.sql.python.filterPushdown.enabled", "true", False),
+    # the driver's plain session defaults to 200 shuffle partitions —
+    # needless task overhead at test scale
+    ("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS), False),
+    ("spark.sql.sources.parallelPartitionDiscovery.threshold", DEFAULT_LISTING_THRESHOLD, False),
+    ("spark.sql.codegen.cache.maxEntries", "1024", True),
+)
+
 
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply the engine's required configs to any builder.
@@ -41,35 +83,9 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     Kept separate from :func:`get_spark` so the driver (which owns its own
     SparkSession) and tests can share one source of truth.
     """
-    return (
-        builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # cached plans keep AQE partition coalescing (default false): the
-        # engine's DML/load paths cache commit-sized intermediates
-        # (count + write share one materialization), and without this
-        # every post-shuffle stage over a cached relation runs
-        # shuffle-partition-many tasks regardless of size — measured
-        # ~0.5 s per lifecycle query of pure per-task fixed cost
-        # (OPTIMIZATION r12, guide §2.2: fewer, larger partitions)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # driver testdata stores TIMESTAMP(NANOS) which Spark's reader
-        # rejects; read as long and convert (sources.readers.read_testdata)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # INT96 (the legacy default) carries NO parquet footer statistics,
-        # which would blind file-level data skipping (sinks/filestats.py)
-        # on every timestamp column; micros is the modern interchange type
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            DEFAULT_LISTING_THRESHOLD,
-        )
-    )
+    for key, value, _ in ENGINE_CONF:
+        builder = builder.config(key, value)
+    return builder
 
 
 def get_spark(app_name: str = "cashback_data_pipeline_spark", master: str | None = None) -> SparkSession:
@@ -101,27 +117,9 @@ def apply_session_conf(spark: SparkSession) -> SparkSession:
     The driver hands us a SparkSession it built; timezone/ANSI/AQE are all
     runtime-settable, so queries behave identically there.
     """
-    for key, value in [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.ansi.enabled", "false"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.sources.partitionOverwriteMode", "dynamic"),
-        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
-        # the manifest batch DataSource prunes files from pushed filters
-        # (sources/manifest_source.py); off by default in Spark 4.1
-        ("spark.sql.python.filterPushdown.enabled", "true"),
-        # runtime-settable: the driver's plain session defaults to 200
-        # shuffle partitions — needless task overhead at test scale
-        ("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)),
-        (
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            DEFAULT_LISTING_THRESHOLD,
-        ),
-    ]:
+    for key, value, launch_only in ENGINE_CONF:
+        if launch_only:
+            continue
         try:
             spark.conf.set(key, value)
         except Exception:

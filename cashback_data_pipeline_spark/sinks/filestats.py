@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -424,6 +424,27 @@ def bloom_may_contain(bloom: dict, literal) -> bool:
     return all(bits[p >> 3] & (1 << (p & 7)) for p in _bloom_positions(key, m))
 
 
+def _rel_resolver(rel_files: list[str]):
+    """Map a scan's ``_metadata.file_path`` URI back to its entry in
+    ``rel_files`` by unique path suffix. The URI renders the path
+    differently from the store's join (scheme, percent-encoding), and a
+    partitioned commit repeats file basenames across its ``key=value``
+    dirs (same task, same part number), so only the whole relative path
+    identifies a file. Returns None for no or several matches."""
+    rel_by_norm = {rel.replace(os.sep, "/"): rel for rel in rel_files}
+
+    def resolve(uri: str) -> str | None:
+        parts = unquote(uri.replace("\\", "/")).split("/")
+        matches = [
+            rel_by_norm[s]
+            for s in ("/".join(parts[i:]) for i in range(len(parts)))
+            if s in rel_by_norm
+        ]
+        return matches[0] if len(matches) == 1 else None
+
+    return resolve
+
+
 def collect_bloom_filters(
     spark: SparkSession,
     table: str,
@@ -451,14 +472,7 @@ def collect_bloom_filters(
         for c in bloom_cols
     }
     store = get_log_store(table)
-    rel_by_base = {os.path.basename(rel): rel for rel in rel_files}
-    if len(rel_by_base) != len(rel_files):
-        # scan results key by basename below, and an UNMATCHED file falls
-        # into the all-zero default — which PRUNES. A basename collision
-        # (partitioned layouts repeat part-00000-<uuid> per dir) must
-        # fail loudly, never silently drop rows. (collect_file_stats has
-        # the same guard; its miss direction is merely keep.)
-        raise ValueError("duplicate basenames in one commit's bloom file list")
+    rel_of = _rel_resolver(rel_files)
     df = spark.read.parquet(*[store.join(table, rel) for rel in rel_files]).select(
         F.col("_metadata.file_path").alias("__path"), *bloom_cols
     )
@@ -483,7 +497,12 @@ def collect_bloom_filters(
 
     merged: dict[tuple[str, str], bytearray] = {}
     for r in df.mapInPandas(_partials, "__path string, col string, bloom_b64 string").collect():
-        key = (os.path.basename(r["__path"]), r["col"])
+        rel = rel_of(r["__path"])
+        if rel is None:
+            # an unmatched file would fall into the all-zero default
+            # below — which PRUNES it: fail loudly, never drop rows
+            raise ValueError(f"scanned file {r['__path']!r} matches no commit file")
+        key = (rel, r["col"])
         part = _b64.b64decode(r["bloom_b64"])
         if key in merged:
             acc = merged[key]
@@ -492,10 +511,7 @@ def collect_bloom_filters(
         else:
             merged[key] = bytearray(part)
     out: dict[str, dict] = {}
-    for (base, c), bits in merged.items():
-        rel = rel_by_base.get(base)
-        if rel is None:
-            continue
+    for (rel, c), bits in merged.items():
         out.setdefault(rel, {})[c] = {
             "b": _b64.b64encode(bytes(bits)).decode(),
             "m": m_bits,
@@ -816,20 +832,6 @@ def collect_file_stats(
     # part number, different partition)
     rel_by_abs = {p: rel for rel, p in abs_by_rel.items()}
 
-    def _rel_of_uri(path: str) -> str | None:
-        """Resolve a scan's _metadata.file_path URI back to the relative
-        entry by unique path suffix (the URI rendering differs from the
-        store's join)."""
-        p = path.replace("\\", "/")
-        matches = [
-            rel
-            for rel, norm in norm_by_rel.items()
-            if p.endswith("/" + norm) or p == norm
-        ]
-        return matches[0] if len(matches) == 1 else None
-
-    norm_by_rel = {rel: rel.replace(os.sep, "/") for rel in rel_files}
-
     local = {rel: _local_path(p) for rel, p in abs_by_rel.items()}
     if all(p is not None for p in local.values()):
         if len(rel_files) <= DRIVER_FOOTER_MAX_FILES:
@@ -895,8 +897,9 @@ def collect_file_stats(
         .collect()
     )
     out = {}
+    rel_of = _rel_resolver(rel_files)
     for r in rows:
-        rel = _rel_of_uri(r["__path"])
+        rel = rel_of(r["__path"])
         if rel is None:
             continue
         cols = {}

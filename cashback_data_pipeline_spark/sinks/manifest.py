@@ -1182,27 +1182,117 @@ def _dv_set(m: dict | None) -> list[str]:
 
 
 def write_store_files(
-    df: DataFrame, table: str, commit_id: str, store: str, partition_by: str | None = None
+    df: DataFrame,
+    table: str,
+    commit_id: str,
+    store: str,
+    partition_by: str | None = None,
+    schemas: dict | None = None,
 ) -> list[str]:
     """Multi-STORE commits: several logical relations (e.g. an index's
-    postings / doclens / stats) versioned together under ONE manifest, so
-    a commit is atomic ACROSS stores — a reader can never observe new
-    postings with old stats. Each store's files land under
+    postings / doclens / termstats) versioned together under ONE
+    manifest, so a commit is atomic ACROSS stores — a reader can never
+    observe new postings with old termstats. Each store's files land under
     ``data/<commit>/<store>/``; store membership is recoverable from the
     path (see :func:`store_files`), and ``partition_by`` lays the store
     out hive-partitioned so readers can prune FILES from the manifest's
     metadata alone, no directory listing. Returns table-relative paths —
-    invisible until a manifest references them, like every data write."""
+    invisible until a manifest references them, like every data write.
+
+    ``schemas`` (a dict the caller owns) receives ``store`` → the
+    schema :func:`read_store` should read these files with; the caller
+    records it in the commit through :func:`with_store_schemas`."""
     log_store = get_log_store(table)
     data_dir = log_store.join(table, "data", commit_id, store)
     writer = df.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(data_dir)
+    if schemas is not None:
+        written = _store_schema(df.schema, partition_by)
+        # two writes of one store in one commit must agree, else no entry
+        schemas[store] = written if schemas.get(store, written) == written else None
     return [
         log_store.relativize(table, p)
         for p in log_store.list_files_recursive(data_dir, suffix=".parquet")
     ]
+
+
+def _nullable_json(dt):
+    """A type's jsonValue with every nested field, element and map value
+    nullable, as Spark's parquet reader resolves it (``asNullable``)."""
+    if not isinstance(dt, dict):
+        return dt
+    if dt["type"] == "struct":
+        return {
+            **dt,
+            "fields": [
+                {**f, "type": _nullable_json(f["type"]), "nullable": True} for f in dt["fields"]
+            ],
+        }
+    if dt["type"] == "array":
+        return {**dt, "elementType": _nullable_json(dt["elementType"]), "containsNull": True}
+    if dt["type"] == "map":
+        return {
+            **dt,
+            "keyType": _nullable_json(dt["keyType"]),
+            "valueType": _nullable_json(dt["valueType"]),
+            "valueContainsNull": True,
+        }
+    return dt
+
+
+def _store_schema(schema: T.StructType, partition_by: str | None) -> list:
+    """What Spark infers from a store's files given as explicit paths,
+    compactly for the commit record: one ``[name, type]`` pair per field
+    (plus the field's metadata when it has any), all fields nullable,
+    and no ``partition_by`` column — its values live in the path, which
+    a file-list read does not discover."""
+    return [
+        [f.name, _nullable_json(f.dataType.jsonValue())] + ([f.metadata] if f.metadata else [])
+        for f in schema.fields
+        if f.name != partition_by
+    ]
+
+
+def _store_struct(entry: list) -> T.StructType:
+    """The StructType of a :func:`_store_schema` entry."""
+    return T.StructType.fromJson(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": name, "type": dt, "nullable": True, "metadata": md[0] if md else {}}
+                for name, dt, *md in entry
+            ],
+        }
+    )
+
+
+_STORE_SCHEMAS = "store_schemas"
+
+
+def with_store_schemas(
+    meta: dict | None, prev: dict | None, files: list[str], written: dict
+) -> dict:
+    """``meta`` plus the commit's per-store read schemas: the entry
+    :func:`write_store_files` put in ``written`` for each store this
+    commit wrote, and the parent's entry for each store it carries
+    untouched. An entry must describe EVERY file of its store, so a
+    store that keeps parent files and gains new ones keeps an entry
+    only when the parent recorded the same schema; otherwise it gets
+    none and :func:`read_store` infers, as for commits that predate
+    these entries."""
+    old = ((prev or {}).get("meta") or {}).get(_STORE_SCHEMAS) or {}
+    keep = set(files)
+    out = {}
+    for store in set(old) | set(written):
+        carried = prev is not None and any(f in keep for f in store_files(prev, store))
+        if store not in written:
+            if carried:
+                out[store] = old[store]
+        elif written[store] is not None and (not carried or old.get(store) == written[store]):
+            out[store] = written[store]
+    return {**(meta or {}), _STORE_SCHEMAS: out} if out else dict(meta or {})
 
 
 def store_files(manifest_doc: dict, store: str) -> list[str]:
@@ -1237,8 +1327,11 @@ def read_store(
     caller that does NOT know the expected schema up front (e.g. a
     compactor rewriting whatever the store holds): the read unions every
     file's schema instead of sampling one file, so an evolved column can
-    never silently vanish from the snapshot. ``skip=`` is stats-based
-    file pruning + exact residual filter, as in :func:`read_table`."""
+    never silently vanish from the snapshot. Without ``apply_schema``,
+    a schema the commit recorded for the store (:func:`with_store_schemas`)
+    is applied instead, which spares the footer-inference job a bare
+    file-list read runs. ``skip=`` is stats-based file pruning + exact
+    residual filter, as in :func:`read_table`."""
     from cashback_data_pipeline_spark.sinks import filestats
 
     v = current_version(table) if version is None else version
@@ -1255,12 +1348,17 @@ def read_store(
             raise FileNotFoundError(f"store {store!r} has no files at v{v} and no schema given")
         return spark.createDataFrame([], schema)
     reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
+    recorded = ((m.get("meta") or {}).get(_STORE_SCHEMAS) or {}).get(store)
     if apply_schema:
         if schema is None:
             raise ValueError("apply_schema=True requires schema")
         reader = reader.schema(schema)
+    elif recorded is not None:
+        # the schema every file of the store was written with: no
+        # footer-inference job, and nothing left for mergeSchema to add
+        reader = reader.schema(_store_struct(recorded))
+    elif merge_schema:
+        reader = reader.option("mergeSchema", "true")
     log_store = get_log_store(table)
     out = reader.parquet(*[log_store.join(table, f) for f in files])
     if skip:

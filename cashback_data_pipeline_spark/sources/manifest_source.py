@@ -195,7 +195,11 @@ class ManifestBatchReader(DataSourceReader):
             for f in files
         ]
 
-    def read(self, partition: ManifestBatchPartition) -> Iterator:
+    def read(self, partition: ManifestBatchPartition | None) -> Iterator:
+        # Spark replaces an empty partitions() list (every file pruned)
+        # with [None]: no file, no rows
+        if partition is None:
+            return
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc

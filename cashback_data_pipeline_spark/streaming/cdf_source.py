@@ -244,15 +244,18 @@ class ManifestChangesStreamReader(DataSourceStreamReader):
         yield from _read_file_partition(partition)
 
 
-def _read_file_partition(partition: ManifestFilePartition) -> Iterator:
+def _read_file_partition(partition: ManifestFilePartition | None) -> Iterator:
     """Worker-side Arrow read of one added file under the pinned schema
     + column mapping — shared by the stream reader and the batch window
-    reader."""
+    reader. ``None`` is what Spark hands the reader when ``partitions()``
+    returned none (a window that adds no files): it reads nothing."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if partition is None:
+        return
     target = to_arrow_schema(T.StructType.fromJson(json.loads(partition.schema_json)))
     mapping = getattr(partition, "mapping", {}) or {}
     phys_of = {n: mapping.get(n, n) for n in target.names}

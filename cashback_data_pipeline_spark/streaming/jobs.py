@@ -862,6 +862,7 @@ def _migrate_legacy_near_dup_index(spark: SparkSession, index_path: str) -> int 
     cid = M.new_commit_id()
     files: list[str] = []
     schemas: dict[str, str] = {}
+    store_schemas: dict = {}
     for store in ("bands", "sigs"):
         df = spark.read.option("mergeSchema", "true").parquet(f"{index_path}/{store}")
         if "src_epoch" in df.columns:
@@ -873,13 +874,14 @@ def _migrate_legacy_near_dup_index(spark: SparkSession, index_path: str) -> int 
         # pre-upgrade rows belong to the default ("") run namespace
         if "src_run" not in df.columns:
             df = df.withColumn("src_run", F.lit(""))
-        files += M.write_store_files(df.drop("__epoch"), index_path, cid, store)
+        files += M.write_store_files(
+            df.drop("__epoch"), index_path, cid, store, schemas=store_schemas
+        )
         schemas[store] = df.drop("__epoch").schema.json()
     # the manifest `schema` field means the BANDS store for this table —
     # every commit site (ingest append, compaction, migration) agrees
-    if not M._try_commit(
-        index_path, 1, files, None, schemas["bands"], meta={"migrated": True}
-    ):
+    meta = M.with_store_schemas({"migrated": True}, None, files, store_schemas)
+    if not M._try_commit(index_path, 1, files, None, schemas["bands"], meta=meta):
         return M.current_version(index_path)  # a racing migrator won — use its commit
     from cashback_data_pipeline_spark.sinks.logstore import get_log_store
 
@@ -919,6 +921,7 @@ def compact_near_dup_index(spark: SparkSession, index_path: str, n_files: int = 
         cid = M.new_commit_id()
         files: list[str] = []
         schemas: dict[str, str] = {}
+        store_schemas: dict = {}
         for store in ("bands", "sigs"):
             # mergeSchema, mirroring the ingest's enforced-schema read
             # (ADVICE r6, jobs.py:645): on a mixed-generation index
@@ -937,9 +940,11 @@ def compact_near_dup_index(spark: SparkSession, index_path: str, n_files: int = 
                     )
                 else:
                     snapshot = snapshot.withColumn(pcol, F.lit(default).cast(ptype))
-            files += M.write_store_files(snapshot.coalesce(n_files), index_path, cid, store)
+            files += M.write_store_files(
+                snapshot.coalesce(n_files), index_path, cid, store, schemas=store_schemas
+            )
             schemas[store] = snapshot.schema.json()
-        meta = {"compaction": True}
+        meta = M.with_store_schemas({"compaction": True}, m, files, store_schemas)
         # manifest `schema` = the bands store, same as every other commit site
         if M._try_commit(index_path, cur + 1, files, cur, schemas["bands"], meta=meta):
             return cur + 1
@@ -1157,8 +1162,9 @@ def near_dup_ingest_batch(
         # entry. Mirrors append_table_if_absent, which recomputes its
         # anti-join on CAS loss. Orphaned prior deltas → vacuum.
         cid = M.new_commit_id()
-        files = M.write_store_files(new_bands, index_path, cid, "bands")
-        files += M.write_store_files(new_sigs, index_path, cid, "sigs")
+        store_schemas: dict = {}
+        files = M.write_store_files(new_bands, index_path, cid, "bands", schemas=store_schemas)
+        files += M.write_store_files(new_sigs, index_path, cid, "sigs", schemas=store_schemas)
         screened = cur
         while True:
             cur2 = M.current_version(index_path)
@@ -1181,18 +1187,23 @@ def near_dup_ingest_batch(
                 if not new_sigs.head(1):
                     return  # every remaining doc already indexed by the winner
                 cid = M.new_commit_id()
-                files = M.write_store_files(new_bands, index_path, cid, "bands")
-                files += M.write_store_files(new_sigs, index_path, cid, "sigs")
+                files = M.write_store_files(
+                    new_bands, index_path, cid, "bands", schemas=store_schemas
+                )
+                files += M.write_store_files(
+                    new_sigs, index_path, cid, "sigs", schemas=store_schemas
+                )
                 continue  # re-resolve before committing against cur2
-            old_files = M.read_manifest(index_path, cur2)["files"] if cur2 is not None else []
+            m2 = M.read_manifest(index_path, cur2) if cur2 is not None else None
+            all_files = (m2["files"] if m2 else []) + files
             # meta epoch is PROVENANCE only (which micro-batch committed
             # this version) — never a dedup decision: idempotence rests
             # on the id anti-join, which survives rebuilt checkpoints
-            meta = {"epoch": int(epoch_id)}
+            meta = M.with_store_schemas({"epoch": int(epoch_id)}, m2, all_files, store_schemas)
             if M._try_commit(
                 index_path,
                 (cur2 or 0) + 1,
-                old_files + files,
+                all_files,
                 cur2,
                 new_bands.schema.json(),
                 meta=meta,

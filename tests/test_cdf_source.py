@@ -322,3 +322,14 @@ def test_batch_window_pins_schema_at_ending_version(spark, tmp_path):
     # current end: post-rename names, both commits' files resolve
     cur = spark.read.format("manifest_changes").option("startingVersion", 0).load(t)
     assert cur.columns == ["k", "label"] and cur.count() == 8
+
+
+def test_batch_window_that_adds_no_files_reads_zero_rows(spark, tmp_path):
+    """A window whose commits add no files plans zero partitions, which
+    Spark hands the reader as one ``None`` partition: 0 rows, no error."""
+    t = str(tmp_path / "t")
+    mf.write_table(spark.range(5).selectExpr("id AS k", "CAST(id AS STRING) AS v"), t)
+    mf.add_column(t, "w", "string")  # v2: a metadata-only commit
+    cdf_source.register(spark)
+    win = spark.read.format("manifest_changes").option("startingVersion", 1).load(t)
+    assert win.count() == 0 and win.collect() == []

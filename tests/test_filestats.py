@@ -552,6 +552,26 @@ def test_bloom_pruning_on_hash_distributed_layout(spark, mk_table):
     assert gone.count() == 0 and gone.columns == ["id", "s"]
 
 
+def test_bloom_pruning_on_partitioned_table(spark, mk_table):
+    """One task writes the same file basename into every ``key=value``
+    dir of a partitioned commit; bloom scan results are keyed by exact
+    path, so each file gets its own filter: the point lookup prunes and
+    stays exact."""
+    t = mk_table()
+    df = spark.createDataFrame(
+        [(i, f"p{i % 3}") for i in range(600)], "id long, p string"
+    ).repartition(2, "id")
+    M.write_table(df, t, partition_by=["p"], bloom_cols=["id"])
+    m = M.read_manifest(t, M.current_version(t))
+    assert len({f.rsplit("/", 1)[1] for f in m["files"]}) < len(m["files"])
+    _, skipped = filestats.prune_files_bloom(
+        M.get_log_store(t), t, m["files"], m.get("stats"), ("id", "==", 301)
+    )
+    assert skipped >= 1
+    got = M.read_table(spark, t, skip=[("id", "==", 301)]).collect()
+    assert [(r.id, r.p) for r in got] == [(301, "p1")]
+
+
 def test_bloom_refs_carry_forward_on_append_and_missing_sidecar_keeps(spark, mk_table):
     t = mk_table()
     a = spark.createDataFrame([(i, f"a{i}") for i in range(100)], "id long, s string")

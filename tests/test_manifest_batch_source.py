@@ -124,3 +124,15 @@ def test_hive_layout_partition_values_reconstitute(spark, tmp_path):
     M._try_commit(t, 1, files, None, df.schema.json(), operation="overwrite")
     out = MS.read_manifest_batch(spark, t)
     assert _rows(out.select("k", "bucket")) == _rows(df)
+
+
+def test_all_files_pruned_reads_zero_rows(spark, tmp_path):
+    """Pushed filters that prune every file plan zero partitions, which
+    Spark hands the reader as one ``None`` partition: 0 rows, no error."""
+    t = _seed(spark, tmp_path / "t")
+    MS.register_view(spark, "mt_none", t)
+    try:
+        assert spark.sql("SELECT count(*) AS n FROM mt_none WHERE k > 1000").first()["n"] == 0
+        assert spark.sql("SELECT * FROM mt_none WHERE k > 1000").collect() == []
+    finally:
+        spark.catalog.dropTempView("mt_none")

@@ -299,7 +299,7 @@ def test_incremental_index_in_batch_duplicate_ids(spark, docs, tmp_path):
 
 
 def test_incremental_index_superseded_stats_are_vacuumable(spark, docs, tmp_path):
-    """Review-pass finding: superseded termstats/stats used to share a
+    """Review-pass finding: superseded termstats used to share a
     data dir with live postings, making them unreclaimable forever. With
     their own commit dirs, vacuum sweeps them once the retention horizon
     passes — and the current version still searches."""
@@ -314,7 +314,7 @@ def test_incremental_index_superseded_stats_are_vacuumable(spark, docs, tmp_path
     before = _search_m(spark, table, ["hash", "window"])
 
     removed = M.vacuum(table, keep_last=1, min_age_s=0.0)
-    assert removed  # v1/v2's superseded termstats+stats dirs reclaimed
+    assert removed  # v1/v2's superseded termstats dirs reclaimed
     assert _search_m(spark, table, ["hash", "window"]) == before
     # live postings/doclens dirs were NOT touched (still referenced)
     cur = M.current_version(table)
@@ -323,6 +323,72 @@ def test_incremental_index_superseded_stats_are_vacuumable(spark, docs, tmp_path
 
     for f in m["files"]:
         assert os.path.exists(os.path.join(table, f))
+
+
+def test_search_with_no_terms_returns_empty_topk(spark, docs, tmp_path):
+    """No query terms hash to no buckets without building a ``SELECT``
+    with no projections; the search answers with the empty top-k."""
+    assert retrieval._bucket_ids(spark, [], 8) == set()
+    table = str(tmp_path / "idx_m")
+    retrieval.build_inverted_index_manifest(docs, table, n_term_buckets=8)
+    out = retrieval.search_inverted_index_manifest(spark, table, [], k=10)
+    assert out.collect() == [] and out.columns == ["doc_id", "score", "rank"]
+
+
+def test_index_commits_record_store_schemas_spark_would_infer(spark, docs, tmp_path):
+    """Every index commit (build, upsert, compaction) records a read
+    schema per store, equal to the schema Spark infers from that store's
+    files, and keeps the corpus stats in its meta instead of a store."""
+    import os
+
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "idx_m")
+    retrieval.build_inverted_index_manifest(
+        docs.filter(F.col("doc_id") < 3), table, n_term_buckets=8
+    )
+    retrieval.upsert_inverted_index(docs.filter(F.col("doc_id") >= 3), table)
+    retrieval.compact_inverted_index(spark, table)
+    for v in (1, 2, 3):
+        m = M.read_manifest(table, v)
+        recorded = m["meta"]["store_schemas"]
+        assert set(recorded) == {"postings", "doclens", "termstats"}
+        for store, schema in recorded.items():
+            paths = [os.path.join(table, f) for f in M.store_files(m, store)]
+            assert M._store_struct(schema) == spark.read.parquet(*paths).schema
+        assert not M.store_files(m, "stats")
+    assert M.read_manifest(table, 3)["meta"]["corpus"] == {"n_docs": 6, "total_tokens": 25}
+
+
+def test_index_with_legacy_stats_store_searches_and_upserts(spark, docs, tmp_path):
+    """An index committed before the corpus stats moved into the commit
+    meta keeps them in a one-row ``stats`` store and records no store
+    schemas: it still searches, and its next upsert moves the stats into
+    the meta and drops the store."""
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "idx_m")
+    retrieval.build_inverted_index_manifest(
+        docs.filter(F.col("doc_id") < 3), table, n_term_buckets=8
+    )
+    m = M.read_manifest(table, 1)
+    corpus = m["meta"]["corpus"]
+    stats = spark.createDataFrame(
+        [(corpus["n_docs"], corpus["total_tokens"])], "n_docs long, total_tokens long"
+    )
+    files = m["files"] + M.write_store_files(stats, table, M.new_commit_id(), "stats")
+    legacy_meta = {"layout": m["meta"]["layout"], "delta_ids": []}
+    assert M._try_commit(table, 2, files, 1, m["schema"], meta=legacy_meta)
+    terms = ["hash", "window"]
+    assert _search_m(spark, table, terms, version=2) == _search_m(spark, table, terms, version=1)
+
+    assert retrieval.upsert_inverted_index(docs.filter(F.col("doc_id") >= 3), table) == 3
+    m3 = M.read_manifest(table, 3)
+    assert not M.store_files(m3, "stats") and "corpus" in m3["meta"]
+    assert _search_m(spark, table, terms) == {
+        r["doc_id"]: (r["score"], r["rank"])
+        for r in retrieval.bm25_topk(docs, terms, k=10).collect()
+    }
 
 
 def test_bm25_script_mode_retrieves_cjk(spark):

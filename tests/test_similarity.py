@@ -705,3 +705,26 @@ def test_ivf_manifest_empty_queries_and_empty_corpus_guard(spark, emb, tmp_path)
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty corpus"):
         similarity.ivf_build_index_manifest(empty, str(tmp_path / "ivf_e"))
+
+
+def test_ivf_commits_record_store_schemas_spark_would_infer(spark, emb, tmp_path):
+    """IVF build, upsert and retrain-compaction commits (plain and int8
+    lists) record a read schema per store, equal to the schema Spark
+    infers from that store's files."""
+    import os
+
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "ivf_m")
+    similarity.ivf_build_index_manifest(emb.filter(F.col("vec_id") % 5 != 0), table, n_centroids=8)
+    similarity.upsert_ivf_index(emb.filter(F.col("vec_id") % 5 == 0), table)
+    similarity.compact_ivf_index(spark, table, retrain=True, refine_iters=1)
+    qt = str(tmp_path / "ivf_mq")
+    similarity.ivf_build_index_manifest(emb, qt, n_centroids=8, quantize=True)
+    for t, v in [(table, 1), (table, 2), (table, 3), (qt, 1)]:
+        m = M.read_manifest(t, v)
+        recorded = m["meta"]["store_schemas"]
+        assert set(recorded) == {"lists", "centroids"}
+        for store, schema in recorded.items():
+            paths = [os.path.join(t, f) for f in M.store_files(m, store)]
+            assert M._store_struct(schema) == spark.read.parquet(*paths).schema
