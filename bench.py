@@ -376,10 +376,10 @@ def make_r10_read_samplers(spark, sf_dir: str, base: str):
     queries, but the recurring per-read costs a serving user pays were
     not pinned). Table builds are untimed one-time setup.
 
-    - ``batch_source_read``: a keyed-range ``spark.sql`` SELECT over the
-      registered manifest batch-source view — pushFilters → stats
-      pruning → per-file Arrow partitions (RAISES if the pushed filter
-      prunes nothing).
+    - ``batch_source_read``: a keyed-range ``spark.sql`` SELECT over a
+      ``register_view`` manifest view — one JVM Parquet scan with the
+      key range in its pushed filters (RAISES if the range is not
+      pushed).
     - ``cdf_batch_read``: a bounded one-commit ``manifest_changes``
       batch window read (the table_changes consumer's recurring cost).
     - ``constrained_append``: ONE compliant append into a CHECK-
@@ -394,7 +394,6 @@ def make_r10_read_samplers(spark, sf_dir: str, base: str):
     import uuid as _uuid
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from cashback_data_pipeline_spark.queries import read_testdata
     from cashback_data_pipeline_spark.sinks import filestats
@@ -415,25 +414,25 @@ def make_r10_read_samplers(spark, sf_dir: str, base: str):
 
     def sample_batch_source_read() -> float:
         _setup()
-        from pyspark.sql.datasource import GreaterThanOrEqual
-
         m = M.read_manifest(table, M.current_version(table))
-        probe = MS.ManifestBatchReader(
-            T.StructType([T.StructField("o_orderkey", T.LongType())]), {"path": table}
-        )
         hi = max(
             e["cols"]["o_orderkey"]["max"]
             for e in (m.get("stats") or {}).values()
             if "o_orderkey" in (e.get("cols") or {})
         )
-        probe.pushFilters([GreaterThanOrEqual(("o_orderkey",), int(hi * 0.9))])
-        if not len(probe.partitions()) < len(m["files"]):
-            raise RuntimeError("pushed filter pruned nothing — sampler is mismeasuring")
+        lo = int(hi * 0.9)
         MS.register_view(spark, "bench_orders_mt", table)
+        plan = (
+            spark.sql(f"SELECT o_orderkey FROM bench_orders_mt WHERE o_orderkey >= {lo}")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        want = f"GreaterThanOrEqual(o_orderkey,{lo})"
+        if not any(want in p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan)):
+            raise RuntimeError("key range not pushed to the Parquet scan — sampler is mismeasuring")
         t0 = time.time()
         spark.sql(
             f"SELECT o_orderstatus, count(*) AS n, sum(o_totalprice) AS s "
-            f"FROM bench_orders_mt WHERE o_orderkey >= {int(hi * 0.9)} "
+            f"FROM bench_orders_mt WHERE o_orderkey >= {lo} "
             "GROUP BY o_orderstatus"
         ).write.format("noop").mode("overwrite").save()
         return round(time.time() - t0, 3)

@@ -1128,44 +1128,30 @@ def kmeans_refine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Lloyd's k-means refinement of IVF centroids, fully relational:
+    """Lloyd's k-means refinement of IVF centroids. Each round:
 
-        assign (broadcast centroids, argmin)            — existing ivf_assign
-        → posexplode vectors to (centroid, pos, val)
-        → groupBy(centroid, pos).avg                    — element-wise mean
-        → collect_list ordered by pos → new centroid vectors
+        assign (centroids as a literal, argmin)          — ivf_assign
+        → groupBy(centroid).agg(avg(element_at(vec, i)) for i in 1..dim)
+        → collect the k×dim float32 means to the driver
 
-    Each iteration is one assign + one two-level aggregate; no vectors
-    ever collect to the driver. Empty clusters keep their previous
-    centroid (join-coalesce), so k never shrinks. Deterministic given the
-    deterministic seeding (make_centroids_from_sample).
+    One aggregate-and-collect job per round: its shuffle carries k×dim
+    partial sums, and no corpus vector reaches the driver. The centroid table lives on the driver between rounds and
+    re-enters the next round's plan as a constant-folded literal
+    (LocalRelation), so the assign's broadcast needs no job and no
+    round needs a checkpoint. Empty clusters keep their previous
+    centroid (the driver-side merge), so k never shrinks. Deterministic
+    given the deterministic seeding (make_centroids_from_sample).
 
-    Each round ends in ``localCheckpoint`` — iterative DataFrames must
-    truncate lineage per round (``cache()`` does NOT; analysis cost grows
-    with plan depth otherwise). The checkpointed relation is k×dim
-    doubles — trivially small.
-
-    OPTIMIZATION r12 (guide §2.3/§2.4): the element-wise mean is ONE
-    hash aggregate of ``dim`` ``avg(element_at(vec, i))`` columns
-    instead of posexplode → (centroid, pos) aggregate → collect_list →
-    array_sort — one shuffle of k×dim partials per round instead of a
-    n×dim-row explode shuffle plus a second aggregate, and three fewer
-    stages per round. Same values averaged per (centroid, position);
-    partial-sum order differences are absorbed by the float32 centroid
-    storage exactly as before (that is what it exists for).
-
-    OPTIMIZATION r12b (guide §5): the k×dim float32 centroid table
-    lives on the DRIVER between rounds — each round is ONE
-    aggregate-and-collect job and the merged table re-enters the next
-    round's plan as a constant-folded literal (LocalRelation), so the
-    assign's broadcast needs no job and the per-round
-    join + localCheckpoint jobs disappear (profiled: semantic_dedup is
-    stage-count-bound, ~45 mostly-1-task stages for 2.1 s of task
-    time). Values are bit-identical: the float32 cast still happens in
-    the SAME plan position (on the collected aggregate), the
-    driver-side merge only replaces the empty-cluster
-    coalesce-with-previous, and repr→parse round-trips float32-exact
-    doubles exactly."""
+    OPTIMIZATION r12 (guide §2.3/§2.4, §5): this replaced posexplode →
+    (centroid, pos) aggregate → collect_list → array_sort with a
+    join + localCheckpoint per round — an n×dim-row explode shuffle, a
+    second aggregate and three more stages per round (profiled:
+    semantic_dedup was stage-count-bound, ~45 mostly-1-task stages for
+    2.1 s of task time). Values are bit-identical: the same values are
+    averaged per (centroid, position), the float32 cast happens in the
+    same plan position (on the collected aggregate) and absorbs
+    partial-sum order differences, and repr→parse round-trips
+    float32-exact doubles exactly."""
     first_vec = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
     if first_vec is None:
         return centroids  # empty corpus: nothing to assign, k unchanged

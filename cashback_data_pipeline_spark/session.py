@@ -66,9 +66,6 @@ ENGINE_CONF: tuple[tuple[str, str, bool], ...] = (
     # which would blind file-level data skipping (sinks/filestats.py)
     # on every timestamp column; micros is the modern interchange type
     ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS", False),
-    # the manifest batch DataSource prunes files from pushed filters
-    # (sources/manifest_source.py); off by default in Spark 4.1
-    ("spark.sql.python.filterPushdown.enabled", "true", False),
     # the driver's plain session defaults to 200 shuffle partitions —
     # needless task overhead at test scale
     ("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS), False),

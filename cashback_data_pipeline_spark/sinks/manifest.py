@@ -834,16 +834,15 @@ def _extend_mapping(mapping: dict | None, logical_cols: list[str]) -> dict | Non
 #
 # - every commit gets EXACT per-file stats for the partition columns
 #   injected from the path alone (min == max == value, zero I/O) —
-#   partition pruning is just stats pruning, shared by read_table(skip=),
-#   every DML op, and the batch source's pushFilters, no second pruning
-#   engine;
+#   partition pruning is just stats pruning, shared by read_table(skip=)
+#   and every DML op, no second pruning engine;
 # - ``drop_partition`` and dynamic partition overwrite
 #   (``mode="overwrite_partitions"``) are METADATA-ONLY commits that
 #   select files by parsed path values — retention on a 100 TB
 #   date-partitioned history never opens a data file;
-# - scans recover the partition columns via Spark's standard hive-layout
-#   discovery (``basePath`` + pinned schema), and the Python batch
-#   source reads them from the path segments it already parses.
+# - scans recover the partition columns from the path segments
+#   (:func:`_physical_scan`), so a SQL filter on one is a filter on
+#   ``_metadata.file_path`` that Spark's file index prunes files by.
 #
 # Every data-writing path threads the table's partitioning into
 # ``_write_data_files``; ``_try_commit`` REFUSES any added data file
@@ -2287,7 +2286,7 @@ def widen_column(table: str, name: str, new_type: "T.DataType | str") -> int:
     WIDENING (int→long, float→double and the smaller-int chains): the
     committed schema changes, data files don't; readers resolve narrower
     old files under the wider type at scan (Spark 4's parquet widening
-    promotions; the Python batch source casts per batch). Narrowing or
+    promotions; the CDF source casts per batch). Narrowing or
     any other conversion is rejected loudly — it would need a rewrite
     and can silently corrupt (use an explicit overwrite instead).
     Returns the committed version."""
@@ -3285,11 +3284,30 @@ def read_table(
         return spark.createDataFrame([], schema)
     out = _read_files(
         spark, table, files, _dv_set(m), mapping=_mapping_pairs(m),
-        schema_json=m["schema"], partitioning=_partitioning(m) or None,
+        schema_json=m["schema"], partitioning=_scan_partitioning(m) or None,
     )
     if skip:
         out = out.filter(filestats.skip_condition(skip))
     return out
+
+
+def _scan_partitioning(m: dict) -> list[str]:
+    """The columns a snapshot scan recovers from hive ``key=value`` path
+    segments: the declared partitioning, else every committed-schema
+    column some snapshot path names (the rule :func:`convert_to_table`
+    applies) — files written under ``partition_by`` into a table that
+    declares no partitioning do not store that column either."""
+    declared = _partitioning(m)
+    keyed = [f for f in m["files"] if "=" in f]
+    if declared or not keyed:
+        return declared
+    path_keys = set().union(*map(_partition_values_from_path, keyed))
+    pmap = _mapping(m) or {}
+    return [
+        f["name"]
+        for f in json.loads(m["schema"])["fields"]
+        if pmap.get(f["name"], f["name"]) in path_keys
+    ]
 
 
 def read_changes(

@@ -64,8 +64,8 @@ with the declared schema and an empty file list
 (``manifest.create_table``); IF NOT EXISTS makes it the idempotent
 serving-DDL no-op. INSERT evaluates its SELECT body via ``spark.sql``
 — every catalog name appearing in the body is auto-registered as a
-view over the manifest batch source (sources/manifest_source.py), so
-the SELECT can read manifest tables and temp views alike — and then
+view over the table's native snapshot read (``manifest.read_table``),
+so the SELECT can read manifest tables and temp views alike — and then
 dispatches by shape: the reference's idempotent NOT-EXISTS form
 (``WHERE NOT EXISTS (SELECT 1 FROM <target> r WHERE r.k = s.k)`` as
 the entire top-level WHERE, correlated back to the INSERT target on
@@ -443,16 +443,11 @@ def _register_catalog_views(spark, select_text: str, catalog: dict | None) -> No
     Spectrum-schema-in-Redshift analog. Names already bound by a CALLER
     are left alone (a caller's staged view wins).
 
-    OPTIMIZATION r11 (guide §4.1): these bodies previously resolved
-    through the Python batch DataSource, paying the JVM↔Python Arrow
-    boundary for EVERY byte the statement scans (measured: 4.5 s cold /
-    1.6 s warm for a 75k-row staging scan the native scan does in
-    ~0.1 s). The Python source remains the right tool where its
-    pushFilters→manifest-stats file pruning pays (the public
-    ``register_view``/``spark.read.format("manifest")`` surface, benched
-    by ``batch_source_read``); a write-statement body that feeds every
-    surviving row into a commit scans its sources once, and the native
-    scan still gets parquet footer min/max + predicate pushdown."""
+    This is the same read as the public ``manifest_source.register_view``
+    surface; the engine marker alias only records that the view is the
+    engine's to refresh. Partition predicates prune files in Spark's
+    file index and the Parquet scan applies footer min/max + predicate
+    pushdown to the rest."""
     from cashback_data_pipeline_spark.sinks import manifest as M
 
     for name, path in (catalog or {}).items():

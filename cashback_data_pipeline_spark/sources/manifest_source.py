@@ -1,325 +1,43 @@
-"""Batch-read Python DataSource over manifest tables (VERDICT r9 item 2).
+"""SQL views over manifest tables (VERDICT r9 item 2): the engine's
+analog of the reference mounting its catalog for SQL reads (ref:
+load_to_redshift_lambda.py:53-62). ``register_view`` binds a temp view
+to a pinned snapshot, so a plain ``spark.sql("SELECT ...")`` reads the
+table with no further Python API call.
 
-The write side and the STREAM read side already speak ``format(...)``
-(streaming/manifest_sink.py, streaming/cdf_source.py); this module is
-the batch twin: ``spark.read.format("manifest").load(table)`` with
-``versionAsOf`` / ``timestampAsOf`` time travel, so a plain
-``spark.sql("SELECT ...")`` over a registered temp view works with NO
-Python API call — the engine's analog of the reference mounting its
-catalog for SQL reads (ref: load_to_redshift_lambda.py:53-62).
+The view is :func:`manifest.read_table`: one JVM Parquet scan of the
+version's file list with deletion vectors, column mapping, schema
+evolution and hive ``key=value`` path values applied. The snapshot is
+resolved when the view is registered; later commits do not change it.
+Partition filters prune files through Spark's file index (the
+partition values are a ``_metadata.file_path`` expression), and
+Parquet row-group stats skip data for the other predicates. Manifest
+min/max file skipping on non-partition columns is ``read_table(skip=)``.
 
-Fidelity contract — the result is row-identical to
-``manifest.read_table``:
-
-- **Deletion vectors** apply: each partition carries the version's DV
-  file list and masks its own file's tombstoned row positions while
-  streaming Arrow batches (positions are file row indexes, the same
-  coordinates ``_metadata.row_index`` gives the JVM path).
-- **Column mapping** resolves: partitions carry the version's
-  logical→physical pairs; files store physical names; time travel to a
-  pre-rename version answers under that version's own names.
-- **Schema evolution** null-fills: the scan is pinned to the VERSION's
-  committed schema, so files written before a column existed yield
-  typed nulls (and hive-style ``key=value`` path segments reconstitute
-  layout-partition columns the files themselves don't store).
-
-Scale path — pushed filters reach the manifest's file stats:
-``pushFilters`` (pyspark 4.1) hands the reader the query's top-level
-AND conjuncts; supported ones translate to the sinks/filestats skip
-tree (including ``Not`` — negation pruning, r9 item 1) and
-``partitions()`` drops every file whose min/max/bloom stats prove no
-row can match, BEFORE any worker starts. All filters are returned to
-Spark for post-scan re-evaluation, so pruning is a sound accelerator,
-never a semantics change — exactly the read_table(skip=) contract, now
-reachable from ``spark.sql`` with zero bespoke code.
-
-Worker reads go through pyarrow (the Python DataSource contract);
-plain local paths and ``file://`` URIs are supported here, with the
-same single pyarrow-filesystem seam as streaming/cdf_source.py for
-object stores.
+The ``"manifest"`` format name belongs to the stream sink
+(streaming/manifest_sink.py); batch reads go through this module.
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator, Sequence
-from urllib.parse import unquote
-
-from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualNullSafe,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-)
-
 from cashback_data_pipeline_spark.sinks import manifest as mf
-from cashback_data_pipeline_spark.streaming.cdf_source import (
-    _local_path,
-    _normalize_table,
-)
-
-FORMAT_NAME = "manifest"
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _resolve_version(table: str, options: dict) -> int:
-    """The pinned snapshot version for this read: versionAsOf /
-    timestampAsOf (epoch seconds — the Delta option pair), else
-    current. schema() and reader() must agree, so both call this."""
-    v = options.get("versionasof", options.get("versionAsOf"))
-    ts = options.get("timestampasof", options.get("timestampAsOf"))
-    if v is not None and ts is not None:
-        raise ValueError("pass versionAsOf or timestampAsOf, not both")
-    if v is not None:
-        return int(v)
-    if ts is not None:
-        return mf.version_at(table, float(ts))
-    cur = mf.current_version(table)
-    if cur is None:
-        raise FileNotFoundError(f"no committed version in {table}")
-    return cur
-
-
-def _to_skip_leaf(f: Filter):
-    """One pushed Filter as a filestats skip-tree node, or None when the
-    filter has no sound pruning translation (kept for Spark to apply
-    post-scan — pruning just doesn't use it)."""
-    if isinstance(f, Not):
-        child = _to_skip_leaf(f.child)
-        return ("not", child) if child is not None else None
-    attr = getattr(f, "attribute", None)
-    if not attr or len(attr) != 1:
-        return None  # nested fields have no file-level stats entry
-    col = attr[0]
-    if isinstance(f, (EqualTo, EqualNullSafe)):
-        # for a non-null literal both match exactly the rows == value
-        # (null-safe adds NULL==NULL, which min/max can't prune anyway
-        # — a null literal keeps everything, so skip the translation)
-        return (col, "==", f.value) if f.value is not None else None
-    if isinstance(f, GreaterThan):
-        return (col, ">", f.value) if f.value is not None else None
-    if isinstance(f, GreaterThanOrEqual):
-        return (col, ">=", f.value) if f.value is not None else None
-    if isinstance(f, LessThan):
-        return (col, "<", f.value) if f.value is not None else None
-    if isinstance(f, LessThanOrEqual):
-        return (col, "<=", f.value) if f.value is not None else None
-    if isinstance(f, In):
-        vals = list(f.value)
-        if vals and all(v is not None for v in vals):
-            return (col, "in", vals)
-        return None
-    if isinstance(f, IsNull):
-        return (col, "is_null")
-    if isinstance(f, IsNotNull):
-        return (col, "is_not_null")
-    return None
-
-
-class ManifestBatchPartition(InputPartition):
-    """One snapshot data file: absolute path, table-relative path (the
-    DV relation's file key), pinned schema, logical→physical mapping,
-    and the version's DV file paths (absolute)."""
-
-    def __init__(
-        self,
-        path: str,
-        rel: str,
-        schema_json: str,
-        mapping: dict | None,
-        dv_paths: list[str],
-    ):
-        self.path = path
-        self.rel = rel
-        self.schema_json = schema_json
-        self.mapping = mapping or {}
-        self.dv_paths = dv_paths
-
-
-class ManifestBatchReader(DataSourceReader):
-    def __init__(self, schema: T.StructType, options: dict):
-        self._schema_json = schema.json()
-        self._table = _normalize_table(
-            options.get("path") or options.get("table") or ""
-        )
-        if not self._table:
-            raise ValueError("manifest batch read needs .load(<table root>)")
-        self._version = _resolve_version(self._table, options)
-        self._pushed: list = []  # skip-tree nodes from pushFilters
-
-    def pushFilters(self, filters):
-        """Collect prunable conjuncts for partition planning; return ALL
-        filters so Spark re-applies them post-scan (stats pruning is a
-        sound subset, never the row-level truth)."""
-        for f in filters:
-            leaf = _to_skip_leaf(f)
-            if leaf is not None:
-                self._pushed.append(leaf)
-        return filters
-
-    def partitions(self) -> Sequence[InputPartition]:
-        from cashback_data_pipeline_spark.sinks import filestats
-
-        m = mf.read_manifest(self._table, self._version)
-        store = mf.get_log_store(self._table)
-        files = m["files"]
-        stats = m.get("stats") or {}
-        if self._pushed and stats:
-            # stats/bloom entries key PHYSICAL column names; derived
-            # generated-column conjuncts sharpen the pruning (Spark
-            # re-applies the original filters post-scan regardless)
-            phys = mf._phys_predicates(
-                mf._augment_generated_predicates(list(self._pushed), m),
-                mf._mapping(m),
-            )
-            files, _ = filestats.prune_files(files, stats, phys)
-            files, _ = filestats.prune_files_bloom(store, self._table, files, stats, phys)
-        mapping = mf._mapping(m) or {}
-        dv_paths = [store.join(self._table, f) for f in mf._dv_set(m)]
-        return [
-            ManifestBatchPartition(
-                store.join(self._table, f), f, m["schema"], mapping, dv_paths
-            )
-            for f in files
-        ]
-
-    def read(self, partition: ManifestBatchPartition | None) -> Iterator:
-        # Spark replaces an empty partitions() list (every file pruned)
-        # with [None]: no file, no rows
-        if partition is None:
-            return
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        logical = T.StructType.fromJson(json.loads(partition.schema_json))
-        target = to_arrow_schema(
-            T.StructType(
-                [T.StructField(f.name, f.dataType, True, f.metadata) for f in logical.fields]
-            )
-        )
-        mapping = partition.mapping or {}
-        phys_of = {n: mapping.get(n, n) for n in target.names}
-
-        # tombstoned row positions of THIS file (merge-on-read deletes)
-        dead: set[int] = set()
-        for dv in partition.dv_paths:
-            t = pq.read_table(
-                _local_path(dv),
-                columns=["file", "row_index"],
-                filters=[("file", "==", partition.rel)],
-            )
-            dead.update(t.column("row_index").to_pylist())
-
-        # hive-style layout partitions: values live in the PATH, not the
-        # file (the write_store_files partition_by layout)
-        path_vals: dict[str, str | None] = {}
-        for seg in partition.rel.split("/")[:-1]:
-            if "=" in seg:
-                k, _, v = seg.partition("=")
-                path_vals[k] = None if v == _HIVE_NULL else unquote(v)
-
-        pf = pq.ParquetFile(_local_path(partition.path))
-        file_cols = set(pf.schema_arrow.names)
-        offset = 0
-        for batch in pf.iter_batches():
-            n = len(batch)
-            tbl = pa.Table.from_batches([batch])
-            arrays = []
-            for field in target:
-                phys = phys_of[field.name]
-                if phys in file_cols:
-                    arrays.append(tbl.column(phys).cast(field.type))
-                elif phys in path_vals and path_vals[phys] is not None:
-                    const = pa.scalar(path_vals[phys], type=pa.string())
-                    arrays.append(
-                        pa.chunked_array([pa.nulls(n, type=pa.string()).fill_null(const)]).cast(
-                            field.type
-                        )
-                    )
-                else:
-                    arrays.append(pa.nulls(n, type=field.type))
-            out = pa.Table.from_arrays(arrays, schema=target)
-            if dead:
-                keep = np.array(
-                    [offset + i not in dead for i in range(n)], dtype=bool
-                )
-                out = out.filter(pa.array(keep))
-            offset += n
-            yield from out.to_batches()
-
-
-class ManifestDataSource(DataSource):
-    """``spark.read.format("manifest").option("versionAsOf", n).load(t)``.
-
-    Register once per session with :func:`register`.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
-
-    def schema(self) -> T.StructType:
-        table = _normalize_table(
-            self.options.get("path") or self.options.get("table") or ""
-        )
-        if not table:
-            raise ValueError("manifest batch read needs .load(<table root>)")
-        v = _resolve_version(table, dict(self.options))
-        # pin the version schema() resolved so reader() plans the SAME
-        # snapshot — without this a commit landing between planning and
-        # reader construction could widen the scan past the plan schema
-        # (round-10 review)
-        self._pinned_version = v
-        pinned = T.StructType.fromJson(json.loads(mf.read_manifest(table, v)["schema"]))
-        # all-nullable, like Spark's file sources: older files in an
-        # evolved history null-fill late-added columns
-        return T.StructType(
-            [T.StructField(f.name, f.dataType, True, f.metadata) for f in pinned.fields]
-        )
-
-    def reader(self, schema: T.StructType) -> ManifestBatchReader:
-        opts = dict(self.options)
-        if getattr(self, "_pinned_version", None) is not None and not (
-            opts.get("versionasof") or opts.get("timestampasof")
-        ):
-            opts["versionasof"] = str(self._pinned_version)
-        return ManifestBatchReader(schema, opts)
-
-
-def register(spark) -> None:
-    """Idempotently register the batch source on a session (and enable
-    Python-datasource filter pushdown, off by default in Spark 4.1 —
-    a reader implementing pushFilters REFUSES to plan without it)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # non-settable build: reads fail loudly with Spark's hint
-    spark.dataSource.register(ManifestDataSource)
 
 
 def read_manifest_batch(spark, table: str, **options):
-    """Convenience: a batch DataFrame of a manifest table snapshot."""
-    register(spark)
-    reader = spark.read.format(FORMAT_NAME)
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load(table)
+    """A batch DataFrame of a manifest table snapshot. Option keys are
+    case-insensitive: ``versionAsOf`` pins a version, ``timestampAsOf``
+    (epoch seconds) the version current at that time."""
+    opts = {k.lower(): v for k, v in options.items()}
+    v = opts.pop("versionasof", None)
+    ts = opts.pop("timestampasof", None)
+    if opts:
+        raise ValueError(f"unknown manifest read options {sorted(opts)}")
+    if v is not None and ts is not None:
+        raise ValueError("pass versionAsOf or timestampAsOf, not both")
+    return mf.read_table(
+        spark, table,
+        version=None if v is None else int(v),
+        as_of_ts=None if ts is None else float(ts),
+    )
 
 
 def register_view(spark, name: str, table: str, **options) -> None:

@@ -275,7 +275,8 @@ def _read_file_partition(partition: ManifestFilePartition | None) -> Iterator:
                 "new schema"
             )
     # hive-layout partition values live in the PATH, not the file (the
-    # manifest partition_by layout) — same recovery as the batch source
+    # manifest partition_by layout) — the same segments read_table
+    # recovers from _metadata.file_path
     from urllib.parse import unquote
 
     path_vals: dict[str, str | None] = {}

@@ -1,5 +1,6 @@
 """Job-count budgets for the manifest inverted index (build → upsert →
-search) at sf0.001: 500 documents, an 80/20 build/upsert split.
+search) at sf0.001: 500 documents, an 80/20 build/upsert split; and for
+a date-range SQL aggregate over a registered manifest view.
 
 Job and codegen counts are deterministic for fixed inputs, unlike wall
 time, so a reintroduced redundant action (an extra ``.first()``, a
@@ -16,9 +17,12 @@ from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.operators import retrieval
 from cashback_data_pipeline_spark.sinks import manifest as M
+from cashback_data_pipeline_spark.sources import manifest_source
+from tests.scans import file_scans, scanned_files
 
 SEARCH_MAX_JOBS = 4
 UPSERT_MAX_JOBS = 11
+SQL_VIEW_MAX_JOBS = 2
 TERMS = ["data", "model", "the"]
 
 
@@ -104,3 +108,34 @@ def test_repeated_sequence_compiles_no_new_classes(runs):
     a codegen-cache hit (``ENGINE_CONF`` sizes the cache for it)."""
     assert runs[1]["compiled"] == 0, runs
     assert runs[1]["jobs"] == runs[0]["jobs"]
+
+
+def test_sql_view_date_range_budget(spark, tmp_path):
+    """A date-range aggregate through ``register_view`` runs as a JVM
+    Parquet scan (no Python data-source scan) whose file index drops
+    the partitions the range excludes."""
+    t = str(tmp_path / "t")
+    df = spark.range(600).selectExpr(
+        "id AS k",
+        "date_add(DATE'2024-01-01', CAST(id % 6 AS INT)) AS day",
+        "CAST(id AS DOUBLE) AS amount",
+    )
+    M.write_table(df, t, partition_by=["day"])
+    n_files = len(M.read_manifest(t, M.current_version(t))["files"])
+    manifest_source.register_view(spark, "budget_mt", t)
+    try:
+        q = spark.sql(
+            "SELECT count(*) AS n, sum(amount) AS s FROM budget_mt "
+            "WHERE day >= DATE'2024-01-02' AND day < DATE'2024-01-04'"
+        )
+        before = _jobs_submitted(spark)
+        row = q.collect()[0]
+        jobs = _jobs_submitted(spark) - before
+    finally:
+        spark.catalog.dropTempView("budget_mt")
+    assert (row["n"], row["s"]) == (200, float(sum(i for i in range(600) if i % 6 in (1, 2))))
+    assert jobs <= SQL_VIEW_MAX_JOBS, jobs
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan and "PythonDataSource" not in plan, plan
+    assert file_scans(q), plan
+    assert scanned_files(q) < n_files, (scanned_files(q), n_files)

@@ -158,6 +158,32 @@ def test_complete_mode_is_refused(spark, tmp_path):
         q.start().awaitTermination()
 
 
+def test_sink_format_survives_a_registered_view(spark, tmp_path):
+    """Registering a SQL view over a manifest table must not take the
+    ``"manifest"`` format name from the stream sink."""
+    from cashback_data_pipeline_spark.sources import manifest_source
+    from cashback_data_pipeline_spark.streaming.jobs import read_events_stream
+
+    src, table = str(tmp_path / "src"), str(tmp_path / "t")
+    _events(spark, 40).coalesce(1).write.parquet(src)
+    M.write_table(_events(spark, 5, start=1000), table)
+    manifest_sink.register(spark)
+    manifest_source.register_view(spark, "sink_mt", table)
+    try:
+        q = (
+            read_events_stream(spark, src).writeStream.format("manifest")
+            .option("path", table)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.catalog.dropTempView("sink_mt")
+    assert M.current_version(table) == 2
+    assert M.read_table(spark, table).count() == 45
+
+
 def test_epoch_walk_tolerates_pruned_manifest_log(spark, tmp_path):
     """Review finding: the max_epoch walk crashed with FileNotFoundError
     on a vacuum-pruned log; it must treat gaps like committed_meta_values

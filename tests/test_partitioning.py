@@ -191,10 +191,8 @@ def test_restore_restores_partitioning(spark, tmp_path):
 
 
 def test_batch_source_reads_partitioned_table(spark, tmp_path):
-    from pyspark.sql import types as T
-    from pyspark.sql.datasource import EqualTo
-
     from cashback_data_pipeline_spark.sources import manifest_source as MS
+    from tests.scans import scanned_files
 
     t, _ = _seed(spark, tmp_path / "t")
     try:
@@ -207,14 +205,12 @@ def test_batch_source_reads_partitioned_table(spark, tmp_path):
             (dt.date(2024, 1, 2), 30),
             (dt.date(2024, 1, 3), 30),
         ]
-        # a partition-key equality prunes batch partitions from the
-        # injected path stats alone
-        probe = MS.ManifestBatchReader(
-            T.StructType([T.StructField("day", T.DateType())]), {"path": t}
-        )
-        probe.pushFilters([EqualTo(("day",), dt.date(2024, 1, 1))])
+        # a partition-key equality prunes files in Spark's file index:
+        # the partition value is a _metadata.file_path expression
+        one_day = spark.sql("SELECT count(*) AS n FROM part_mt WHERE day = DATE'2024-01-01'")
+        assert one_day.collect()[0]["n"] == 30
         n_files = len(M.read_manifest(t, 1)["files"])
-        assert len(probe.partitions()) < n_files
+        assert scanned_files(one_day) < n_files
     finally:
         spark.catalog.dropTempView("part_mt")
 

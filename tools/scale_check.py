@@ -585,12 +585,14 @@ class _OptimizeIncremental:
 
 
 class _BatchSourcePrunedRead:
-    """FIXED key-window read through the batch manifest DataSource
-    (round 10, sources/manifest_source.py) on a GROWING key-clustered
-    table: pushFilters translates the range to the skip tree and
-    partitions() drops every non-straddling file from manifest stats
-    BEFORE any worker starts, so the bytes touched track the WINDOW,
-    not the table (exponent ≈ 0). The table build is untimed."""
+    """FIXED key-window read through a ``register_view`` SQL view
+    (sources/manifest_source.py) on a GROWING key-clustered table. The
+    view is one JVM Parquet scan of the snapshot's files with the key
+    range in its pushed filters: row-group min/max skip the data outside
+    the window, so the bytes decoded track the WINDOW, while footer
+    reads grow with the file count (manifest-stats file skipping, which
+    opens no footer, is ``read_table(skip=)``). The table build is
+    untimed."""
 
     def __init__(self) -> None:
         self.tables: dict[str, str] = {}
