@@ -456,8 +456,12 @@ def _commit_index_delta(
             # each job's tail backfills the next job's tasks instead of
             # serializing three scheduling latencies (OPTIMIZATION r12,
             # guide §2.6 "overlap independent jobs"); files keep their
-            # deterministic order
+            # deterministic order. The pool threads inherit the caller's
+            # job group, local properties and tags, so their jobs are
+            # charged to the caller
             from concurrent.futures import ThreadPoolExecutor
+
+            from pyspark import inheritable_thread_target
 
             writes = [
                 (
@@ -474,10 +478,11 @@ def _commit_index_delta(
                 (termstats, cid_superseded, "termstats", "term_bucket"),
             ]
             schemas: dict = {}
+            write = inheritable_thread_target(spark)(M.write_store_files)
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
                 futures = [
                     pool.submit(
-                        M.write_store_files, wdf, table, wcid, wstore,
+                        write, wdf, table, wcid, wstore,
                         partition_by=wpart, schemas=schemas,
                     )
                     for wdf, wcid, wstore, wpart in writes

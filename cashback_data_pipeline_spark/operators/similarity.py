@@ -852,19 +852,23 @@ def _commit_ivf_delta(
                 # would make v1's dead list files unreclaimable by the
                 # dir-granularity vacuum. The two store writes are
                 # independent jobs over checkpointed/literal inputs —
-                # overlap their scheduling latencies (guide §2.6)
+                # overlap their scheduling latencies (guide §2.6), charged to
+                # the caller's job group (inheritable_thread_target)
                 from concurrent.futures import ThreadPoolExecutor
 
+                from pyspark import inheritable_thread_target
+
                 cid2 = M.new_commit_id()
+                write = inheritable_thread_target(spark)(M.write_store_files)
                 with ThreadPoolExecutor(max_workers=2) as pool:
                     f_lists = pool.submit(
-                        M.write_store_files,
+                        write,
                         listed.repartition("__list"), table, cid, "lists",
                         partition_by="__list", schemas=schemas,
                     )
                     f_cents = pool.submit(
-                        M.write_store_files, cents, table, cid2, "centroids",
-                        schemas=schemas,
+                        write,
+                        cents, table, cid2, "centroids", schemas=schemas,
                     )
                     files = f_lists.result() + f_cents.result()
             else:
@@ -1151,11 +1155,18 @@ def kmeans_refine(
     averaged per (centroid, position), the float32 cast happens in the
     same plan position (on the collected aggregate) and absorbs
     partial-sum order differences, and repr→parse round-trips
-    float32-exact doubles exactly."""
+    float32-exact doubles exactly.
+
+    Every vector must be non-null with the first row's length: a null
+    or shorter/longer vector raises ValueError (checked inside each
+    round's aggregate, so the check adds no job)."""
     first_vec = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
     if first_vec is None:
         return centroids  # empty corpus: nothing to assign, k unchanged
-    dim = int(first_vec["d"])
+    dim = first_vec["d"]
+    if dim is None or dim < 1:
+        # size() of a null array is -1 or NULL depending on ANSI mode
+        raise ValueError(f"kmeans_refine: {vec_col!r} holds a null or empty vector")
     spark = corpus.sparkSession
     cur_rows = {
         int(r["centroid_id"]): list(r["centroid"]) for r in centroids.collect()
@@ -1168,16 +1179,29 @@ def kmeans_refine(
     for _ in range(n_iter):
         assigned = ivf_assign(corpus, current, id_col, vec_col)
         v = F.col(vec_col).cast("array<double>")
+        size = F.coalesce(F.size(v), F.lit(-1))  # -1: a null vector
         means = assigned.groupBy("centroid_id").agg(
-            *[F.avg(F.element_at(v, i + 1)).alias(f"__m{i}") for i in range(dim)]
+            *[F.avg(F.element_at(v, i + 1)).alias(f"__m{i}") for i in range(dim)],
+            F.min(size).alias("__dmin"),
+            F.max(size).alias("__dmax"),
         )
         new_cents = means.select(
             "centroid_id",
             F.array(*[F.col(f"__m{i}") for i in range(dim)])
             .cast("array<float>")
             .alias("centroid_new"),
+            "__dmin",
+            "__dmax",
         )
-        for r in new_cents.collect():
+        rows = new_cents.collect()
+        bad = {r[c] for r in rows for c in ("__dmin", "__dmax")} - {dim}
+        if bad:
+            raise ValueError(
+                f"kmeans_refine: every {vec_col!r} vector must be non-null "
+                f"with the first row's length {dim}; found "
+                + ", ".join("null" if d == -1 else str(d) for d in sorted(bad))
+            )
+        for r in rows:
             # clusters absent from the assignment keep their previous
             # centroid, exactly as the old left-join + coalesce did
             if r["centroid_id"] in cur_rows:

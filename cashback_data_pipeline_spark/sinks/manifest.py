@@ -85,6 +85,15 @@ _MANIFEST_DIR = "_manifests"
 CHECKPOINT_INTERVAL = 10
 _LAST_CKPT = "_last_checkpoint"
 
+# The table properties (the Delta ``metaData.configuration`` map), in
+# the order they appear as top-level keys of commit records and
+# checkpoints. Every commit carries each one from its parent unless the
+# commit's ``props`` overrides it (see :func:`_try_commit`).
+TABLE_PROPS = (
+    "bloom_conf", "column_mapping", "constraints", "layout", "partitioning",
+    "generated", "identity",
+)
+
 
 def _version_name(version: int) -> str:
     return f"v{version:020d}.json"
@@ -202,11 +211,7 @@ def _encode_checkpoint(snap: dict, meta_latest: dict | None = None) -> bytes:
         payloads.append(None)
     table_row = {
         k: snap[k]
-        for k in (
-            "version", "parent", "schema", "meta", "bloom_conf",
-            "column_mapping", "constraints", "layout", "partitioning",
-            "generated", "identity",
-        )
+        for k in ("version", "parent", "schema", "meta", *TABLE_PROPS)
         if snap.get(k) is not None
     }
     table_row.setdefault("version", snap["version"])
@@ -258,22 +263,9 @@ def _decode_checkpoint(data: bytes) -> dict:
         "files": sorted(files),
         "schema": table_row["schema"],
     }
-    if table_row.get("meta"):
-        snap["meta"] = table_row["meta"]
-    if table_row.get("bloom_conf"):
-        snap["bloom_conf"] = table_row["bloom_conf"]
-    if table_row.get("column_mapping"):
-        snap["column_mapping"] = table_row["column_mapping"]
-    if table_row.get("constraints"):
-        snap["constraints"] = table_row["constraints"]
-    if table_row.get("layout"):
-        snap["layout"] = table_row["layout"]
-    if table_row.get("partitioning"):
-        snap["partitioning"] = table_row["partitioning"]
-    if table_row.get("generated"):
-        snap["generated"] = table_row["generated"]
-    if table_row.get("identity"):
-        snap["identity"] = table_row["identity"]
+    for k in ("meta", *TABLE_PROPS):
+        if table_row.get(k):
+            snap[k] = table_row[k]
     if dv:
         snap["dv_files"] = sorted(dv)
     if stats:
@@ -307,22 +299,9 @@ def _apply_action(base: dict, doc: dict) -> dict:
         "files": files,
         "schema": doc["schema"],
     }
-    if doc.get("meta"):
-        snap["meta"] = doc["meta"]
-    if doc.get("bloom_conf"):
-        snap["bloom_conf"] = doc["bloom_conf"]
-    if doc.get("column_mapping"):
-        snap["column_mapping"] = doc["column_mapping"]
-    if doc.get("constraints"):
-        snap["constraints"] = doc["constraints"]
-    if doc.get("layout"):
-        snap["layout"] = doc["layout"]
-    if doc.get("partitioning"):
-        snap["partitioning"] = doc["partitioning"]
-    if doc.get("generated"):
-        snap["generated"] = doc["generated"]
-    if doc.get("identity"):
-        snap["identity"] = doc["identity"]
+    for k in ("meta", *TABLE_PROPS):
+        if doc.get(k):
+            snap[k] = doc[k]
     if dv:
         snap["dv_files"] = sorted(dv)
     if stats:
@@ -533,9 +512,6 @@ def _maybe_checkpoint(table: str, version: int) -> None:
         )
 
 
-_INHERIT_MAPPING = object()  # default: carry the parent's column mapping
-
-
 def _try_commit(
     table: str,
     version: int,
@@ -544,15 +520,9 @@ def _try_commit(
     schema_json: str,
     meta: dict | None = None,
     stats: dict | None = None,
-    bloom_conf: dict | None = None,
     dv_files: list[str] | None = None,
     operation: str | None = None,
-    column_mapping=_INHERIT_MAPPING,
-    constraints=_INHERIT_MAPPING,
-    layout=_INHERIT_MAPPING,
-    partitioning=_INHERIT_MAPPING,
-    generated=_INHERIT_MAPPING,
-    identity=_INHERIT_MAPPING,
+    props: dict | None = None,
 ) -> bool:
     """Atomically publish ``version``; False if another writer won it.
 
@@ -565,15 +535,15 @@ def _try_commit(
     schema/meta/properties — O(the commit's own change), never O(table
     files); full snapshots materialize only in interval checkpoints.
     ``meta`` rides in the record (e.g. a streaming epoch id).
-    ``bloom_conf`` is the table's bloom TABLE PROPERTY ``{"cols": [...],
-    "bits": N}`` — carried by every commit once set, so
-    append/merge/compact paths keep regenerating filters without the
-    caller re-passing bloom_cols. ``column_mapping`` (logical→physical
-    column names) is a table property too, and — unlike bloom_conf,
-    whose callers all thread it explicitly — defaults to AUTO-CARRY from
-    the parent (the ``_INHERIT_MAPPING`` sentinel), so rename/drop
-    survive every write path without touching each one; an explicit
-    None CLEARS it (RESTORE to a pre-mapping version)."""
+
+    Table properties (:data:`TABLE_PROPS`: the bloom conf, column
+    mapping, CHECK constraints, declared layout, partition columns,
+    generated and identity columns) follow ONE rule: every property
+    carries from the parent snapshot; a key in ``props`` overrides it;
+    an explicit None clears it. So every write path keeps the table's
+    properties without threading them, and only the commits that change
+    a property (DDL, an overwrite re-declaring its layout, an identity
+    advance, RESTORE, CLONE) name it."""
     store = get_log_store(table)
     parent_snap = read_manifest(table, parent) if parent is not None else None
     parent_files = set(parent_snap["files"]) if parent_snap else set()
@@ -587,30 +557,10 @@ def _try_commit(
         # parent's meta forward (epoch gates), and a stale parent
         # operation must not masquerade as this commit's
         meta = {**(meta or {}), "operation": operation}
-    if column_mapping is _INHERIT_MAPPING:
-        column_mapping = parent_snap.get("column_mapping") if parent_snap else None
-    if constraints is _INHERIT_MAPPING:
-        # CHECK constraints auto-carry like the mapping: a table
-        # property every write path keeps without threading it
-        constraints = parent_snap.get("constraints") if parent_snap else None
-    if layout is _INHERIT_MAPPING:
-        # the declared clustering layout ({"cluster_by": [...]} or
-        # {"zorder_by": [...]}) auto-carries too — maintenance ops read
-        # it to RE-LAY what they rewrite (optimize/compact), so a
-        # clustered table stays clustered without re-passing columns
-        layout = parent_snap.get("layout") if parent_snap else None
-    if partitioning is _INHERIT_MAPPING:
-        # declared partition columns auto-carry (the Delta partition
-        # metadata): an append/DML/maintenance commit keeps the layout
-        # without re-declaring it; an overwrite states it explicitly
-        partitioning = parent_snap.get("partitioning") if parent_snap else None
-    if generated is _INHERIT_MAPPING:
-        # generated-column declarations auto-carry like constraints
-        generated = parent_snap.get("generated") if parent_snap else None
-    if identity is _INHERIT_MAPPING:
-        # the identity property (incl. its high-water) auto-carries;
-        # allocating writes pass the ADVANCED property explicitly
-        identity = parent_snap.get("identity") if parent_snap else None
+    unknown = set(props or ()) - set(TABLE_PROPS)
+    if unknown:
+        raise ValueError(f"unknown table properties {sorted(unknown)}")
+    props = {k: (parent_snap or {}).get(k) for k in TABLE_PROPS} | (props or {})
     doc = {
         "format": 2,
         "version": version,
@@ -621,20 +571,9 @@ def _try_commit(
     }
     if meta:
         doc["meta"] = meta
-    if bloom_conf:
-        doc["bloom_conf"] = bloom_conf
-    if column_mapping:
-        doc["column_mapping"] = column_mapping
-    if constraints:
-        doc["constraints"] = constraints
-    if layout:
-        doc["layout"] = layout
-    if partitioning:
-        doc["partitioning"] = list(partitioning)
-    if generated:
-        doc["generated"] = generated
-    if identity:
-        doc["identity"] = identity
+    for k in TABLE_PROPS:
+        if props[k]:
+            doc[k] = props[k]
     dv_add = sorted(dv_set - parent_dv)
     dv_remove = sorted(parent_dv - dv_set)
     if dv_add:
@@ -649,13 +588,13 @@ def _try_commit(
     # entries ride in the record; carried files keep the parent's
     # (the setdefault-carry discipline, now structural).
     add_stats = {f: stats[f] for f in doc["add"] if f in stats} if stats else {}
-    if partitioning:
+    if props["partitioning"]:
         # EXACT partition-value stats from the added files' paths (zero
         # I/O) + the loud mixed-layout guard — every write path funnels
         # through here, so partition pruning can never erode
         add_stats = _inject_partition_stats(
-            doc["add"], add_stats, list(partitioning), schema_json,
-            column_mapping,
+            doc["add"], add_stats, list(props["partitioning"]), schema_json,
+            props["column_mapping"],
         )
     if add_stats:
         doc["add_stats"] = add_stats
@@ -1443,7 +1382,7 @@ def create_table(
             )
         if _try_commit(
             table, 1, [], None, schema.json(), meta=meta, operation="create",
-            partitioning=list(partition_by) if partition_by else None,
+            props={"partitioning": list(partition_by) if partition_by else None},
         ):
             return 1
 
@@ -1513,15 +1452,9 @@ def clone_table(src: str, dst: str, version: int | None = None) -> int:
             m["schema"],
             meta={"clone": {"source": src, "of_version": v}},
             stats=stats,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=dv,
             operation="clone",
-            column_mapping=_mapping(m),
-            constraints=m.get("constraints"),
-            layout=m.get("layout"),
-            partitioning=m.get("partitioning"),
-            generated=m.get("generated"),
-            identity=m.get("identity"),
+            props={k: m.get(k) for k in TABLE_PROPS},
         ):
             return 1
 
@@ -1591,7 +1524,7 @@ def convert_to_table(
             meta={"convert": {"n_files": len(files)}},
             stats=stats,
             operation="convert",
-            partitioning=partitioning or None,
+            props={"partitioning": partitioning or None},
         ):
             return 1
 
@@ -1710,20 +1643,24 @@ def write_table(
     # column mapping resolves BEFORE the data write: files of a mapped
     # table store physical names, whatever mode/layout follows
     mapping = _extend_mapping(_mapping(cur0_doc), df.columns)
-    layout = _INHERIT_MAPPING  # carry the declared layout unless this
-    # write declares one (maintenance ops re-lay rewrites by it)
+    # the properties this write states; the rest carry from the parent.
+    # Overwrite states the partitioning explicitly (None CLEARS a
+    # previous one); append/dynamic-overwrite restate the parent's,
+    # verified unchanged at the CAS below. The declared layout carries
+    # unless this write declares one (maintenance ops re-lay by it)
+    props: dict = {"column_mapping": mapping, "partitioning": partitioning}
     if zorder_by:
         if cluster_by:
             raise ValueError("pass cluster_by or zorder_by, not both")
         df = _zorder_layout(df, list(zorder_by), cluster_files)
-        layout = {"zorder_by": list(zorder_by)}
+        props["layout"] = {"zorder_by": list(zorder_by)}
         if stats_cols is None:
             stats_cols = list(zorder_by)
     if cluster_by:
         from cashback_data_pipeline_spark.sinks import filestats
 
         filestats.validate_stats_cols(df.schema, list(cluster_by))
-        layout = {"cluster_by": list(cluster_by)}
+        props["layout"] = {"cluster_by": list(cluster_by)}
         if stats_cols is None:
             stats_cols = list(cluster_by)
         if cluster_files:
@@ -1804,7 +1741,7 @@ def write_table(
                 "path operates on physical names); rename_column refuses "
                 "bloom-indexed columns for the same reason"
             )
-        bloom_conf = {
+        bloom_conf = props["bloom_conf"] = {
             "cols": sorted(bloom_cols),
             "bits": int(bloom_bits or filestats.BLOOM_DEFAULT_BITS),
         }
@@ -1830,7 +1767,8 @@ def write_table(
         stats = _build_bloom_sidecar(
             df.sparkSession, table, files, df.schema, bloom_conf, stats
         )
-    new_ident = _advance_identity(ident0, files, stats or {}) if ident0 else None
+    if ident0:
+        props["identity"] = _advance_identity(ident0, files, stats or {})
     while True:
         cur = current_version(table)
         cur_doc = read_manifest(table, cur) if cur is not None else None
@@ -1888,10 +1826,6 @@ def write_table(
             for f, st in (base_doc.get("stats") or {}).items():
                 if f in base_set:
                     merged_stats.setdefault(f, st)
-        # re-resolve the table property against the version this commit
-        # will actually sit on: a CAS-losing retry must carry a bloom
-        # property a concurrent writer just set, not its pre-race view
-        commit_conf = bloom_conf or _bloom_table_conf(cur_doc)
         if _try_commit(
             table,
             (cur or 0) + 1,
@@ -1900,18 +1834,11 @@ def write_table(
             commit_schema,
             meta=meta,
             stats=merged_stats or None,
-            bloom_conf=commit_conf,
             # appends keep the parent's deletion vectors in effect;
             # overwrite replaces the data, so its tombstones die with it
             dv_files=_dv_set(base_doc),
             operation=mode,
-            column_mapping=mapping,
-            layout=layout,
-            # overwrite states the layout explicitly (None CLEARS a
-            # previous partitioning); append/dynamic-overwrite restate
-            # the parent's, verified unchanged above
-            partitioning=partitioning,
-            identity=new_ident if ident0 else _INHERIT_MAPPING,
+            props=props,
         ):
             return (cur or 0) + 1
 
@@ -1973,7 +1900,6 @@ def drop_partition(table: str, values: dict) -> int:
             m["schema"],
             meta=meta,
             stats=stats or None,
-            bloom_conf=_bloom_table_conf(m),
             # tombstones referencing dropped files match nothing; ones on
             # kept files stay in effect
             dv_files=_dv_set(m),
@@ -2028,7 +1954,6 @@ def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -
             m["schema"],
             meta=meta,
             stats=merged_stats or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m),
             operation="delete",
         ):
@@ -2148,11 +2073,9 @@ def rename_column(table: str, old: str, new: str) -> int:
             json.dumps(schema),
             meta={"rename_column": {"from": old, "to": new}},
             stats=m.get("stats") or None,
-            bloom_conf=conf,
             dv_files=_dv_set(m),
             operation="rename_column",
-            column_mapping=mapping,
-            layout=layout,
+            props={"column_mapping": mapping, "layout": layout},
         ):
             return cur + 1
 
@@ -2203,11 +2126,9 @@ def drop_column(table: str, col: str) -> int:
             json.dumps(schema),
             meta={"drop_column": {"column": col}},
             stats=m.get("stats") or None,
-            bloom_conf=conf,
             dv_files=_dv_set(m),
             operation="drop_column",
-            column_mapping=mapping,
-            layout=layout,
+            props={"column_mapping": mapping, "layout": layout},
         ):
             return cur + 1
 
@@ -2263,10 +2184,9 @@ def add_column(table: str, name: str, dtype: "T.DataType | str") -> int:
             json.dumps(schema),
             meta={"add_column": {"column": name, "type": dtype.simpleString()}},
             stats=m.get("stats") or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m),
             operation="add_column",
-            column_mapping=mapping if mapping is not None else _INHERIT_MAPPING,
+            props={"column_mapping": mapping},
         ):
             return cur + 1
 
@@ -2324,10 +2244,8 @@ def widen_column(table: str, name: str, new_type: "T.DataType | str") -> int:
             json.dumps(schema),
             meta={"widen_column": {"column": name, "from": old_s, "to": new_s}},
             stats=m.get("stats") or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m),
             operation="widen_column",
-            column_mapping=_INHERIT_MAPPING,
         ):
             return cur + 1
 
@@ -2407,10 +2325,9 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
             m["schema"],
             meta={"add_constraint": {"name": name, "expr": expr}},
             stats=m.get("stats") or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m),
             operation="add_constraint",
-            constraints=cons,
+            props={"constraints": cons},
         ):
             return cur + 1
 
@@ -2434,11 +2351,9 @@ def drop_constraint(table: str, name: str) -> int:
             m["schema"],
             meta={"drop_constraint": {"name": name}},
             stats=m.get("stats") or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m),
             operation="drop_constraint",
-            # explicit value (None when empty) — never inherit the old set
-            constraints=cons or None,
+            props={"constraints": cons or None},
         ):
             return cur + 1
 
@@ -2672,7 +2587,7 @@ def add_generated_column(table: str, name: str, dtype: "T.DataType | str", expr:
             json.dumps(schema),
             meta={"add_generated_column": {"column": name, "expr": expr}},
             operation="add_generated_column",
-            generated=gen,
+            props={"generated": gen},
         ):
             return cur + 1
 
@@ -2739,7 +2654,7 @@ def add_identity_column(table: str, name: str, start: int = 1, step: int = 1) ->
             json.dumps(schema),
             meta={"add_identity_column": {"column": name, "start": start, "step": step}},
             operation="add_identity_column",
-            identity=ident,
+            props={"identity": ident},
         ):
             return cur + 1
 
@@ -2861,35 +2776,34 @@ def restore_table(table: str, version: int | None = None, as_of_ts: float | None
             target["schema"],
             meta=meta,
             stats=target.get("stats") or None,
-            bloom_conf=_bloom_table_conf(target),
             dv_files=_dv_set(target),
             operation="restore",
-            # the restored version's OWN table properties, explicitly
-            # (None clears): inheriting the CURRENT parent's constraints
-            # or layout could reference columns the restored schema no
-            # longer has, bricking every later write/OPTIMIZE (round-10
-            # review)
-            column_mapping=_mapping(target),
-            constraints=target.get("constraints"),
-            layout=target.get("layout"),
-            partitioning=target.get("partitioning"),
-            generated=target.get("generated"),
-            # NOTE: restoring also restores the identity HIGH-WATER —
-            # ids allocated after the restored version may be re-issued
-            # (they exist only in the no-longer-current history), the
-            # Delta RESTORE + identity caveat
-            identity=target.get("identity"),
+            # the restored version's OWN table properties, every one
+            # named (None clears): inheriting the CURRENT parent's
+            # constraints or layout could reference columns the restored
+            # schema no longer has, bricking every later write/OPTIMIZE
+            # (round-10 review). Restoring also restores the identity
+            # HIGH-WATER — ids allocated after the restored version may
+            # be re-issued (they exist only in the no-longer-current
+            # history), the Delta RESTORE + identity caveat
+            props={k: target.get(k) for k in TABLE_PROPS},
         ):
             return cur + 1
+
+
+# describe_detail's property columns: bloom_conf comes last there
+_DETAIL_PROPS = (*TABLE_PROPS[1:], TABLE_PROPS[0])
 
 
 def describe_detail(spark: SparkSession, table: str) -> DataFrame:
     """``DESCRIBE DETAIL`` (the Delta shape): ONE row describing the
     CURRENT version from metadata alone — version/parent/operation,
     file + deletion-vector counts, total data bytes (store stat per
-    file, no data I/O), and every table property (schema, column
-    mapping, CHECK constraints, bloom conf, declared layout) as JSON
-    strings. The SQL front door dispatches ``DESCRIBE DETAIL <t>``."""
+    file, no data I/O), the schema, and every table property as a JSON
+    string (NULL when unset): column mapping, CHECK constraints,
+    declared layout, partition columns, generated columns, identity
+    columns and bloom conf, in that column order. The SQL front door
+    dispatches ``DESCRIBE DETAIL <t>``."""
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no committed version in {table}")
@@ -2917,17 +2831,7 @@ def describe_detail(spark: SparkSession, table: str) -> DataFrame:
         "num_dv_files": len(_dv_set(m)),
         "size_bytes": size,
         "schema_json": m["schema"],
-        "column_mapping": json.dumps(_mapping(m)) if _mapping(m) else None,
-        "constraints": json.dumps(_constraints(m)) if _constraints(m) else None,
-        "layout": json.dumps(m.get("layout")) if m.get("layout") else None,
-        "partitioning": (
-            json.dumps(_partitioning(m)) if _partitioning(m) else None
-        ),
-        "generated": json.dumps(_generated(m)) if _generated(m) else None,
-        "identity": json.dumps(_identity(m)) if _identity(m) else None,
-        "bloom_conf": (
-            json.dumps(_bloom_table_conf(m)) if _bloom_table_conf(m) else None
-        ),
+        **{k: json.dumps(m[k]) if m.get(k) else None for k in _DETAIL_PROPS},
     }
     schema = T.StructType(
         [
@@ -2939,13 +2843,7 @@ def describe_detail(spark: SparkSession, table: str) -> DataFrame:
             T.StructField("num_dv_files", T.LongType()),
             T.StructField("size_bytes", T.LongType()),
             T.StructField("schema_json", T.StringType()),
-            T.StructField("column_mapping", T.StringType()),
-            T.StructField("constraints", T.StringType()),
-            T.StructField("layout", T.StringType()),
-            T.StructField("partitioning", T.StringType()),
-            T.StructField("generated", T.StringType()),
-            T.StructField("identity", T.StringType()),
-            T.StructField("bloom_conf", T.StringType()),
+            *[T.StructField(k, T.StringType()) for k in _DETAIL_PROPS],
         ]
     )
     from cashback_data_pipeline_spark.session import local_rows_df
@@ -3115,7 +3013,7 @@ def publish_staged(table: str, token: str, meta: dict | None = None) -> int:
         # a rename landing between stage and publish makes that layout
         # stale — refuse loudly (re-stage) rather than revert the rename
         stage_map = stage.get("column_mapping")
-        commit_map = _INHERIT_MAPPING  # unmapped stage: keep the table's property
+        props = None  # unmapped stage: keep the table's mapping
         if stage_map:
             commit_map = dict(_mapping(cur_doc) or {})
             for k, v in stage_map.items():
@@ -3125,6 +3023,7 @@ def publish_staged(table: str, token: str, meta: dict | None = None) -> int:
                         f"publish (column {k!r}); discard and re-stage"
                     )
                 commit_map.setdefault(k, v)
+            props = {"column_mapping": commit_map}
         if _try_commit(
             table,
             (cur or 0) + 1,
@@ -3133,10 +3032,9 @@ def publish_staged(table: str, token: str, meta: dict | None = None) -> int:
             stage["schema"],
             meta={**(meta or {}), "wap_token": token},
             stats=merged_stats or None,
-            bloom_conf=_bloom_table_conf(cur_doc),
             dv_files=_dv_set(cur_doc),
             operation="wap_publish",
-            column_mapping=commit_map,
+            props=props,
         ):
             store.delete_file(store.join(table, _STAGED_DIR, f"{token}.json"))
             return (cur or 0) + 1
@@ -3576,12 +3474,11 @@ def compact_table(
             cur,
             snapshot.schema.json(),
             stats=stats,
-            bloom_conf=_bloom_table_conf(m),
             operation="compact",
-            layout=(
-                {"cluster_by": list(cluster_by)} if cluster_by
-                else {"zorder_by": list(zorder_by)} if zorder_by
-                else _INHERIT_MAPPING
+            props=(
+                {"layout": {"cluster_by": list(cluster_by)}} if cluster_by
+                else {"layout": {"zorder_by": list(zorder_by)}} if zorder_by
+                else None
             ),
         ):
             return cur + 1
@@ -3729,7 +3626,6 @@ def optimize_table(
             m["schema"],
             meta=meta,
             stats=merged_stats or None,
-            bloom_conf=_bloom_table_conf(m),
             # untouched files keep their tombstones; entries naming the
             # rewritten files match nothing (materialized by the read),
             # and fully-dead relations drop entirely
@@ -3896,14 +3792,15 @@ def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str)
             cur,
             merged.schema.json(),
             stats=merged_stats or None,
-            bloom_conf=_bloom_table_conf(m),
             # carried files keep their tombstones; entries referencing the
             # rewritten (now-unreferenced) files match nothing — harmless,
             # reclaimed at the next compaction
             dv_files=_dv_set(m),
             operation="merge",
-            column_mapping=_extend_mapping(_mapping(m), merged.columns),
-            identity=new_ident if _identity(m) else _INHERIT_MAPPING,
+            props={
+                "column_mapping": _extend_mapping(_mapping(m), merged.columns),
+                "identity": new_ident,
+            },
         ):
             return cur + 1
 
@@ -4092,11 +3989,10 @@ def merge_table(
             cur,
             m["schema"],
             stats=merged_stats or None,
-            bloom_conf=_bloom_table_conf(m),
             # carried files keep their tombstones (upsert_table's note)
             dv_files=_dv_set(m),
             operation="merge",
-            identity=new_ident if _identity(m) else _INHERIT_MAPPING,
+            props={"identity": new_ident},
         ):
             return cur + 1
 
@@ -4223,11 +4119,12 @@ def append_table_if_absent(
                 cur,
                 commit_schema,
                 stats=merged_stats or None,
-                bloom_conf=_bloom_table_conf(m),
                 dv_files=_dv_set(m),
                 operation="append_if_absent",
-                column_mapping=_extend_mapping(_mapping(m), fresh.columns),
-                identity=new_ident if ident else _INHERIT_MAPPING,
+                props={
+                    "column_mapping": _extend_mapping(_mapping(m), fresh.columns),
+                    "identity": new_ident,
+                },
             ):
                 return n
             # CAS lost — a racing loader committed; recompute the
@@ -4304,7 +4201,6 @@ def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_
             m["schema"],
             meta=meta,
             stats=merged_stats or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m),
             operation=meta_key,
         ):
@@ -4422,7 +4318,6 @@ def delete_where(spark: SparkSession, table: str, predicates, mode: str = "copy_
             m["schema"],
             meta=meta,
             stats=stats or None,
-            bloom_conf=_bloom_table_conf(m),
             dv_files=_dv_set(m) + dv_new,
             operation="delete",
         ):

@@ -517,7 +517,6 @@ def route_batch_to_manifest(
             schema_json,
             meta={"epoch": int(epoch_id), "max_epoch": max(int(epoch_id), prev_max)},
             stats=stats or None,
-            bloom_conf=M._bloom_table_conf(m),
             dv_files=M._dv_set(m),
             operation="streaming_append",
             # the data files were written under the EXTENDED mapping
@@ -525,7 +524,7 @@ def route_batch_to_manifest(
             # inherited parent mapping instead would leave those columns
             # unmapped — a later rename/drop rebuilds the mapping over
             # the schema and KeyErrors on them (ADVICE r9)
-            column_mapping=used_mapping,
+            props={"column_mapping": used_mapping},
         ):
             return True
         # CAS lost — re-check the gate against the winner's version
@@ -622,12 +621,10 @@ def _merge_aggregate_delta(
             cur,
             merged.schema.json(),
             meta={"epoch": int(epoch_id), "max_epoch": max(int(epoch_id), prev_max)},
-            # carry the bloom table property and the EXTENDED mapping the
-            # data files were written under — the first maintenance
-            # commit must not silently drop either (ADVICE r9)
-            bloom_conf=M._bloom_table_conf(m_cur),
-            column_mapping=mapping,
             operation="overwrite",
+            # the EXTENDED mapping the data files were written under —
+            # the first maintenance commit must not drop it (ADVICE r9)
+            props={"column_mapping": mapping},
         ):
             return True
         # CAS lost: the merge base at `cur` is stale — loop re-reads the

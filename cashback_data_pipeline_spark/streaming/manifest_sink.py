@@ -259,10 +259,9 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
                 self._schema.json(),
                 meta=meta,
                 stats=stats or None,
-                bloom_conf=mf._bloom_table_conf(m),
                 dv_files=mf._dv_set(m),  # streamed appends keep tombstones in effect
                 operation="streaming_append",
-                column_mapping=self._mapping,
+                props={"column_mapping": self._mapping},
             ):
                 return
             # CAS lost to a concurrent writer — recompute against the

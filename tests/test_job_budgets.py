@@ -15,9 +15,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cashback_data_pipeline_spark.operators import retrieval
+from cashback_data_pipeline_spark.operators import retrieval, similarity
 from cashback_data_pipeline_spark.sinks import manifest as M
-from cashback_data_pipeline_spark.sources import manifest_source
+from cashback_data_pipeline_spark.sources import manifest_source, read_testdata
 from tests.scans import file_scans, scanned_files
 
 SEARCH_MAX_JOBS = 4
@@ -108,6 +108,43 @@ def test_repeated_sequence_compiles_no_new_classes(runs):
     a codegen-cache hit (``ENGINE_CONF`` sizes the cache for it)."""
     assert runs[1]["compiled"] == 0, runs
     assert runs[1]["jobs"] == runs[0]["jobs"]
+
+
+def _index_write(name, spark, sf_dir, table):
+    """The pooled store writes of one index path; returns the call that
+    runs them (setup excluded)."""
+    if name == "inverted_upsert":
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+            "doc_id", "text"
+        )
+        retrieval.build_inverted_index_manifest(
+            docs.filter(F.col("doc_id") % 5 != 0), table
+        )
+        return lambda: retrieval.upsert_inverted_index(
+            docs.filter(F.col("doc_id") % 5 == 0), table, delta_id="d1"
+        )
+    emb = read_testdata(spark, sf_dir, "embeddings")
+    return lambda: similarity.ivf_build_index_manifest(emb, table, n_centroids=4)
+
+
+@pytest.mark.parametrize("name", ["inverted_upsert", "ivf_build"])
+def test_pooled_store_writes_charged_to_caller_job_group(spark, sf_dir, tmp_path, name):
+    """Jobs the index commits submit from their store-write thread pool
+    belong to the caller's job group, so per-group counts see all of
+    them."""
+    run = _index_write(name, spark, sf_dir, str(tmp_path / "idx"))
+    sc = spark.sparkContext
+    group = f"job-group-{name}"
+    before = _jobs_submitted(spark)
+    sc.setJobGroup(group, name)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    total = _jobs_submitted(spark) - before
+    assert total > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == total
 
 
 def test_sql_view_date_range_budget(spark, tmp_path):

@@ -129,6 +129,35 @@ def test_kmeans_refine_improves_quantization(spark, emb):
     assert e_ref < e_seed, (e_seed, e_ref)
 
 
+def _kmeans_inputs(spark, vecs):
+    corpus = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    cents = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])], "centroid_id int, centroid array<float>"
+    )
+    return corpus, cents
+
+
+def test_kmeans_refine_rejects_mixed_dims(spark):
+    """One 2-dim vector among 3-dim ones used to average into a centroid
+    silently ([0.95, 0.05, 0.0]); it must fail loudly."""
+    corpus, cents = _kmeans_inputs(
+        spark, [[1.0, 0.0, 0.0], [0.9, 0.1], [0.0, 1.0, 0.0]]
+    )
+    with pytest.raises(ValueError, match="length 3; found 2"):
+        similarity.kmeans_refine(corpus, cents, n_iter=1).collect()
+
+
+@pytest.mark.parametrize("null_at", [0, 1], ids=["first_row", "later_row"])
+def test_kmeans_refine_rejects_null_vectors(spark, null_at):
+    vecs = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.9, 0.1, 0.0]]
+    vecs[null_at] = None
+    corpus, cents = _kmeans_inputs(spark, vecs)
+    with pytest.raises(ValueError, match="null"):
+        similarity.kmeans_refine(corpus, cents, n_iter=1).collect()
+
+
 def test_hyperplane_buckets_empty_input(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     out = similarity.hyperplane_lsh_buckets(empty, n_planes=4)
