@@ -234,21 +234,21 @@ def make_index_samplers(spark, sf_dir: str, base: str):  # -> 3 samplers + clean
     docs = read_testdata(spark, sf_dir, "documents")
 
     def sample_build() -> float:
-        path = f"{base}/inv_build"
-        shutil.rmtree(path, ignore_errors=True)
+        table = f"{base}/inv_build"
+        shutil.rmtree(table, ignore_errors=True)
         t0 = time.time()
-        retrieval.build_inverted_index(docs, path)
+        retrieval.build_inverted_index_manifest(docs, table)
         return round(time.time() - t0, 3)
 
-    search_path = f"{base}/inv_search"
+    search_table = f"{base}/inv_search"
 
     def sample_search() -> float:
-        if not _os.path.exists(search_path):
-            retrieval.build_inverted_index(docs, search_path)  # untimed setup
+        if not _os.path.exists(search_table):
+            retrieval.build_inverted_index_manifest(docs, search_table)  # untimed setup
         t0 = time.time()
-        retrieval.search_inverted_index(spark, search_path, _BM25_TERMS, k=10).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        retrieval.search_inverted_index_manifest(
+            spark, search_table, _BM25_TERMS, k=10
+        ).write.format("noop").mode("overwrite").save()
         return round(time.time() - t0, 3)
 
     def sample_delta() -> float:

@@ -39,6 +39,13 @@ def _toks(text_col, mode: str):
     return tokens(F.col(text_col) if isinstance(text_col, str) else text_col, mode=mode)
 
 
+def _check_k(k: int) -> None:
+    """A top-k ``k`` must fit the int ``limit`` takes; 0 is an empty
+    top-k. Each top-k entry point checks it before any Spark job runs."""
+    if not 0 <= k <= 2**31 - 1:
+        raise ValueError(f"k must be in [0, 2**31 - 1], got {k}")
+
+
 def _topk_ranked(scored: DataFrame, k: int, id_col: str, score_col: str) -> DataFrame:
     """Distributed global top-k WITH rank column: orderBy+limit compiles
     to TakeOrderedAndProject (per-partition heaps + driver merge — no
@@ -137,6 +144,7 @@ def bm25_topk(
     matching no query term score nothing (standard BM25 top-k)."""
     from cashback_data_pipeline_spark.operators.text import ensure_min_parallelism
 
+    _check_k(k)
     spark = docs.sparkSession
     # widened once here: the corpus-stats pass below tokenizes every row
     # (size of the token array) and would otherwise run on a 1-split scan
@@ -200,6 +208,7 @@ def rrf_fuse(
     contain d — the standard hybrid-search combiner (lexical ⊕ vector)
     because it needs no score calibration between the legs. Output
     (doc_id, rrf_score, rank), top-k on the quantized fused score."""
+    _check_k(k)
     a = ranked_a.select(F.col(id_col), (F.lit(1.0) / (rrf_k + F.col(rank_col))).alias("ra"))
     b_ = ranked_b.select(F.col(id_col), (F.lit(1.0) / (rrf_k + F.col(rank_col))).alias("rb"))
     fused = (
@@ -261,9 +270,9 @@ def build_inverted_index_manifest(
     text_col: str = "text",
     delta_id: str | None = None,
 ) -> int:
-    """Version 1 of the MANIFEST-COMMITTED incremental inverted index
-    (VERDICT r5 item 2: :func:`build_inverted_index` is full-rebuild
-    only — a 100 TB corpus needs delta postings merged atomically; the
+    """Version 1 of the MANIFEST-COMMITTED incremental inverted index,
+    the engine's one persisted lexical index: a 100 TB corpus needs delta
+    postings merged atomically, not a full rebuild per crawl batch (the
     reference analog is its idempotent incremental serving load,
     load_to_redshift_lambda.py:88-100, honored here for the engine's own
     search index). Three stores plus the corpus stats under ONE manifest
@@ -468,9 +477,10 @@ def _commit_index_delta(
                     postings.repartition("term_bucket").sortWithinPartitions("term"),
                     cid, "postings", "term_bucket",
                 ),
-                # doclens files sized by ROWS (same discipline as
-                # build_inverted_index): one footer per ~2M docs, merged
-                # from base's partitions without a shuffle
+                # doclens files sized by ROWS, not by core count: a
+                # (long, long) relation packs ~2M rows into ~32 MB, so one
+                # footer per ~2M docs, merged from base's partitions
+                # without a shuffle
                 (
                     _doclens(base, id_col, text_col).coalesce(max(1, -(-n_new // 2_000_000))),
                     cid, "doclens", None,
@@ -625,9 +635,9 @@ def search_inverted_index_manifest(
     (default: current at call time — a concurrent upsert cannot tear the
     read). File pruning happens against MANIFEST METADATA: postings and
     termstats files whose path carries a non-query ``term_bucket=``
-    segment are never opened — same ≤ k-bucket access path as
-    :func:`search_inverted_index`, same score contract as
-    :func:`bm25_topk` (quantized total order), so base+delta search must
+    segment are never opened, so a k-term search reads ≤ k buckets; same
+    score contract as :func:`bm25_topk` (quantized total order), so the
+    index is a pure access-path change and base+delta search must
     hash-match the full-scan BM25 over the union corpus. The corpus
     stats come from the commit meta, the stores' schemas from the
     commit's recorded read schemas: the only Spark jobs are the
@@ -638,6 +648,7 @@ def search_inverted_index_manifest(
 
     from cashback_data_pipeline_spark.sinks import manifest as M
 
+    _check_k(k)
     v = M.current_version(table) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed index in {table}")
@@ -709,167 +720,6 @@ def search_inverted_index_manifest(
                 / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl)))
             ).alias("c"),
         )
-    )
-    scored = contrib.groupBy(id_col).agg(_q6(F.sum("c")).alias("score"))
-    return _topk_ranked(scored, k, id_col, "score")
-
-
-def build_inverted_index(
-    docs: DataFrame,
-    path: str,
-    n_term_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_tf: bool = False,
-) -> None:
-    """Persist a lexical inverted index: one row per (term, doc, tf)
-    plus per-term df, laid out for QUERY-TIME PRUNING — partitioned by
-    ``term_bucket = pmod(xxhash64(term), n_term_buckets)`` and sorted by
-    term within files, so a k-term search reads ≤ k partitions and
-    row-group min/max term stats prune within them. The corpus-level
-    stats BM25 needs (N, avgdl) land in one tiny ``_stats`` parquet so
-    queries are zero-full-scan. At 100 TB: the index is (term, id, tf)
-    longs + one string column — a fraction of corpus bytes — and
-    building it is the tokenize + two-aggregate pipeline every term
-    needs anyway, one shuffle keyed by term."""
-    base = docs.filter(F.col(text_col).isNotNull())
-    spark = docs.sparkSession
-    # The (term, doc, tf) aggregate feeds both stores (postings and, as
-    # dl = Σtf per doc, the doclens side table; avgdl = Σdl / N equals
-    # averaging per-doc token counts over all non-null-text docs since
-    # zero-token docs contribute 0 to both). Tokenize ONCE: checkpoint
-    # the aggregate so the doclens and postings passes both read the
-    # compact (term, id, tf) relation instead of each re-running the
-    # explode+aggregate — the same move the delta-commit path made
-    # (profiled there: 3-4 full ~7 s 32-task tokenize stages per
-    # commit; here the plain build ran it twice). `cache_tf` (persist)
-    # predates this and measured 2× SLOWER at bench scale (cache-write
-    # overhead and no plan truncation); localCheckpoint materializes the
-    # relation the build is about to write anyway, so it is
-    # scale-appropriate at any corpus size.
-    def _tf():
-        return doc_terms(base, id_col, text_col).groupBy("term", id_col).agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-
-    tf = _tf().persist() if cache_tf else _tf().localCheckpoint()
-    try:
-        n_docs = base.count()
-        dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-        # size the doclens files by ROWS, not by core count (guide §6 /
-        # VERDICT r11 item 1): a (long, long) relation packs ~2M rows
-        # into a ~32 MB file, so a bench-scale corpus writes ONE file
-        # (searches open 1 footer instead of shuffle-partition-many) and
-        # a billion-doc corpus still fans out to hundreds of writers
-        dl_files = max(1, -(-n_docs // 2_000_000))
-        dl.repartition(dl_files).write.mode("overwrite").parquet(f"{path}/doclens")
-        total_tokens = (
-            spark.read.parquet(f"{path}/doclens")
-            .agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("t"))
-            .first()["t"]
-        )
-        stats = local_rows_df(
-            spark,
-            [(n_docs, (float(total_tokens) / n_docs) if n_docs else None)],
-            "n_docs long, avgdl double",
-        )
-        stats.write.mode("overwrite").parquet(f"{path}/_stats")
-
-        df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        postings = (
-            tf.join(df_, "term")
-            .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)))
-        )
-        if not total_tokens:
-            # partitionBy of zero rows writes no footers (unreadable dir);
-            # an empty non-partitioned write keeps the schema readable
-            postings.write.mode("overwrite").parquet(f"{path}/postings")
-        else:
-            (
-                postings.repartition("term_bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(f"{path}/postings")
-            )
-    finally:
-        if cache_tf:
-            tf.unpersist()
-        else:
-            from cashback_data_pipeline_spark.session import (
-                checkpointed_rdd_id,
-                unpersist_rdd_ids,
-            )
-
-            rid = checkpointed_rdd_id(tf)
-            if rid is not None:
-                unpersist_rdd_ids(spark, {rid})
-    # record the layout so searches hash terms with the same modulus and
-    # reconstruct the id column (name AND type) exactly
-    import json
-
-    meta = {
-        "n_term_buckets": n_term_buckets,
-        "id_col": id_col,
-        "id_field": docs.schema[id_col].jsonValue(),
-    }
-    local_rows_df(spark, [(json.dumps(meta),)], "meta string").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/_meta")
-
-
-def search_inverted_index(
-    spark,
-    path: str,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 top-k over the PERSISTED index — no corpus scan: the
-    postings read carries ``term_bucket IN (buckets of the query
-    terms)`` (partition pruning) plus a pushed ``term IN (...)`` filter
-    (row-group pruning via the sorted layout); doc lengths and corpus
-    stats come from their side tables. Same score and ranking contract
-    as :func:`bm25_topk` (quantized total order) — verified equal in
-    tests, so the index is a pure access-path change."""
-    import json
-
-    from pyspark.sql import types as T
-
-    meta = json.loads(spark.read.parquet(f"{path}/_meta").first()["meta"])
-    id_col = meta["id_col"]
-    nb = meta["n_term_buckets"]
-
-    def _empty() -> DataFrame:
-        id_field = T.StructField.fromJson(meta["id_field"])
-        return spark.createDataFrame(
-            [], T.StructType([id_field,
-                              T.StructField("score", T.DoubleType()),
-                              T.StructField("rank", T.IntegerType())])
-        )
-
-    stats = spark.read.parquet(f"{path}/_stats").first()
-    if not stats["n_docs"] or stats["avgdl"] is None or stats["avgdl"] == 0.0:
-        # no docs, or docs with zero tokens anywhere: nothing can match
-        return _empty()
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-    qterms = sorted(set(query_terms))
-
-    postings = spark.read.parquet(f"{path}/postings")
-    buckets = _bucket_ids(spark, qterms, nb)
-    hits = postings.filter(
-        F.col("term_bucket").isin(sorted(buckets)) & F.col("term").isin(qterms)
-    )
-    dl = spark.read.parquet(f"{path}/doclens")
-    idf = F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    contrib = hits.join(dl, id_col).select(
-        id_col,
-        (
-            idf
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl)))
-        ).alias("c"),
     )
     scored = contrib.groupBy(id_col).agg(_q6(F.sum("c")).alias("score"))
     return _topk_ranked(scored, k, id_col, "score")

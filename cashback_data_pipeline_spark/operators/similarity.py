@@ -278,7 +278,8 @@ def _probe_centroids(
 ) -> DataFrame:
     """(q_id, q_v, centroid_id): each query's ``n_probe`` nearest
     centroids by cosine (centroid-id tiebreak) — the shared probe leg of
-    every IVF query path, so the four variants can never drift."""
+    every IVF query path (:func:`ivf_topk`, :func:`ivf_topk_quantized`,
+    :func:`ivf_query_index_manifest`), so they can never drift."""
     q = _as_double(queries, id_col, vec_col, "q")
     cent = centroids.select(
         F.col("centroid_id"), F.col("centroid").cast("array<double>").alias("cv")
@@ -366,8 +367,9 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF ANN: assign corpus to centroids; for each query score only the
     ``n_probe`` nearest centroids' lists. Recall < 1 by construction;
-    at scale the corpus lists live as partitioned parquet so a probe
-    reads n_probe/n_centroids of the data (partition pruning).
+    at scale the lists live in a persisted index
+    (:func:`ivf_build_index_manifest`) so a probe reads n_probe/n_centroids
+    of the data (file pruning).
     ``refine_iters`` Lloyd rounds (kmeans_refine) tighten the coarse
     quantizer — better-balanced lists and higher recall per probe."""
     cents = make_centroids_from_sample(corpus, n_centroids, id_col, vec_col)
@@ -391,8 +393,8 @@ def ivf_topk_quantized(
     rescore_factor: int = 4,
 ) -> DataFrame:
     """IVF ANN over INT8-QUANTIZED lists (the in-memory, fully
-    deterministic twin of ``ivf_build_index(quantize=True)`` →
-    :func:`ivf_query_index`, shaped for oracle replay like
+    deterministic twin of ``ivf_build_index_manifest(quantize=True)`` →
+    :func:`ivf_query_index_manifest`, shaped for oracle replay like
     :func:`ivf_topk`): assignment and probing run on the exact vectors
     (quantization never moves list membership), candidate scoring runs
     on DEQUANTIZED values ``q·scale`` — every step an exact expression
@@ -598,74 +600,6 @@ def embedding_pairs_fast(
         block_pair_gemm, schema="id_a long, id_b long, cos double"
     )
     return scored
-
-
-def ivf_build_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iters: int = 0,
-    quantize: bool = False,
-) -> None:
-    """Materialize an IVF index: corpus written ``partitionBy(centroid_id)``
-    plus a ``centroids`` side table. Probing then reads ONLY the probed
-    centroid partitions (hive partition pruning) — at 100 TB a 4-of-256
-    probe touches ~1.6% of the bytes. ``refine_iters`` Lloyd rounds are
-    worth paying at build time (build once, probe forever).
-
-    ``quantize=True`` stores the lists INT8-QUANTIZED (id, scale, qvec —
-    :func:`quantize_embeddings_int8`): 4×/8× smaller lists, so a probe
-    moves 4-8× fewer bytes and more of the index fits page cache, at a
-    bounded per-element error (≤ scale/2). Assignment still happens on
-    the exact vectors (quantization never moves a vector across a
-    centroid boundary); probes score against dequantized values
-    (deterministic — the oracle replays them), and
-    :func:`ivf_query_index` can exact-rescore top candidates from the
-    original corpus to cancel the ranking error (measured: quantized
-    probe recall equals exact-probe recall on the test corpus even
-    before rescoring; RECALL.json)."""
-    cents = make_centroids_from_sample(corpus, n_centroids, id_col, vec_col)
-    if refine_iters > 0:
-        cents = kmeans_refine(corpus, cents, n_iter=refine_iters, id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    if quantize:
-        assigned = quantize_embeddings_int8(assigned, id_col, vec_col, keep_cols=["centroid_id"])
-    assigned.write.partitionBy("centroid_id").mode("overwrite").parquet(f"{path}/lists")
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    n_probe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rescore_with: DataFrame | None = None,
-    rescore_factor: int = 4,
-) -> DataFrame:
-    """ANN lookup against a persisted IVF index: per query pick the
-    ``n_probe`` nearest centroids, scan only those list partitions
-    (`centroid_id IN (...)` prunes at the file level), score, window
-    top-k. Same output schema as brute_force_topk.
-
-    A quantized index (built with ``quantize=True``) is detected from
-    the list schema and scored on DEQUANTIZED values. ``rescore_with``
-    (the original exact-vector corpus) re-ranks each query's top
-    ``k·rescore_factor`` quantized candidates by exact cosine — a
-    candidate-id point-lookup join, tiny at any scale — so the returned
-    cosines are exact and quantization can only cost recall if a true
-    neighbor fell below the k·factor cut."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    probes = _probe_centroids(queries, cents, n_probe, id_col, vec_col)
-    probed_ids = [r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()]
-
-    lists = spark.read.parquet(f"{path}/lists").filter(F.col("centroid_id").isin(probed_ids))
-    cands = _lists_as_candidates(lists, id_col, vec_col)
-    return _score_probed_lists(cands, probes, k, rescore_with, rescore_factor, id_col, vec_col)
 
 
 def _assign_spill(
@@ -1024,9 +958,12 @@ def ivf_query_index_manifest(
     probes pick ``n_probe`` centroids per query, then ONLY list files
     whose ``__list=`` path segment matches a probed centroid are opened
     — pruning from manifest metadata, no directory listing, and a
-    concurrent upsert can never tear the read. Quantized lists are
-    scored dequantized; ``rescore_with`` re-ranks top k·factor
-    candidates by exact cosine (see :func:`ivf_query_index`)."""
+    concurrent upsert can never tear the read. Same output schema as
+    :func:`brute_force_topk`. Quantized lists (``quantize=True``) are
+    scored on dequantized values; ``rescore_with`` (the original
+    exact-vector corpus) re-ranks each query's top ``k·rescore_factor``
+    candidates by exact cosine — a candidate-id point-lookup join — so
+    the returned cosines are exact."""
     import json
     import re
 

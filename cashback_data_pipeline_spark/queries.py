@@ -1047,7 +1047,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over INT8-QUANTIZED lists (VERDICT r5 item 6 —
-    similarity.ivf_topk_quantized / ivf_build_index(quantize=True)):
+    similarity.ivf_topk_quantized / ivf_build_index_manifest(quantize=True)):
     4×/8× smaller stored lists, probes score dequantized ``q·scale``
     values. Every step is exact-expression arithmetic — floor-half-up
     quantization, IEEE multiply, expression cosine — so the ORACLE
@@ -8240,25 +8240,27 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def indexed_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 over the PERSISTED term-partitioned inverted index
-    (retrieval.build_inverted_index → search_inverted_index): build the
-    index, search it with partition + row-group pruning, tear the index
-    down. The oracle is the full-scan BM25 SQL — the index is a pure
-    access-path change, so scores and ranks must be identical."""
+    """BM25 over the PERSISTED term-bucketed inverted index
+    (retrieval.build_inverted_index_manifest →
+    search_inverted_index_manifest): build the index into a temporary
+    manifest table, search it with term-bucket file pruning and
+    row-group pruning, tear the index down. The oracle is the full-scan
+    BM25 SQL — the index is a pure access-path change, so scores and
+    ranks must be identical."""
     import shutil
     import tempfile
 
     from cashback_data_pipeline_spark.operators import retrieval
 
     docs = read_testdata(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="inv_index_")
+    table = tempfile.mkdtemp(prefix="inv_index_")
     try:
-        retrieval.build_inverted_index(docs, path)
-        out = retrieval.search_inverted_index(spark, path, _BM25_TERMS, k=10)
+        retrieval.build_inverted_index_manifest(docs, table)
+        out = retrieval.search_inverted_index_manifest(spark, table, _BM25_TERMS, k=10)
         rows = out.collect()
         return local_rows_df(spark, rows, out.schema)
     finally:
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(table, ignore_errors=True)
 
 
 @query(

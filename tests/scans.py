@@ -29,3 +29,16 @@ def file_scans(df) -> list:
 def scanned_files(df) -> int:
     """Files the executed plan's Parquet scans read, summed."""
     return sum(s.metrics().apply("numFiles").value() for s in file_scans(df))
+
+
+def store_scans(df, store: str) -> list[tuple[list[str], int]]:
+    """``(paths, files read)`` of each Parquet scan over one store of a
+    manifest table (files under ``.../<store>/...``): the paths are the
+    files the scan was handed, read from its file index."""
+    out = []
+    for s in file_scans(df):
+        roots = s.relation().location().rootPaths()
+        paths = [str(roots.apply(i)) for i in range(roots.size())]
+        if paths and all(f"/{store}/" in p for p in paths):
+            out.append((paths, s.metrics().apply("numFiles").value()))
+    return out

@@ -1,6 +1,8 @@
 """Job-count budgets for the manifest inverted index (build → upsert →
-search) at sf0.001: 500 documents, an 80/20 build/upsert split; and for
-a date-range SQL aggregate over a registered manifest view.
+search) at sf0.001: 500 documents, an 80/20 build/upsert split; for the
+manifest IVF index (build → upsert → query) over the 500 sf0.001
+embeddings, the same split, 16 centroids and 10 queries; and for a
+date-range SQL aggregate over a registered manifest view.
 
 Job and codegen counts are deterministic for fixed inputs, unlike wall
 time, so a reintroduced redundant action (an extra ``.first()``, a
@@ -22,6 +24,9 @@ from tests.scans import file_scans, scanned_files
 
 SEARCH_MAX_JOBS = 4
 UPSERT_MAX_JOBS = 11
+IVF_BUILD_MAX_JOBS = 7
+IVF_UPSERT_MAX_JOBS = 7
+IVF_QUERY_MAX_JOBS = 8
 SQL_VIEW_MAX_JOBS = 2
 TERMS = ["data", "model", "the"]
 
@@ -39,9 +44,8 @@ def _classes_compiled(spark) -> int:
     return cg.METRIC_COMPILATION_TIME().getCount()
 
 
-def _sequence(spark, docs, table: str) -> dict[str, int]:
-    """Build → upsert → search on a fresh table; jobs per step."""
-    steps = [
+def _inverted_steps(spark, docs, table: str) -> list:
+    return [
         ("build", lambda: retrieval.build_inverted_index_manifest(
             docs.filter(F.col("doc_id") % 5 != 0), table)),
         ("upsert", lambda: retrieval.upsert_inverted_index(
@@ -49,6 +53,21 @@ def _sequence(spark, docs, table: str) -> dict[str, int]:
         ("search", lambda: retrieval.search_inverted_index_manifest(
             spark, table, TERMS, k=10).collect()),
     ]
+
+
+def _ivf_steps(spark, emb, table: str) -> list:
+    return [
+        ("build", lambda: similarity.ivf_build_index_manifest(
+            emb.filter(F.col("vec_id") % 5 != 0), table, n_centroids=16)),
+        ("upsert", lambda: similarity.upsert_ivf_index(
+            emb.filter(F.col("vec_id") % 5 == 0), table, delta_id="d1")),
+        ("query", lambda: similarity.ivf_query_index_manifest(
+            spark, table, emb.filter(F.col("vec_id") < 10), n_probe=4, k=5).collect()),
+    ]
+
+
+def _sequence(spark, steps) -> dict[str, int]:
+    """Run the steps on a fresh table; jobs per step."""
     jobs = {}
     for name, fn in steps:
         before = _jobs_submitted(spark)
@@ -57,14 +76,10 @@ def _sequence(spark, docs, table: str) -> dict[str, int]:
     return jobs
 
 
-@pytest.fixture(scope="module")
-def runs(spark, sf_dir, tmp_path_factory):
+def _run_twice(spark, steps_for, tmp_path_factory) -> list[dict]:
     """The sequence twice on fresh tables, with the jobs that run inside
     ``read_store`` counted. A store read is lazy, so any job there is
     metadata work: Spark inferring the schema from file footers."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
     read_jobs = [0]
     real_read_store = M.read_store
 
@@ -80,7 +95,7 @@ def runs(spark, sf_dir, tmp_path_factory):
         mp.setattr(M, "read_store", counting_read_store)
         for i in range(2):
             compiled = _classes_compiled(spark)
-            jobs = _sequence(spark, docs, str(tmp_path_factory.mktemp("idx") / "inv"))
+            jobs = _sequence(spark, steps_for(str(tmp_path_factory.mktemp("idx") / "idx")))
             out.append(
                 {"jobs": jobs, "compiled": _classes_compiled(spark) - compiled,
                  "read_jobs": read_jobs[0]}
@@ -89,8 +104,23 @@ def runs(spark, sf_dir, tmp_path_factory):
     return out
 
 
-def test_store_reads_run_no_footer_inference_jobs(runs):
+@pytest.fixture(scope="module")
+def runs(spark, sf_dir, tmp_path_factory):
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+        "doc_id", "text"
+    )
+    return _run_twice(spark, lambda t: _inverted_steps(spark, docs, t), tmp_path_factory)
+
+
+@pytest.fixture(scope="module")
+def ivf_runs(spark, sf_dir, tmp_path_factory):
+    emb = read_testdata(spark, sf_dir, "embeddings")
+    return _run_twice(spark, lambda t: _ivf_steps(spark, emb, t), tmp_path_factory)
+
+
+def test_store_reads_run_no_footer_inference_jobs(runs, ivf_runs):
     assert [r["read_jobs"] for r in runs] == [0, 0]
+    assert [r["read_jobs"] for r in ivf_runs] == [0, 0]
 
 
 def test_search_job_budget(runs):
@@ -101,6 +131,15 @@ def test_search_job_budget(runs):
 def test_upsert_job_budget(runs):
     for r in runs:
         assert r["jobs"]["upsert"] <= UPSERT_MAX_JOBS, r["jobs"]
+
+
+@pytest.mark.parametrize(
+    "step,ceiling",
+    [("build", IVF_BUILD_MAX_JOBS), ("upsert", IVF_UPSERT_MAX_JOBS), ("query", IVF_QUERY_MAX_JOBS)],
+)
+def test_ivf_job_budget(ivf_runs, step, ceiling):
+    for r in ivf_runs:
+        assert r["jobs"][step] <= ceiling, r["jobs"]
 
 
 def test_repeated_sequence_compiles_no_new_classes(runs):

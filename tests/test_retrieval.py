@@ -4,11 +4,13 @@ references (BM25 per the Lucene formula, RRF per Cormack et al. 2009)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.operators import retrieval
+from tests.scans import store_scans
 
 TEXTS = [
     (0, "spark join hash join merge"),
@@ -102,35 +104,62 @@ def test_rrf_fusion_reference(spark):
 
 def test_inverted_index_search_equals_full_scan_bm25(spark, docs, tmp_path):
     """The persisted index is a pure access-path change: identical
-    scores and ranks to bm25_topk, and the postings scan prunes to the
-    query terms' partitions."""
-    path = str(tmp_path / "idx")
-    retrieval.build_inverted_index(docs, path, n_term_buckets=8)
+    scores and ranks to bm25_topk, and the search opens only the query
+    terms' postings and termstats buckets."""
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "idx")
+    retrieval.build_inverted_index_manifest(docs, table, n_term_buckets=8)
     terms = ["hash", "window"]
-    via_index = {
-        r["doc_id"]: (r["score"], r["rank"])
-        for r in retrieval.search_inverted_index(spark, path, terms, k=10).collect()
-    }
+    out = retrieval.search_inverted_index_manifest(spark, table, terms, k=10)
+    via_index = {r["doc_id"]: (r["score"], r["rank"]) for r in out.collect()}
     via_scan = {
         r["doc_id"]: (r["score"], r["rank"]) for r in retrieval.bm25_topk(docs, terms, k=10).collect()
     }
     assert via_index == via_scan and via_index
-    # partition pruning: the postings scan carries a term_bucket filter
-    plan = (
-        retrieval.search_inverted_index(spark, path, terms, k=10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [term_bucket" in plan
+    # bucket pruning: fewer postings and termstats files opened than the
+    # commit holds, each from a query term's bucket
+    m = M.read_manifest(table, M.current_version(table))
+    want = retrieval._bucket_ids(spark, terms, 8)
+    for store in ("postings", "termstats"):
+        scans = store_scans(out, store)
+        opened = sum(n for _, n in scans)
+        assert 0 < opened < len(M.store_files(m, store)), (store, scans)
+        buckets = {
+            int(re.search(r"term_bucket=(\d+)", p).group(1)) for paths, _ in scans for p in paths
+        }
+        assert buckets <= want, (store, buckets, want)
 
 
 def test_inverted_index_empty_corpus(spark, tmp_path):
-    path = str(tmp_path / "idx")
+    table = str(tmp_path / "idx")
     empty = spark.createDataFrame([(1, None)], "doc_id long, text string")
-    retrieval.build_inverted_index(empty, path)
-    out = retrieval.search_inverted_index(spark, path, ["hash"], k=5)
+    assert retrieval.build_inverted_index_manifest(empty, table) == 1
+    out = retrieval.search_inverted_index_manifest(spark, table, ["hash"], k=5)
     assert out.count() == 0
+
+
+@pytest.mark.parametrize("k", [-1, 2**31, 10**12])
+def test_topk_rejects_out_of_range_k(spark, docs, tmp_path, k):
+    """A ``k`` outside ``[0, 2**31 - 1]`` is a ValueError from every
+    top-k entry point, not an error from inside Spark."""
+    table = str(tmp_path / "idx")
+    retrieval.build_inverted_index_manifest(docs, table, n_term_buckets=8)
+    ranked = spark.createDataFrame([(0, 1)], "doc_id long, rank int")
+    for call in (
+        lambda: retrieval.bm25_topk(docs, ["hash"], k=k),
+        lambda: retrieval.search_inverted_index_manifest(spark, table, ["hash"], k=k),
+        lambda: retrieval.rrf_fuse(ranked, ranked, k=k),
+    ):
+        with pytest.raises(ValueError, match="k must be in"):
+            call()
+
+
+def test_topk_zero_k_is_empty(spark, docs, tmp_path):
+    table = str(tmp_path / "idx")
+    retrieval.build_inverted_index_manifest(docs, table, n_term_buckets=8)
+    assert retrieval.bm25_topk(docs, ["hash"], k=0).collect() == []
+    assert retrieval.search_inverted_index_manifest(spark, table, ["hash"], k=0).collect() == []
 
 
 # ---------------------------------------------------------------------------
@@ -224,6 +253,49 @@ def test_incremental_index_reader_pinned_across_upsert(spark, docs, tmp_path):
         for r in retrieval.bm25_topk(docs.filter(F.col("doc_id") < 3), ["hash"], k=10).collect()
     }
     assert got == want
+
+
+def test_racing_upserts_serialize_into_one_linear_history(spark, docs, tmp_path, monkeypatch):
+    """Two deltas upserted concurrently into one index: the second one
+    commits while the first is between its store writes and its CAS, so
+    the first loses the CAS and recomputes against the winner. Nothing is
+    lost or registered twice, and both calls release their checkpoints."""
+    from cashback_data_pipeline_spark.session import persistent_rdd_ids
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "idx_race")
+    base = docs.filter(F.col("doc_id") < 3)
+    delta_a = docs.filter(F.col("doc_id").isin(3, 4))
+    delta_b = docs.filter(F.col("doc_id").isin(5, 6))
+    retrieval.build_inverted_index_manifest(base, table, n_term_buckets=8)
+    baseline = persistent_rdd_ids(spark)
+
+    real_try = M._try_commit
+    fired = {"done": False}
+
+    def race_then_commit(*a, **k):
+        if not fired["done"]:
+            fired["done"] = True
+            assert retrieval.upsert_inverted_index(delta_b, table, delta_id="b") == 2
+        return real_try(*a, **k)
+
+    monkeypatch.setattr(M, "_try_commit", race_then_commit)
+    assert retrieval.upsert_inverted_index(delta_a, table, delta_id="a") == 3
+    monkeypatch.undo()
+
+    history = [(r["version"], r["parent"]) for r in M.table_history(spark, table).collect()]
+    assert history == [(1, None), (2, 1), (3, 2)]
+    m = M.read_manifest(table, 3)
+    assert m["meta"]["delta_ids"] == ["b", "a"]
+    ids = [r["doc_id"] for r in M.read_store(spark, table, "doclens", version=3).collect()]
+    want_ids = [r["doc_id"] for r in docs.filter(F.col("text").isNotNull()).collect()]
+    assert sorted(ids) == sorted(want_ids)  # each doc registered exactly once
+    assert m["meta"]["corpus"]["n_docs"] == base.count() + 2 + 1  # doc 5 has no text
+    terms = ["hash", "join", "window"]
+    assert _search_m(spark, table, terms) == {
+        r["doc_id"]: (r["score"], r["rank"]) for r in retrieval.bm25_topk(docs, terms, k=10).collect()
+    }
+    assert persistent_rdd_ids(spark) - baseline == set()
 
 
 def test_incremental_index_empty_and_null_deltas(spark, docs, tmp_path):

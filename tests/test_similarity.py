@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.operators import similarity
 from cashback_data_pipeline_spark.sources import read_testdata
+from tests.scans import store_scans
 
 
 @pytest.fixture(scope="module")
@@ -95,17 +96,25 @@ def test_fast_pairs_match_exact_expression(spark, emb):
 
 
 def test_ivf_persisted_index_matches_inline_and_prunes(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
-    similarity.ivf_build_index(emb, path, n_centroids=16)
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "ivf")
+    similarity.ivf_build_index_manifest(emb, table, n_centroids=16)
     queries = emb.filter(F.col("vec_id") < 10)
     inline = similarity.ivf_topk(queries, emb, n_centroids=16, n_probe=4, k=5)
-    persisted = similarity.ivf_query_index(spark, path, queries, n_probe=4, k=5)
+    persisted = similarity.ivf_query_index_manifest(spark, table, queries, n_probe=4, k=5)
     a = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in inline.collect()}
     b = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in persisted.collect()}
     assert a == b
-    # partition pruning: the list scan must carry a partition filter
-    plan = persisted._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid_id" in plan
+    # list pruning: ONE query opens at most its n_probe lists' files (ten
+    # queries together probe nearly every list, which would prove nothing)
+    one = similarity.ivf_query_index_manifest(
+        spark, table, emb.filter(F.col("vec_id") == 0), n_probe=4, k=5
+    )
+    assert len(one.collect()) == 5
+    n_lists = len(M.store_files(M.read_manifest(table, M.current_version(table)), "lists"))
+    opened = sum(n for _, n in store_scans(one, "lists"))
+    assert 0 < opened <= 4 < n_lists, (opened, n_lists)
 
 
 def test_kmeans_refine_improves_quantization(spark, emb):
@@ -456,11 +465,13 @@ def test_ivf_quantized_index_probe_and_rescore(spark, emb, tmp_path):
     dequantized values with bounded error vs the exact probe; the
     exact-rescore path returns exact cosines; and the in-memory twin
     (ivf_topk_quantized) matches the persisted path exactly."""
-    path = str(tmp_path / "ivf_q")
-    similarity.ivf_build_index(emb, path, n_centroids=16, quantize=True)
+    from cashback_data_pipeline_spark.sinks import manifest as M
+
+    table = str(tmp_path / "ivf_q")
+    similarity.ivf_build_index_manifest(emb, table, n_centroids=16, quantize=True)
     queries = emb.filter(F.col("vec_id") < 10)
 
-    quant = similarity.ivf_query_index(spark, path, queries, n_probe=4, k=5)
+    quant = similarity.ivf_query_index_manifest(spark, table, queries, n_probe=4, k=5)
     inline = similarity.ivf_topk_quantized(queries, emb, n_centroids=16, n_probe=4, k=5)
     a = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"]) for r in quant.collect()}
     b = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"]) for r in inline.collect()}
@@ -476,15 +487,15 @@ def test_ivf_quantized_index_probe_and_rescore(spark, emb, tmp_path):
 
     # rescore: exact cosines, and with a wide-enough candidate cut the
     # result equals the exact probe outright
-    rescored = similarity.ivf_query_index(
-        spark, path, queries, n_probe=4, k=5, rescore_with=emb, rescore_factor=100
+    rescored = similarity.ivf_query_index_manifest(
+        spark, table, queries, n_probe=4, k=5, rescore_with=emb, rescore_factor=100
     )
     r = {(r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cos"], 9)) for r in rescored.collect()}
     e = {(r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cos"], 9)) for r in exact.collect()}
     assert r == e
 
     # storage really is int8: tinyint element type in the persisted lists
-    lists = spark.read.parquet(f"{path}/lists")
+    lists = M.read_store(spark, table, "lists")
     assert dict(lists.dtypes)["qvec"] == "array<tinyint>"
 
 
@@ -512,14 +523,12 @@ def test_ivf_manifest_index_delta_replay_and_pinning(spark, emb, tmp_path, ivf_s
     assert similarity.upsert_ivf_index(delta, table, delta_id="d1") == 2
 
     got = similarity.ivf_query_index_manifest(spark, table, queries, n_probe=4, k=5)
-    # reference: one-shot persisted build over base+delta with centroids
+    # reference: one-shot in-memory IVF over base+delta with centroids
     # seeded from base (same frozen-quantizer state)
     cents = similarity.make_centroids_from_sample(base, 16)
-    ref_assigned = similarity.ivf_assign(emb, cents)
-    refp = str(tmp_path / "ivf_ref")
-    ref_assigned.write.partitionBy("centroid_id").parquet(f"{refp}/lists")
-    cents.write.parquet(f"{refp}/centroids")
-    want = similarity.ivf_query_index(spark, refp, queries, n_probe=4, k=5)
+    probes = similarity._probe_centroids(queries, cents, 4, "vec_id", "embedding")
+    cands = similarity._lists_as_candidates(similarity.ivf_assign(emb, cents), "vec_id", "embedding")
+    want = similarity._score_probed_lists(cands, probes, 5, None, 0, "vec_id", "embedding")
     g = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in got.collect()}
     w = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in want.collect()}
     assert g == w and g

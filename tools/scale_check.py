@@ -133,8 +133,9 @@ def _docs(spark, sf_dir: str):
 
 
 class _IndexBuild:
-    """Full inverted-index construction (tokenize + two aggregates +
-    term-bucket-partitioned write) — expected exponent ≈ 1."""
+    """Full inverted-index construction, version 1 of the manifest index
+    (tokenize + term aggregates + term-bucket-partitioned store writes) —
+    expected exponent ≈ 1."""
 
     def sample(self, spark, sf_dir: str) -> float:
         import shutil
@@ -142,35 +143,35 @@ class _IndexBuild:
 
         from cashback_data_pipeline_spark.operators import retrieval
 
-        path = tempfile.mkdtemp(prefix="scale_idx_") + "/idx"
+        table = tempfile.mkdtemp(prefix="scale_idx_") + "/idx"
         t0 = time.time()
-        retrieval.build_inverted_index(_docs(spark, sf_dir), path)
+        retrieval.build_inverted_index_manifest(_docs(spark, sf_dir), table)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(table, ignore_errors=True)
         return dt
 
 
 class _IndexSearch:
     """Served BM25 search over a PREBUILT index (built once per scale,
-    untimed): the k-term partition-pruned read — expected exponent well
+    untimed): the k-term bucket-pruned read — expected exponent well
     under 1 (bytes touched scale with the probed postings, not the
     corpus; doclens joins scale linearly)."""
 
     def __init__(self) -> None:
-        self.paths: dict[str, str] = {}
+        self.tables: dict[str, str] = {}
 
     def sample(self, spark, sf_dir: str) -> float:
         import tempfile
 
         from cashback_data_pipeline_spark.operators import retrieval
 
-        if sf_dir not in self.paths:
-            path = tempfile.mkdtemp(prefix="scale_idx_srch_") + "/idx"
-            retrieval.build_inverted_index(_docs(spark, sf_dir), path)
-            self.paths[sf_dir] = path
+        if sf_dir not in self.tables:
+            table = tempfile.mkdtemp(prefix="scale_idx_srch_") + "/idx"
+            retrieval.build_inverted_index_manifest(_docs(spark, sf_dir), table)
+            self.tables[sf_dir] = table
         t0 = time.time()
-        retrieval.search_inverted_index(
-            spark, self.paths[sf_dir], _BENCH_TERMS, k=10
+        retrieval.search_inverted_index_manifest(
+            spark, self.tables[sf_dir], _BENCH_TERMS, k=10
         ).write.format("noop").mode("overwrite").save()
         return round(time.time() - t0, 3)
 
