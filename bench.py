@@ -52,7 +52,7 @@ for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from cashback_data_pipeline_spark.session import get_spark  # noqa: E402
+from cashback_data_pipeline_spark.session import get_spark, release_all  # noqa: E402
 from cashback_data_pipeline_spark import queries as Q  # noqa: E402
 
 HEADLINE = [
@@ -570,29 +570,6 @@ def main() -> None:
     # warm the JVM + parquet footer caches with one trivial action
     Q.QUERIES["count_filtered"](spark, sf_dir).collect()
 
-    def release_session_state() -> None:
-        # The LSH/band-index queries localCheckpoint small relations; the
-        # blocks stay pinned in the block manager until the Python-side
-        # DataFrame is garbage-collected (nondeterministic), so a 40+
-        # query session accumulates dead cached partitions and every
-        # later query pays the eviction/GC churn (measured: ann_topk_batch
-        # 1.1s in a fresh session vs 6.5s late in the bench sequence).
-        # Each query is fully materialized before this runs, so nothing
-        # can still need the freed blocks.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        # Python-side py4j handles (Broadcast objects, DataFrames) keep
-        # their JVM twins alive until Python's GC runs; Spark's
-        # ContextCleaner can only reap broadcasts/shuffles whose refs are
-        # gone. Forcing collection here is the difference between 2 s and
-        # 19 s for late-sequence expression-heavy queries (measured:
-        # minhash_trigram 10.2 s fresh → 19.4 s after 16 queries → 2.0 s
-        # once the dead refs are collected).
-        import gc
-
-        gc.collect()
-
     # Committed per-query reference times (quiet-box min-of-2, same sf).
     # Only used for stall detection at the matching sf.
     ref_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "REFTIMES.json")
@@ -637,7 +614,9 @@ def main() -> None:
 
         def take() -> None:
             runs.append(sample_once())
-            release_session_state()
+            # each query is fully materialized before this runs, so
+            # nothing still needs the freed blocks
+            release_all(spark)
 
         for _ in range(2):
             take()

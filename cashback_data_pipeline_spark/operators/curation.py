@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cashback_data_pipeline_spark.session import checkpoint_scope
+
 #: width of the hex prefix used for bucketing: 4 hex chars = 65536 buckets,
 #: giving fraction resolution of ~0.0015% — plenty for split/mixture work.
 _HEX_WIDTH = 4
@@ -230,26 +232,28 @@ def unigram_surprisal(
     table (groupBy token — map-side combinable) and the per-doc score
     join; the token total rides along as a broadcast 1-row aggregate, so
     nothing ever collects to the driver. Scales as two shuffles of
-    (token) and (doc) keys — both naturally spread."""
+    (token) and (doc) keys — both naturally spread. The result is
+    materialized by :meth:`session.CheckpointScope.result`."""
     from cashback_data_pipeline_spark.operators.text import tokens
 
-    # materialize the exploded tokens once — they feed THREE consumers
-    # (frequency table, total, and the score join); without the barrier
-    # each consumer re-scans and re-tokenizes the corpus
-    tk = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("__tok")
-    ).localCheckpoint()
-    freq = tk.groupBy("__tok").agg(F.count(F.lit(1)).alias("__c"))
-    total = tk.agg(F.count(F.lit(1)).alias("__n"))
-    scored = (
-        tk.join(freq, on="__tok")
-        .join(F.broadcast(total), F.lit(True))
-        .withColumn("__s", -F.log(F.col("__c").cast("double") / F.col("__n")))
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.avg("__s").alias("surprisal"),
-    )
+    with checkpoint_scope(df.sparkSession) as scope:
+        # materialize the exploded tokens once — they feed THREE consumers
+        # (frequency table, total, and the score join); without the barrier
+        # each consumer re-scans and re-tokenizes the corpus
+        tk = scope.checkpoint(df.select(F.col(id_col), F.explode(tokens(text_col)).alias("__tok")))
+        freq = tk.groupBy("__tok").agg(F.count(F.lit(1)).alias("__c"))
+        total = tk.agg(F.count(F.lit(1)).alias("__n"))
+        scored = (
+            tk.join(freq, on="__tok")
+            .join(F.broadcast(total), F.lit(True))
+            .withColumn("__s", -F.log(F.col("__c").cast("double") / F.col("__n")))
+        )
+        return scope.result(
+            scored.groupBy(id_col).agg(
+                F.count(F.lit(1)).alias("n_tokens"),
+                F.avg("__s").alias("surprisal"),
+            )
+        )
 
 
 def ngrams_from_tokens(t: Column, n: int = 3) -> Column:

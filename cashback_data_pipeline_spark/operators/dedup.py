@@ -18,6 +18,11 @@ Strategy ladder (cheapest first):
 
 All candidate generation is relational (joins Catalyst can plan); only
 verification touches full payloads, and only for candidate pairs.
+
+Operators that checkpoint an intermediate own it through
+:func:`session.checkpoint_scope` and return their result materialized by
+:meth:`session.CheckpointScope.result`: driver-local rows when small,
+otherwise one pinned checkpoint the caller releases.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from cashback_data_pipeline_spark.operators.text import (  # noqa: F401 — re-e
     simhash_signatures,
     tokens,
 )
+from cashback_data_pipeline_spark.session import checkpoint_scope
 
 
 # ---------------------------------------------------------------------------
@@ -141,78 +147,81 @@ def ngram_jaccard_pairs(
     else:
         tok = exploded.distinct().withColumn("cnt", F.lit(1))
 
-    # materialize the inverted index once: it feeds both join sides (×2
-    # with length blocking), the size table, and the hot-token scan —
-    # recomputing the explode+count pipeline per consumer multiplied the
-    # plan to ~28 exchanges. This is the index you'd persist at scale
-    # anyway. Sizes are taken from the PRE-hot-filter index (full-size
-    # denominators keep the hot-token score a lower bound).
-    tok = tok.localCheckpoint()
-    if bag:
-        sizes = tok.groupBy("id").agg(F.sum("cnt").alias("size"))
-    else:
-        sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("size"))
+    with checkpoint_scope(df.sparkSession) as scope:
+        # materialize the inverted index once: it feeds both join sides (×2
+        # with length blocking), the size table, and the hot-token scan —
+        # recomputing the explode+count pipeline per consumer multiplied the
+        # plan to ~28 exchanges. This is the index you'd persist at scale
+        # anyway. Sizes are taken from the PRE-hot-filter index (full-size
+        # denominators keep the hot-token score a lower bound).
+        tok = scope.checkpoint(tok)
+        if bag:
+            sizes = tok.groupBy("id").agg(F.sum("cnt").alias("size"))
+        else:
+            sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("size"))
 
-    if max_token_df is not None:
-        hot = (
-            tok.groupBy("tok")
-            .agg(F.countDistinct("id").alias("df"))
-            .filter(F.col("df") > max_token_df)
-            .select("tok")
+        if max_token_df is not None:
+            hot = (
+                tok.groupBy("tok")
+                .agg(F.countDistinct("id").alias("df"))
+                .filter(F.col("df") > max_token_df)
+                .select("tok")
+            )
+            tok = tok.join(F.broadcast(hot), on="tok", how="left_anti")
+
+        extra = list(block_cols or [])
+        if length_block:
+            import math
+
+            if not (0.0 < threshold < 1.0):
+                raise ValueError("length_block requires 0 < threshold < 1")
+            bucket = F.floor(F.log(F.col("size").cast("double")) / math.log(1.0 / threshold))
+            tok = tok.join(sizes.select("id", bucket.alias("__lb")), on="id")
+            extra = extra + ["__lb"]
+
+        a = tok.select(
+            F.col("id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in extra],
+            F.col("tok"), F.col("cnt").alias("cnt_a"),
         )
-        tok = tok.join(F.broadcast(hot), on="tok", how="left_anti")
-
-    extra = list(block_cols or [])
-    if length_block:
-        import math
-
-        if not (0.0 < threshold < 1.0):
-            raise ValueError("length_block requires 0 < threshold < 1")
-        bucket = F.floor(F.log(F.col("size").cast("double")) / math.log(1.0 / threshold))
-        tok = tok.join(sizes.select("id", bucket.alias("__lb")), on="id")
-        extra = extra + ["__lb"]
-
-    a = tok.select(
-        F.col("id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in extra],
-        F.col("tok"), F.col("cnt").alias("cnt_a"),
-    )
-    b = tok.select(
-        F.col("id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in extra],
-        F.col("tok"), F.col("cnt").alias("cnt_b"),
-    )
-    join_cond = (a["tok"] == b["tok"]) & (a["id_a"] < b["id_b"])
-    for c in block_cols or []:
-        join_cond = join_cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    if length_block:
-        join_cond = join_cond & (F.col("__lb_a") == F.col("__lb_b"))
-    inter = (
-        a.join(b, on=join_cond, how="inner")
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.least("cnt_a", "cnt_b")).alias("inter"))
-    )
-    if length_block:
-        # adjacent-bucket branch: Δbucket = 1 exactly, ids normalized so
-        # each cross-bucket pair is counted once (it can never appear in
-        # the same-bucket branch)
-        adj_cond = (a["tok"] == b["tok"]) & (F.col("__lb_a") + 1 == F.col("__lb_b"))
+        b = tok.select(
+            F.col("id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in extra],
+            F.col("tok"), F.col("cnt").alias("cnt_b"),
+        )
+        join_cond = (a["tok"] == b["tok"]) & (a["id_a"] < b["id_b"])
         for c in block_cols or []:
-            adj_cond = adj_cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-        pairs_adj = a.join(b, on=adj_cond, how="inner").select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            F.least("cnt_a", "cnt_b").alias("__mn"),
+            join_cond = join_cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
+        if length_block:
+            join_cond = join_cond & (F.col("__lb_a") == F.col("__lb_b"))
+        inter = (
+            a.join(b, on=join_cond, how="inner")
+            .groupBy("id_a", "id_b")
+            .agg(F.sum(F.least("cnt_a", "cnt_b")).alias("inter"))
         )
-        inter_adj = pairs_adj.groupBy("id_a", "id_b").agg(F.sum("__mn").alias("inter"))
-        inter = inter.unionByName(inter_adj)
+        if length_block:
+            # adjacent-bucket branch: Δbucket = 1 exactly, ids normalized so
+            # each cross-bucket pair is counted once (it can never appear in
+            # the same-bucket branch)
+            adj_cond = (a["tok"] == b["tok"]) & (F.col("__lb_a") + 1 == F.col("__lb_b"))
+            for c in block_cols or []:
+                adj_cond = adj_cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
+            pairs_adj = a.join(b, on=adj_cond, how="inner").select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+                F.least("cnt_a", "cnt_b").alias("__mn"),
+            )
+            inter_adj = pairs_adj.groupBy("id_a", "id_b").agg(F.sum("__mn").alias("inter"))
+            inter = inter.unionByName(inter_adj)
 
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("size").alias("size_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("size").alias("size_b"))
-    scored = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")))
-    )
-    return scored.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        sa = sizes.select(F.col("id").alias("id_a"), F.col("size").alias("size_a"))
+        sb = sizes.select(F.col("id").alias("id_b"), F.col("size").alias("size_b"))
+        scored = (
+            inter.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn("jaccard", F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")))
+        )
+        return scope.result(
+            scored.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -425,81 +434,84 @@ def ngram_jaccard_pairs_prefix(
         tok = exploded.groupBy("id", *blocks, "tok").agg(F.count(F.lit(1)).alias("cnt"))
     else:
         tok = exploded.distinct().withColumn("cnt", F.lit(1))
-    # one materialization feeds the element index, sizes, and verify
-    tok = tok.localCheckpoint()
-    sizes = tok.groupBy("id").agg(F.sum("cnt").alias("size"))
+    with checkpoint_scope(df.sparkSession) as scope:
+        # one materialization feeds the element index, sizes, and verify
+        tok = scope.checkpoint(tok)
+        sizes = tok.groupBy("id").agg(F.sum("cnt").alias("size"))
 
-    # element expansion: (tok, k) for k = 1..cnt — identity for sets
-    elems = tok.select(
-        "id",
-        *blocks,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("cnt")),
-                lambda k: F.struct(F.col("tok").alias("t"), k.alias("k")),
-            )
-        ).alias("e"),
-    )
-    edf = elems.groupBy("e").agg(F.count(F.lit(1)).alias("df"))
-    w = W.partitionBy("id").orderBy(
-        F.col("df").asc(), F.col("e.t").asc(), F.col("e.k").asc()
-    )
-    prefix = (
-        elems.join(edf, "e")
-        .withColumn("__pos", F.row_number().over(w))
-        .join(sizes, "id")
-        # p = |X| − ⌈t·|X|⌉ + 1: the prefix the theorem needs
-        .filter(F.col("__pos") <= F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1)
-        .select("id", *blocks, "e", "size")
-    )
-    a = prefix.select(
-        F.col("id").alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in blocks],
-        F.col("e").alias("e_a"),
-        F.col("size").alias("size_a"),
-    )
-    b = prefix.select(
-        F.col("id").alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in blocks],
-        F.col("e").alias("e_b"),
-        F.col("size").alias("size_b"),
-    )
-    # length filter (PPJoin): J ≥ t forces t·|B| ≤ |A| — sizes within a
-    # factor t of each other — also lossless (inter ≤ min, union ≥ max).
-    # e_a/e_b are DISTINCT names: both sides derive from one plan, and a
-    # shared name would resolve to a trivially-true self-equality — the
-    # join silently becomes the cross product the prefix exists to avoid.
-    cond = (
-        (F.col("e_a") == F.col("e_b"))
-        & (F.col("id_a") < F.col("id_b"))
-        & (F.col("size_a") >= F.ceil(F.lit(threshold) * F.col("size_b")))
-        & (F.col("size_b") >= F.ceil(F.lit(threshold) * F.col("size_a")))
-    )
-    for c in blocks:
-        cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    cands = a.join(b, on=cond).select("id_a", "id_b").distinct().localCheckpoint()
-
-    # verify: exact bag/set intersection over candidate docs only
-    cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
-    vtok = tok.join(cand_ids, "id", "leftsemi").select("id", "tok", "cnt")
-    ta = vtok.select(F.col("id").alias("id_a"), "tok", F.col("cnt").alias("cnt_a"))
-    tb = vtok.select(F.col("id").alias("id_b"), "tok", F.col("cnt").alias("cnt_b"))
-    inter = (
-        cands.join(ta, "id_a")
-        .join(tb, ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.least("cnt_a", "cnt_b")).alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("size").alias("size_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("size").alias("size_b"))
-    scored = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard", F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+        # element expansion: (tok, k) for k = 1..cnt — identity for sets
+        elems = tok.select(
+            "id",
+            *blocks,
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.col("cnt")),
+                    lambda k: F.struct(F.col("tok").alias("t"), k.alias("k")),
+                )
+            ).alias("e"),
         )
-    )
-    return scored.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        edf = elems.groupBy("e").agg(F.count(F.lit(1)).alias("df"))
+        w = W.partitionBy("id").orderBy(
+            F.col("df").asc(), F.col("e.t").asc(), F.col("e.k").asc()
+        )
+        prefix = (
+            elems.join(edf, "e")
+            .withColumn("__pos", F.row_number().over(w))
+            .join(sizes, "id")
+            # p = |X| − ⌈t·|X|⌉ + 1: the prefix the theorem needs
+            .filter(F.col("__pos") <= F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1)
+            .select("id", *blocks, "e", "size")
+        )
+        a = prefix.select(
+            F.col("id").alias("id_a"),
+            *[F.col(c).alias(f"{c}_a") for c in blocks],
+            F.col("e").alias("e_a"),
+            F.col("size").alias("size_a"),
+        )
+        b = prefix.select(
+            F.col("id").alias("id_b"),
+            *[F.col(c).alias(f"{c}_b") for c in blocks],
+            F.col("e").alias("e_b"),
+            F.col("size").alias("size_b"),
+        )
+        # length filter (PPJoin): J ≥ t forces t·|B| ≤ |A| — sizes within a
+        # factor t of each other — also lossless (inter ≤ min, union ≥ max).
+        # e_a/e_b are DISTINCT names: both sides derive from one plan, and a
+        # shared name would resolve to a trivially-true self-equality — the
+        # join silently becomes the cross product the prefix exists to avoid.
+        cond = (
+            (F.col("e_a") == F.col("e_b"))
+            & (F.col("id_a") < F.col("id_b"))
+            & (F.col("size_a") >= F.ceil(F.lit(threshold) * F.col("size_b")))
+            & (F.col("size_b") >= F.ceil(F.lit(threshold) * F.col("size_a")))
+        )
+        for c in blocks:
+            cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
+        cands = scope.checkpoint(a.join(b, on=cond).select("id_a", "id_b").distinct())
+
+        # verify: exact bag/set intersection over candidate docs only
+        cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
+        vtok = tok.join(cand_ids, "id", "leftsemi").select("id", "tok", "cnt")
+        ta = vtok.select(F.col("id").alias("id_a"), "tok", F.col("cnt").alias("cnt_a"))
+        tb = vtok.select(F.col("id").alias("id_b"), "tok", F.col("cnt").alias("cnt_b"))
+        inter = (
+            cands.join(ta, "id_a")
+            .join(tb, ["id_b", "tok"])
+            .groupBy("id_a", "id_b")
+            .agg(F.sum(F.least("cnt_a", "cnt_b")).alias("inter"))
+        )
+        sa = sizes.select(F.col("id").alias("id_a"), F.col("size").alias("size_a"))
+        sb = sizes.select(F.col("id").alias("id_b"), F.col("size").alias("size_b"))
+        scored = (
+            inter.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn(
+                "jaccard", F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+            )
+        )
+        return scope.result(
+            scored.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        )
 
 
 def ngram_containment_pairs(
@@ -534,48 +546,51 @@ def ngram_containment_pairs(
     sh = df.select(F.col(id_col).alias("id"), *(block_cols or []), shingles(text_col, n).alias("sh"))
     exploded = sh.select("id", *(block_cols or []), F.explode("sh").alias("tok"))
     tok = exploded.groupBy("id", *(block_cols or []), "tok").agg(F.count(F.lit(1)).alias("cnt"))
-    tok = tok.localCheckpoint()
-    if max_token_df is not None:
-        hot = (
-            tok.groupBy("tok")
-            .agg(F.countDistinct("id").alias("df"))
-            .filter(F.col("df") > max_token_df)
-            .select("tok")
+    with checkpoint_scope(df.sparkSession) as scope:
+        tok = scope.checkpoint(tok)
+        if max_token_df is not None:
+            hot = (
+                tok.groupBy("tok")
+                .agg(F.countDistinct("id").alias("df"))
+                .filter(F.col("df") > max_token_df)
+                .select("tok")
+            )
+            tok = tok.join(F.broadcast(hot), on="tok", how="left_anti")
+        # Sizes are taken AFTER the hot-token cap, unlike the Jaccard
+        # operator's deliberate lower bound: a containment score with capped
+        # tokens removed from the numerator but not the min(|A|,|B|)
+        # denominator deflates, silently dropping true pairs at the
+        # threshold. Post-cap sizes keep the score an unbiased containment
+        # over the RETAINED token bag — the cap then only redefines the
+        # universe (stop-shingles carry no subset-duplication signal), it
+        # never biases the ratio.
+        sizes = tok.groupBy("id").agg(F.sum("cnt").alias("size"))
+        a = tok.select(
+            F.col("id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in (block_cols or [])],
+            F.col("tok"), F.col("cnt").alias("cnt_a"),
         )
-        tok = tok.join(F.broadcast(hot), on="tok", how="left_anti")
-    # Sizes are taken AFTER the hot-token cap, unlike the Jaccard
-    # operator's deliberate lower bound: a containment score with capped
-    # tokens removed from the numerator but not the min(|A|,|B|)
-    # denominator deflates, silently dropping true pairs at the
-    # threshold. Post-cap sizes keep the score an unbiased containment
-    # over the RETAINED token bag — the cap then only redefines the
-    # universe (stop-shingles carry no subset-duplication signal), it
-    # never biases the ratio.
-    sizes = tok.groupBy("id").agg(F.sum("cnt").alias("size"))
-    a = tok.select(
-        F.col("id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in (block_cols or [])],
-        F.col("tok"), F.col("cnt").alias("cnt_a"),
-    )
-    b = tok.select(
-        F.col("id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in (block_cols or [])],
-        F.col("tok"), F.col("cnt").alias("cnt_b"),
-    )
-    cond = (a["tok"] == b["tok"]) & (a["id_a"] < b["id_b"])
-    for c in block_cols or []:
-        cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    inter = (
-        a.join(b, on=cond, how="inner")
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.least("cnt_a", "cnt_b")).alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("size").alias("size_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("size").alias("size_b"))
-    scored = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("containment", F.col("inter") / F.least("size_a", "size_b"))
-    )
-    return scored.filter(F.col("containment") >= threshold).select("id_a", "id_b", "containment")
+        b = tok.select(
+            F.col("id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in (block_cols or [])],
+            F.col("tok"), F.col("cnt").alias("cnt_b"),
+        )
+        cond = (a["tok"] == b["tok"]) & (a["id_a"] < b["id_b"])
+        for c in block_cols or []:
+            cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
+        inter = (
+            a.join(b, on=cond, how="inner")
+            .groupBy("id_a", "id_b")
+            .agg(F.sum(F.least("cnt_a", "cnt_b")).alias("inter"))
+        )
+        sa = sizes.select(F.col("id").alias("id_a"), F.col("size").alias("size_a"))
+        sb = sizes.select(F.col("id").alias("id_b"), F.col("size").alias("size_b"))
+        scored = (
+            inter.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn("containment", F.col("inter") / F.least("size_a", "size_b"))
+        )
+        return scope.result(
+            scored.filter(F.col("containment") >= threshold).select("id_a", "id_b", "containment")
+        )
 
 
 def minhash_lsh_candidates(
@@ -612,7 +627,8 @@ def minhash_lsh_candidates(
     non-hub pairs within oversized buckets — a documented recall trade;
     ``None`` (default) keeps the exhaustive all-pairs behavior.
 
-    Returns distinct (id_a, id_b) candidate pairs (unverified).
+    Returns distinct (id_a, id_b) candidate pairs (unverified),
+    materialized by :meth:`session.CheckpointScope.result`.
     """
     rows_per_band = num_hashes // bands
     if hash_family == "md5":
@@ -642,42 +658,43 @@ def minhash_lsh_candidates(
             )
         ).alias("b"),
     ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    # materialize the band index once — the self-join would otherwise
-    # recompute the full signature pipeline for BOTH sides. The banded
-    # relation is (id, band, bh): bands × n_docs small fixed-width rows —
-    # the signature index you would persist anyway at 100 TB.
-    banded = banded.localCheckpoint()
-    star = None
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
+    with checkpoint_scope(df.sparkSession) as scope:
+        # materialize the band index once — the self-join would otherwise
+        # recompute the full signature pipeline for BOTH sides. The banded
+        # relation is (id, band, bh): bands × n_docs small fixed-width rows —
+        # the signature index you would persist anyway at 100 TB.
+        banded = scope.checkpoint(banded)
+        star = None
+        if max_bucket_size is not None:
+            from pyspark.sql import Window
 
-        w = Window.partitionBy("band", "bh")
-        stats = banded.select(
-            "id",
-            "band",
-            "bh",
-            F.count("*").over(w).alias("__k"),
-            F.min("id").over(w).alias("__hub"),
+            w = Window.partitionBy("band", "bh")
+            stats = banded.select(
+                "id",
+                "band",
+                "bh",
+                F.count("*").over(w).alias("__k"),
+                F.min("id").over(w).alias("__hub"),
+            )
+            star = (
+                stats.filter((F.col("__k") > max_bucket_size) & (F.col("id") != F.col("__hub")))
+                .select(F.col("__hub").alias("id_a"), F.col("id").alias("id_b"))
+            )
+            banded = stats.filter(F.col("__k") <= max_bucket_size).select("id", "band", "bh")
+        left = banded.alias("l")
+        right = banded.alias("r")
+        pairs = (
+            left.join(
+                right,
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col("l.bh") == F.col("r.bh"))
+                & (F.col("l.id") < F.col("r.id")),
+            )
+            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         )
-        star = (
-            stats.filter((F.col("__k") > max_bucket_size) & (F.col("id") != F.col("__hub")))
-            .select(F.col("__hub").alias("id_a"), F.col("id").alias("id_b"))
-        )
-        banded = stats.filter(F.col("__k") <= max_bucket_size).select("id", "band", "bh")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-    )
-    if star is not None:
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()
+        if star is not None:
+            pairs = pairs.unionByName(star)
+        return scope.result(pairs.distinct())
 
 
 def minhash_near_dups(
@@ -697,39 +714,43 @@ def minhash_near_dups(
     :func:`minhash_lsh_candidates`) — verified output then contains the
     hub pairs of oversized buckets rather than all k² members.
 
-    The candidate set is materialized once (``localCheckpoint`` — it is
-    tiny after banding, and it feeds two consumers) and its ids are
-    broadcast-semi-joined against the corpus BEFORE shingle arrays are
-    built, so verification computes payload arrays only for documents
-    that appear in some candidate pair — at 100 TB that is the
-    difference between re-scanning the corpus and touching a few
+    The candidate set comes back materialized from
+    :func:`minhash_lsh_candidates` (driver-local rows, or its one pinned
+    checkpoint, which this call adopts and releases) and feeds two
+    consumers: its ids are semi-joined against the corpus BEFORE shingle
+    arrays are built, so verification computes payload arrays only for
+    documents that appear in some candidate pair — at 100 TB that is
+    the difference between re-scanning the corpus and touching a few
     thousand rows."""
-    cands = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, n, hash_family, max_bucket_size
-    ).localCheckpoint()
-    cand_ids = cands.select(
-        F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
-    ).distinct()
-    # no broadcast hint: cand_ids is usually tiny (AQE will broadcast it
-    # at runtime) but is unbounded in the worst case — a forced broadcast
-    # would hard-fail at the 8 GB exchange limit exactly when banding
-    # saturates, where a semi join only degrades
-    relevant = df.join(cand_ids, on=id_col, how="leftsemi")
-    sets_df = ensure_min_parallelism(relevant).select(
-        F.col(id_col).alias("id"), F.array_distinct(shingles(text_col, n)).alias("toks")
-    )
-    a = sets_df.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
-    b = sets_df.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
-    verified = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("toks_a", "toks_b"))
-            / F.size(F.array_union("toks_a", "toks_b")),
+    with checkpoint_scope(df.sparkSession) as scope:
+        cands = scope.adopt(minhash_lsh_candidates(
+            df, id_col, text_col, num_hashes, bands, n, hash_family, max_bucket_size
+        ))
+        cand_ids = cands.select(
+            F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
+        ).distinct()
+        # no broadcast hint: cand_ids is usually tiny (AQE will broadcast it
+        # at runtime) but is unbounded in the worst case — a forced broadcast
+        # would hard-fail at the 8 GB exchange limit exactly when banding
+        # saturates, where a semi join only degrades
+        relevant = df.join(cand_ids, on=id_col, how="leftsemi")
+        sets_df = ensure_min_parallelism(relevant).select(
+            F.col(id_col).alias("id"), F.array_distinct(shingles(text_col, n)).alias("toks")
         )
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        a = sets_df.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
+        b = sets_df.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
+        verified = (
+            cands.join(a, "id_a")
+            .join(b, "id_b")
+            .withColumn(
+                "jaccard",
+                F.size(F.array_intersect("toks_a", "toks_b"))
+                / F.size(F.array_union("toks_a", "toks_b")),
+            )
+        )
+        return scope.result(
+            verified.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -771,27 +792,28 @@ def simhash_near_dups(
     blocks = sig.select("id", "sig", F.explode(block_structs).alias("b")).select(
         "id", "sig", F.col("b.blk").alias("blk"), F.col("b.bv").alias("bv")
     )
-    # materialize the block index once — the self-join would recompute
-    # the signature map stage for both sides (same policy as the MinHash
-    # band index; (id, sig, blk, bv) is 4 longs × nblocks per doc)
-    blocks = blocks.localCheckpoint()
-    l, r = blocks.alias("l"), blocks.alias("r")
-    cands = (
-        l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.bv") == F.col("r.bv")) & (F.col("l.id") < F.col("r.id")))
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
+    with checkpoint_scope(df.sparkSession) as scope:
+        # materialize the block index once — the self-join would recompute
+        # the signature map stage for both sides (same policy as the MinHash
+        # band index; (id, sig, blk, bv) is 4 longs × nblocks per doc)
+        blocks = scope.checkpoint(blocks)
+        l, r = blocks.alias("l"), blocks.alias("r")
+        cands = (
+            l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.bv") == F.col("r.bv")) & (F.col("l.id") < F.col("r.id")))
+            .select(
+                F.col("l.id").alias("id_a"),
+                F.col("r.id").alias("id_b"),
+                F.col("l.sig").alias("sig_a"),
+                F.col("r.sig").alias("sig_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+        hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+        return scope.result(
+            cands.withColumn("hamming", hamming)
+            .filter(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -855,62 +877,61 @@ def connected_components(
 
     If ``max_iter`` rounds pass without the fixpoint the function RAISES
     rather than return silently-split clusters (the default allows
-    diameters ~2^20). Each round ``localCheckpoint``s its label table:
-    caching alone is NOT enough for iterative plans — the logical plan
-    still grows per round and Catalyst analysis time explodes; the
-    checkpoint truncates lineage to a leaf."""
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .cache()  # materialize ONCE — every round re-joins these edges, and
-        # without the cache each iteration would re-execute the (expensive)
-        # upstream pair-generation plan from scratch
-    )
-    if nodes is None:
-        nodes = edges.select(F.col("src").alias("id")).distinct()
-    labels = nodes.select("id", F.col("id").alias("cluster_id")).localCheckpoint()
+    diameters ~2^20). Each round checkpoints its label table (caching
+    alone is NOT enough for iterative plans — the logical plan still
+    grows per round and Catalyst analysis time explodes; the checkpoint
+    truncates lineage to a leaf) and releases the previous round's once
+    the new one exists. The final labels follow
+    :meth:`session.CheckpointScope.result`: driver-local rows when small,
+    else one pinned checkpoint the caller releases."""
+    with checkpoint_scope(pairs.sparkSession) as scope:
+        # materialized ONCE: every round re-joins these edges, and each
+        # iteration would otherwise re-execute the (expensive) upstream
+        # pair-generation plan from scratch
+        edges = scope.checkpoint(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+            .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+            .distinct()
+        )
+        if nodes is None:
+            nodes = edges.select(F.col("src").alias("id")).distinct()
+        labels = scope.checkpoint(nodes.select("id", F.col("id").alias("cluster_id")))
 
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        prop = labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
-            "id",
-            F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
-                "cluster_id"
-            ),
-        )
-        # pointer jumping: follow the label one more level in the SAME
-        # round (label(label(v))). Every label is a node id, so the
-        # self-join always matches; chains halve each round.
-        jump = prop.select(F.col("id").alias("__pid"), F.col("cluster_id").alias("__pcl"))
-        new_labels = (
-            prop.join(jump, prop.cluster_id == jump.__pid, "left")
-            .select("id", F.coalesce("__pcl", "cluster_id").alias("cluster_id"))
-            .localCheckpoint()  # truncate lineage — see docstring
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (component diameter exceeds it); raise max_iter"
-        )
-    return labels
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src")
+                .agg(F.min("cluster_id").alias("nbr_min"))
+            )
+            prop = labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
+                "id",
+                F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
+                    "cluster_id"
+                ),
+            )
+            # pointer jumping: follow the label one more level in the SAME
+            # round (label(label(v))). Every label is a node id, so the
+            # self-join always matches; chains halve each round.
+            jump = prop.select(F.col("id").alias("__pid"), F.col("cluster_id").alias("__pcl"))
+            new_labels = scope.checkpoint(  # truncate lineage — see docstring
+                prop.join(jump, prop.cluster_id == jump.__pid, "left")
+                .select("id", F.coalesce("__pcl", "cluster_id").alias("cluster_id"))
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "id")
+                .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
+                .limit(1)
+                .count()
+            )
+            scope.release(labels)
+            labels = new_labels
+            if changed == 0:
+                return scope.result(labels)
+    raise RuntimeError(
+        f"connected_components did not converge within max_iter={max_iter} "
+        "rounds (component diameter exceeds it); raise max_iter"
+    )
 
 
 # ---------------------------------------------------------------------------

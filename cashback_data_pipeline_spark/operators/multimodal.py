@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.operators.text import ensure_min_parallelism
+from cashback_data_pipeline_spark.session import checkpoint_scope
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -1605,55 +1606,57 @@ def hamming_band_pairs(
     the exact Hamming re-check (``bit_count(a XOR b)``, whole-stage
     codegen) keeps precision exact. Input: (id, <hash_col>) — the
     shuffle carries 8-byte hashes, never payloads. Returns
-    (a_id, b_id, hamming), a_id < b_id, one row per pair."""
+    (a_id, b_id, hamming), a_id < b_id, one row per pair, materialized
+    by :meth:`session.CheckpointScope.result`."""
     if not 0 <= max_hamming <= 3:
         raise ValueError(
             f"max_hamming={max_hamming}: 4 bands guarantee exact recall only "
             "for Hamming <= 3 (pigeonhole); raise the band count for more"
         )
-    # materialize the hash relation ONCE (OPTIMIZATION r12, guide §5):
-    # both sides of the band self-join below consume it, and without
-    # this every upstream stage — including the decode/fingerprint
-    # Python kernels that produced the hashes — executes twice, once
-    # per side (measured: two full kernel stages per near-dup query).
-    # The relation is (id, hash) longs, ~16 bytes/row at any scale.
-    hashes = hashes.localCheckpoint()
-    bands = hashes.select(
-        "id",
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(hash_col, 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for i in range(4)
-                ]
+    with checkpoint_scope(hashes.sparkSession) as scope:
+        # materialize the hash relation ONCE (OPTIMIZATION r12, guide §5):
+        # both sides of the band self-join below consume it, and without
+        # this every upstream stage — including the decode/fingerprint
+        # Python kernels that produced the hashes — executes twice, once
+        # per side (measured: two full kernel stages per near-dup query).
+        # The relation is (id, hash) longs, ~16 bytes/row at any scale.
+        hashes = scope.checkpoint(hashes)
+        bands = hashes.select(
+            "id",
+            hash_col,
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(i).alias("band"),
+                            F.shiftrightunsigned(hash_col, 16 * i)
+                            .bitwiseAND(F.lit(0xFFFF))
+                            .alias("val"),
+                        )
+                        for i in range(4)
+                    ]
+                )
+            ).alias("b"),
+        ).select("id", hash_col, "b.band", "b.val")
+        a, b = bands.alias("a"), bands.alias("b")
+        pairs = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.val") == F.col("b.val"))
+                & (F.col("a.id") < F.col("b.id")),
             )
-        ).alias("b"),
-    ).select("id", hash_col, "b.band", "b.val")
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
+            .select(
+                F.col("a.id").alias("a_id"),
+                F.col("b.id").alias("b_id"),
+                F.bit_count(
+                    F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+                ).alias("hamming"),
+            )
+            .filter(F.col("hamming") <= max_hamming)
+            .distinct()  # a pair may share several bands; one row per pair
         )
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a pair may share several bands; one row per pair
-    )
-    return pairs
+        return scope.result(pairs)
 
 
 def audio_fingerprint(payload: bytes, n_frames: int = 65) -> int:

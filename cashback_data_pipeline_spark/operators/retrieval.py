@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from cashback_data_pipeline_spark.session import local_rows_df
+from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
 
 
 def _q6(c: Column) -> Column:
@@ -415,11 +415,10 @@ def _commit_index_delta(
         # the commit's two sizes are observed while the checkpoints that
         # materialize base and tf run (n_new = rows of base, delta_tokens
         # = Σtf): no sizing job of their own
-        n_obs, t_obs = Observation(), Observation()
-        base = base.observe(n_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        tf = None
-        try:
-            n_new = int(n_obs.get["n"])
+        t_obs = Observation()
+        with checkpoint_scope(spark) as scope:
+            base = scope.checkpoint(base)
+            n_new = scope.rows(base)
             if n_new == 0 and cur is not None:
                 return None  # nothing genuinely new — no version churn
             tf = doc_terms(base, id_col, text_col).groupBy("term", id_col).agg(
@@ -431,7 +430,7 @@ def _commit_index_delta(
             # full ~7 s 32-task tokenize stages per commit. tf is the
             # compact (term, id, tf) relation; checkpoint it so tokenize
             # runs once.
-            tf = tf.observe(t_obs, F.coalesce(F.sum("tf"), F.lit(0)).alias("t")).localCheckpoint()
+            tf = scope.checkpoint(tf.observe(t_obs, F.coalesce(F.sum("tf"), F.lit(0)).alias("t")))
             delta_tokens = int(t_obs.get["t"])
             # df per term = its tf rows in this delta plus the committed
             # df, folded in the ONE shuffle that also lays the store out
@@ -519,18 +518,6 @@ def _commit_index_delta(
                 return (cur or 0) + 1
             # CAS lost: a racing writer committed — recompute this delta
             # against the winner's version (orphaned files → vacuum)
-        finally:
-            from cashback_data_pipeline_spark.session import (
-                checkpointed_rdd_id,
-                unpersist_rdd_ids,
-            )
-
-            rids = {checkpointed_rdd_id(base)}
-            if tf is not None:
-                rids.add(checkpointed_rdd_id(tf))
-            rids.discard(None)
-            if rids:
-                unpersist_rdd_ids(spark, rids)
 
 
 def compact_inverted_index(spark, table: str) -> int:

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.operators.text import ensure_min_parallelism
+from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -686,84 +687,76 @@ def _commit_ivf_delta(
 
     from cashback_data_pipeline_spark.sinks import manifest as M
 
-    from cashback_data_pipeline_spark.session import (
-        checkpointed_rdd_id,
-        unpersist_rdd_ids,
-    )
-
     spark = vectors.sparkSession
     while True:
-        cur = M.current_version(table)
-        ckpts: set = set()
-        if cur is None:
-            if n_centroids is None:
-                raise FileNotFoundError(
-                    f"no committed IVF index in {table}; ivf_build_index_manifest first"
+        with checkpoint_scope(spark) as scope:
+            cur = M.current_version(table)
+            if cur is None:
+                if n_centroids is None:
+                    raise FileNotFoundError(
+                        f"no committed IVF index in {table}; ivf_build_index_manifest first"
+                    )
+                # checkpointed: the seed pipeline (scan + global sort + limit
+                # + window) otherwise executes twice — the assign broadcast
+                # and the centroids store write; the row count observed as
+                # it materializes is the emptiness check (OPTIMIZATION r12,
+                # guide §5; k rows, memory-trivial)
+                cents = scope.checkpoint(
+                    make_centroids_from_sample(vectors, n_centroids, id_col, vec_col)
                 )
-            # checkpointed: the seed pipeline (scan + global sort + limit
-            # + window) otherwise executes THREE times — the emptiness
-            # check, the assign broadcast, and the centroids store write
-            # (OPTIMIZATION r12, guide §5; k rows, memory-trivial)
-            cents = make_centroids_from_sample(
-                vectors, n_centroids, id_col, vec_col
-            ).localCheckpoint()
-            ckpts.add(checkpointed_rdd_id(cents))
-            if not cents.head(1):
-                # the quantizer is FROZEN at build: an empty centroid set
-                # would silently drop every future delta's vectors
-                # (ivf_assign against nothing) while still committing
-                # versions — refuse instead
-                unpersist_rdd_ids(spark, {i for i in ckpts if i is not None})
-                raise ValueError(
-                    "cannot build an IVF manifest index from an empty corpus: "
-                    "the frozen coarse quantizer would have no centroids and "
-                    "every future upsert_ivf_index delta would be dropped"
-                )
-            if refine_iters > 0:
-                cents = kmeans_refine(vectors, cents, n_iter=refine_iters, id_col=id_col, vec_col=vec_col)
-            layout = {
-                "kind": "ivf_index",
-                "n_centroids": n_centroids,
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "quantize": quantize,
-                "spill": spill,
-                "id_field": vectors.schema[id_col].jsonValue(),
-            }
-            prev = None
-            old_files: list[str] = []
-            fresh = vectors
-        else:
-            prev = M.read_manifest(table, cur)
-            layout = prev["meta"]["layout"]
-            if delta_id is not None and delta_id in prev["meta"].get("delta_ids", []):
-                return None
-            id_col, vec_col, quantize = layout["id_col"], layout["vec_col"], layout["quantize"]
-            spill = layout.get("spill", 1)
-            cents = M.read_store(spark, table, "centroids", version=cur)
-            keep = set(M.store_files(prev, "lists")) | set(M.store_files(prev, "centroids"))
-            old_files = [f for f in prev["files"] if f in keep]
-            known = M.read_store(
-                spark,
-                table,
-                "lists",
-                version=cur,
-                # empty-store fallback (a v1 built from an empty corpus):
-                # the manifest schema is the listed-vector schema
-                schema=T.StructType.fromJson(json.loads(prev["schema"])),
-            ).select(F.col(id_col))
-            # checkpointed: the anti-join otherwise executes twice (the
-            # no-op redelivery check and the commit write); the
-            # materialized relation is the delta batch itself — exactly
-            # what this commit is about to write (OPTIMIZATION r12,
-            # guide §5, same move as the inverted-index delta commit)
-            fresh = vectors.join(known, id_col, "left_anti").localCheckpoint()
-            ckpts.add(checkpointed_rdd_id(fresh))
-            if not fresh.head(1):
-                unpersist_rdd_ids(spark, {i for i in ckpts if i is not None})
-                return None  # full redelivery — no version churn
+                if scope.rows(cents) == 0:
+                    # the quantizer is FROZEN at build: an empty centroid set
+                    # would silently drop every future delta's vectors
+                    # (ivf_assign against nothing) while still committing
+                    # versions — refuse instead
+                    raise ValueError(
+                        "cannot build an IVF manifest index from an empty corpus: "
+                        "the frozen coarse quantizer would have no centroids and "
+                        "every future upsert_ivf_index delta would be dropped"
+                    )
+                if refine_iters > 0:
+                    cents = kmeans_refine(vectors, cents, n_iter=refine_iters, id_col=id_col, vec_col=vec_col)
+                layout = {
+                    "kind": "ivf_index",
+                    "n_centroids": n_centroids,
+                    "id_col": id_col,
+                    "vec_col": vec_col,
+                    "quantize": quantize,
+                    "spill": spill,
+                    "id_field": vectors.schema[id_col].jsonValue(),
+                }
+                prev = None
+                old_files: list[str] = []
+                fresh = vectors
+            else:
+                prev = M.read_manifest(table, cur)
+                layout = prev["meta"]["layout"]
+                if delta_id is not None and delta_id in prev["meta"].get("delta_ids", []):
+                    return None
+                id_col, vec_col, quantize = layout["id_col"], layout["vec_col"], layout["quantize"]
+                spill = layout.get("spill", 1)
+                cents = M.read_store(spark, table, "centroids", version=cur)
+                keep = set(M.store_files(prev, "lists")) | set(M.store_files(prev, "centroids"))
+                old_files = [f for f in prev["files"] if f in keep]
+                known = M.read_store(
+                    spark,
+                    table,
+                    "lists",
+                    version=cur,
+                    # empty-store fallback (a v1 built from an empty corpus):
+                    # the manifest schema is the listed-vector schema
+                    schema=T.StructType.fromJson(json.loads(prev["schema"])),
+                ).select(F.col(id_col))
+                # checkpointed: the anti-join otherwise executes for the
+                # no-op redelivery check (its observed row count here) and
+                # again for the commit write; the materialized relation is
+                # the delta batch itself — exactly what this commit is about
+                # to write (OPTIMIZATION r12, guide §5, same move as the
+                # inverted-index delta commit)
+                fresh = scope.checkpoint(vectors.join(known, id_col, "left_anti"))
+                if scope.rows(fresh) == 0:
+                    return None  # full redelivery — no version churn
 
-        try:
             # in-batch id dedup (deterministic winner by vector hash): a
             # redelivered vector arriving twice IN ONE delta would insert two
             # list entries — the anti-join above only screens committed ids
@@ -827,10 +820,6 @@ def _commit_ivf_delta(
             ):
                 return (cur or 0) + 1
             # CAS lost — recompute against the winner (orphans → vacuum)
-        finally:
-            rids = {i for i in ckpts if i is not None}
-            if rids:
-                unpersist_rdd_ids(spark, rids)
 
 
 def compact_ivf_index(
@@ -993,12 +982,13 @@ def ivf_query_index_manifest(
         )
 
     cents = M.read_store(spark, table, "centroids", version=v)
-    # checkpointed: the probe pipeline (broadcast-join + window top-n)
-    # otherwise executes twice — once for the list-pruning id collect
-    # below and again inside the scoring plan's broadcast
-    # (OPTIMIZATION r12, guide §5; n_queries×n_probe rows)
-    probes = _probe_centroids(queries, cents, n_probe, id_col, vec_col).localCheckpoint()
-    want = {r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()}
+    # collected once: the probes (n_queries×n_probe rows) are broadcast
+    # into the scoring join anyway, so they are driver-sized by
+    # construction; the list-pruning ids come from the same rows and the
+    # probe pipeline (broadcast-join + window top-n) runs one job
+    probes = _probe_centroids(queries, cents, n_probe, id_col, vec_col)
+    probe_rows = probes.toArrow()
+    want = set(probe_rows.column("centroid_id").to_pylist())
     if not want:
         # empty query set (or an index with zero centroids): nothing to
         # probe — empty result, not a FileNotFoundError from an
@@ -1023,7 +1013,7 @@ def ivf_query_index_manifest(
     cands = _lists_as_candidates(lists, id_col, vec_col)
     return _score_probed_lists(
         cands,
-        probes,
+        spark.createDataFrame(probe_rows, probes.schema),
         k,
         rescore_with,
         rescore_factor,
@@ -1227,7 +1217,8 @@ def semantic_dedup(
     two Lloyd rounds), at k× the membership rows, still linear total
     work; see RECALL.json). The keep decision and ``centroid_id`` stay
     keyed to the PRIMARY cluster; ``max_prior_cos`` is the max across
-    all shared pools.
+    all shared pools. With ``memberships`` > 1 the result is materialized
+    by :meth:`session.CheckpointScope.result`.
     """
     import math
 
@@ -1242,63 +1233,64 @@ def semantic_dedup(
     cents = make_centroids_from_sample(df, n_clusters, id_col, vec_col)
     if refine_iters > 0:
         cents = kmeans_refine(df, cents, n_iter=refine_iters, id_col=id_col, vec_col=vec_col)
-    if memberships > 1:
-        # checkpointed because BOTH downstream legs (the rank-1 primary
-        # assignment and the pair-pool prior) consume it: without this
-        # the n×k broadcast-score + window plan executes twice
-        # (OPTIMIZATION r12, guide §5 — reuse beats recompute here; the
-        # relation is n·k (id, vec, cid, rank) rows, memory-trivial
-        # relative to the corpus it derives from)
-        member = ivf_assign_topk(
-            df, cents, k=memberships, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint()
-        assigned = member.filter(F.col("member_rank") == 1).drop("member_rank")
-    else:
-        assigned = ivf_assign(df, cents, id_col, vec_col)
-        member = assigned
+    with checkpoint_scope(df.sparkSession) as scope:
+        if memberships > 1:
+            # checkpointed because BOTH downstream legs (the rank-1 primary
+            # assignment and the pair-pool prior) consume it: without this
+            # the n×k broadcast-score + window plan executes twice
+            # (OPTIMIZATION r12, guide §5 — reuse beats recompute here; the
+            # relation is n·k (id, vec, cid, rank) rows, memory-trivial
+            # relative to the corpus it derives from)
+            member = scope.checkpoint(
+                ivf_assign_topk(df, cents, k=memberships, id_col=id_col, vec_col=vec_col)
+            )
+            assigned = member.filter(F.col("member_rank") == 1).drop("member_rank")
+        else:
+            assigned = ivf_assign(df, cents, id_col, vec_col)
+            member = assigned
 
-    # per-cluster GEMM for the smaller-id prior maximum (one applyInPandas
-    # group per cluster): sims = M @ M.T on the id-sorted cluster matrix,
-    # then column p's prior max is max(sims[:p, p]). Emits rows ONLY for
-    # members that have a prior (not the cluster minimum), so the left
-    # join below leaves max_prior_cos NULL exactly as the relational
-    # formulation did. ~100x the expression-cosine join's per-pair
-    # throughput and no two-arrays-per-row join materialization.
-    def cluster_prior(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame({"id_b": pd.Series(dtype="int64"),
-                                 "max_prior_cos": pd.Series(dtype="float64")})
-        order = np.argsort(ids)
-        ids = ids[order]
-        mat = np.array(list(pdf["v"].iloc[order]), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        sims = mat @ mat.T
-        prior_max = np.max(np.where(np.arange(len(ids))[:, None] < np.arange(len(ids))[None, :], sims, -np.inf), axis=0)[1:]
-        return pd.DataFrame({"id_b": ids[1:], "max_prior_cos": prior_max})
+        # per-cluster GEMM for the smaller-id prior maximum (one applyInPandas
+        # group per cluster): sims = M @ M.T on the id-sorted cluster matrix,
+        # then column p's prior max is max(sims[:p, p]). Emits rows ONLY for
+        # members that have a prior (not the cluster minimum), so the left
+        # join below leaves max_prior_cos NULL exactly as the relational
+        # formulation did. ~100x the expression-cosine join's per-pair
+        # throughput and no two-arrays-per-row join materialization.
+        def cluster_prior(pdf: pd.DataFrame) -> pd.DataFrame:
+            ids = pdf["id"].to_numpy()
+            if len(ids) < 2:
+                return pd.DataFrame({"id_b": pd.Series(dtype="int64"),
+                                     "max_prior_cos": pd.Series(dtype="float64")})
+            order = np.argsort(ids)
+            ids = ids[order]
+            mat = np.array(list(pdf["v"].iloc[order]), dtype=np.float64)
+            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+            sims = mat @ mat.T
+            prior_max = np.max(np.where(np.arange(len(ids))[:, None] < np.arange(len(ids))[None, :], sims, -np.inf), axis=0)[1:]
+            return pd.DataFrame({"id_b": ids[1:], "max_prior_cos": prior_max})
 
-    prior = (
-        member.select(
-            F.col("centroid_id"),
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+        prior = (
+            member.select(
+                F.col("centroid_id"),
+                F.col(id_col).alias("id"),
+                F.col(vec_col).cast("array<double>").alias("v"),
+            )
+            .groupBy("centroid_id")
+            .applyInPandas(cluster_prior, schema="id_b long, max_prior_cos double")
         )
-        .groupBy("centroid_id")
-        .applyInPandas(cluster_prior, schema="id_b long, max_prior_cos double")
-    )
-    if memberships > 1:
-        # a vector belongs to up to `memberships` pools; its prior is the
-        # max over every pool it shares with a smaller id
-        prior = prior.groupBy("id_b").agg(F.max("max_prior_cos").alias("max_prior_cos"))
-    return (
-        assigned.join(prior, assigned[id_col] == prior["id_b"], "left")
-        .select(
-            F.col(id_col),
-            "centroid_id",
-            "max_prior_cos",
-            (F.coalesce(F.col("max_prior_cos"), F.lit(-1.0)) < threshold).alias("keep"),
+        if memberships > 1:
+            # a vector belongs to up to `memberships` pools; its prior is the
+            # max over every pool it shares with a smaller id
+            prior = prior.groupBy("id_b").agg(F.max("max_prior_cos").alias("max_prior_cos"))
+        return scope.result(
+            assigned.join(prior, assigned[id_col] == prior["id_b"], "left")
+            .select(
+                F.col(id_col),
+                "centroid_id",
+                "max_prior_cos",
+                (F.coalesce(F.col("max_prior_cos"), F.lit(-1.0)) < threshold).alias("keep"),
+            )
         )
-    )
 
 
 def bucket_pairs_gemm(
@@ -1386,16 +1378,13 @@ def bucket_pairs_gemm(
     )
     # collect the (tiny: oversized buckets only) list to the driver and
     # rebuild it as a local relation: it is broadcast into both joins
-    # below anyway, and a localCheckpoint here would pin RDD blocks with
-    # no DataFrame-level unpersist handle for the session's lifetime on
-    # every skewed invocation
+    # below anyway, so a checkpoint would only add a pinned block set
+    # this function must then release or hand over
     oversized_rows = oversized_agg.collect()
     if not oversized_rows:
         # no skew: the cap costs exactly one (bucket, count) aggregate and
         # the plan IS the uncapped plan — no anti-join, no second scan
         return base.groupBy(*kcols).applyInPandas(kernel, schema="id_a long, id_b long, cos double")
-    from cashback_data_pipeline_spark.session import local_rows_df
-
     oversized = local_rows_df(base.sparkSession, oversized_rows, oversized_agg.schema)
     normal_pairs = base.join(
         F.broadcast(oversized.select(*kcols)), kcols, "left_anti"

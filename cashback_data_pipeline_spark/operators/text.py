@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
+
 
 #: logical-plan nodes whose presence means the input either already went
 #: through an exchange (so it is as wide as the shuffle layout chose) or
@@ -766,24 +768,9 @@ def bpe_train_merges(
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    from cashback_data_pipeline_spark.session import checkpointed_rdd_id, unpersist_rdd_ids
-
     UNK = "\x00"
     chars = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), ""), lambda c: c != "")
     seq0 = F.transform(chars, lambda c: F.when(c.rlike("^[a-z ]$"), c).otherwise(F.lit(UNK)))
-    # widen BEFORE the checkpoint: every round's pair count AND merge
-    # kernel inherits this partitioning (mapInPandas + localCheckpoint
-    # both preserve it), so a 1-split corpus would otherwise run the
-    # whole training loop on one core
-    cur = ensure_min_parallelism(
-        df.select(F.col(id_col).alias("id"), seq0.alias("seq"))
-    ).localCheckpoint()
-    # precise per-round unpersist handle: track ONLY the RDD backing
-    # `cur` (its LogicalRDD id) — a global persistent-RDD-set diff here
-    # would race a concurrent job on a shared session and could release
-    # ITS checkpoint blocks (truncated lineage: unrecoverable)
-    prev_ids = {i for i in [checkpointed_rdd_id(cur)] if i is not None}
-
     out_schema = T.StructType(
         [
             T.StructField("id", df.schema[id_col].dataType, False),
@@ -791,7 +778,14 @@ def bpe_train_merges(
         ]
     )
     learned: list[tuple[int, str, str, int, int]] = []
-    try:
+    with checkpoint_scope(spark) as scope:
+        # widen BEFORE the checkpoint: every round's pair count AND merge
+        # kernel inherits this partitioning (mapInPandas + localCheckpoint
+        # both preserve it), so a 1-split corpus would otherwise run the
+        # whole training loop on one core
+        cur = scope.checkpoint(
+            ensure_min_parallelism(df.select(F.col(id_col).alias("id"), seq0.alias("seq")))
+        )
         for rank in range(n_merges):
             lefts = F.slice("seq", 1, F.greatest(F.size("seq") - 1, F.lit(0)))
             rights = F.expr("slice(seq, 2, greatest(size(seq) - 1, 0))")
@@ -827,19 +821,11 @@ def bpe_train_merges(
             # checkpoint the new corpus state, then release the previous
             # round's blocks — without this each round pins a full tokenized
             # corpus copy (n_merges copies at once by the end)
-            cur = cur.mapInPandas(kernel, out_schema).localCheckpoint()
-            new_ids = {i for i in [checkpointed_rdd_id(cur)] if i is not None}
-            released, prev_ids = prev_ids, new_ids  # finally always covers the newest
-            unpersist_rdd_ids(spark, released)
+            nxt = scope.checkpoint(cur.mapInPandas(kernel, out_schema))
+            scope.release(cur)
+            cur = nxt
             tokens_after = cur.agg(F.sum(F.size("seq"))).first()[0]
             learned.append((rank, bl, br, bc, int(tokens_after)))
-
-    finally:
-        # release on BOTH paths: a task failure mid-round must not leave
-        # corpus checkpoints pinned for the session's lifetime
-        unpersist_rdd_ids(spark, prev_ids)
-    from cashback_data_pipeline_spark.session import local_rows_df
-
     return local_rows_df(
         spark, learned, "rank int, lhs string, rhs string, pair_count long, corpus_tokens_after long"
     )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.functions import neq_null_safe
 from cashback_data_pipeline_spark.operators import curation, dedup, similarity, temporal, text
-from cashback_data_pipeline_spark.session import local_rows_df
+from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
 from cashback_data_pipeline_spark.sources import read_events_range, read_testdata
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -4478,10 +4478,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from the exact prefix-filter join (same output as the full
     inverted-index join, by theorem — see ngram_jaccard_pairs_prefix)."""
     docs = read_testdata(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs_prefix(
-        docs, n=1, threshold=0.7, block_cols=["lang"], bag=True
-    )
-    return dedup.connected_components(pairs)
+    with checkpoint_scope(spark) as scope:
+        pairs = scope.adopt(
+            dedup.ngram_jaccard_pairs_prefix(docs, n=1, threshold=0.7, block_cols=["lang"], bag=True)
+        )
+        return dedup.connected_components(pairs)
 
 
 @query(
@@ -4575,21 +4576,22 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1 — see the operator docstring.)"""
     docs = read_testdata(spark, sf_dir, "documents")
     exact_kept = dedup.dedup_exact_by_fingerprint(docs)
-    pairs = dedup.ngram_jaccard_pairs_prefix(
-        exact_kept, n=1, threshold=0.75, block_cols=["lang"], bag=True
-    )
-    near_drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     quality = text.quality_score("text")
-    return (
-        exact_kept.join(near_drop, on="doc_id", how="left_anti")
-        .filter(quality >= 0.5)
-        .select(
-            "doc_id",
-            "lang",
-            "n_chars",
-            (F.floor(quality * 1000000 + 0.5) / 1000000).alias("quality"),
+    with checkpoint_scope(spark) as scope:
+        pairs = scope.adopt(dedup.ngram_jaccard_pairs_prefix(
+            exact_kept, n=1, threshold=0.75, block_cols=["lang"], bag=True
+        ))
+        near_drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+        return scope.result(
+            exact_kept.join(near_drop, on="doc_id", how="left_anti")
+            .filter(quality >= 0.5)
+            .select(
+                "doc_id",
+                "lang",
+                "n_chars",
+                (F.floor(quality * 1000000 + 0.5) / 1000000).alias("quality"),
+            )
         )
-    )
 
 
 @query(

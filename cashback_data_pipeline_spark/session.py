@@ -24,6 +24,7 @@ Design notes (100 TB stance):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -147,15 +148,14 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
 
 
 def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Release the given persisted RDDs (non-blocking). The standard
-    cleanup for ``localCheckpoint`` blocks, which have no DataFrame-level
-    unpersist handle: a long-running loop (foreachBatch, iterative
-    training) that skips this pins one block set per iteration until
-    executor storage churns. Prefer :func:`checkpointed_rdd_id` to find
-    the exact id to release — a before/after diff of
-    :func:`persistent_rdd_ids` can capture a CONCURRENT job's blocks
-    landing in the diff window and unpersist its truncated-lineage
-    checkpoint (unrecoverable for that job)."""
+    """Release the given persisted RDDs (non-blocking); ids that are not
+    persisted are ignored. ``localCheckpoint`` blocks have no
+    DataFrame-level unpersist handle, so this is how they are freed:
+    operators release theirs through :func:`checkpoint_scope`, which
+    passes only the exact ids it checkpointed. A before/after diff of
+    :func:`persistent_rdd_ids` is no substitute — it can capture a
+    CONCURRENT job's blocks landing in the diff window and unpersist its
+    truncated-lineage checkpoint (unrecoverable for that job)."""
     for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
         if rid in ids:
             rdd.unpersist(False)
@@ -163,12 +163,12 @@ def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
 
 def checkpointed_rdd_id(df) -> int | None:
     """The id of the persisted RDD backing a ``localCheckpoint``-ed
-    DataFrame — a precise unpersist handle for the one relation we own,
-    immune to concurrent persists on a shared session. A checkpointed
-    DataFrame's analyzed plan is a ``LogicalRDD`` wrapping exactly the
-    block-backed RDD; returns None for a DataFrame that is not
-    checkpoint-backed (defensive: callers then skip the release rather
-    than guessing)."""
+    DataFrame — the exact release handle :func:`checkpoint_scope`
+    records, immune to concurrent persists on a shared session. A
+    checkpointed DataFrame's analyzed plan is a ``LogicalRDD`` wrapping
+    exactly the block-backed RDD. Returns None for a plan that is not a
+    ``LogicalRDD``; a ``LogicalRDD`` that was never persisted (e.g.
+    :func:`local_rows_df`) yields an id that releasing ignores."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith("LogicalRDD"):
@@ -176,3 +176,117 @@ def checkpointed_rdd_id(df) -> int | None:
     except Exception:
         pass
     return None
+
+
+#: Row cutoff of :meth:`CheckpointScope.result`: a materialized result of
+#: at most this many rows comes back as a driver-local relation and pins
+#: nothing; a larger one stays one pinned checkpoint. Sized on 4 cores
+#: from a (long, long, double) pair result: the Arrow round trip costs
+#: ~0.12 s up to 50k rows (0.22 s at 100k), and a join over the local
+#: relation runs within ~0.2 s of the same join over the pinned
+#: checkpoint up to 50k rows, but at 2.5x-4.5x its time from 100k on.
+SMALL_RESULT_ROWS = 50_000
+
+
+class CheckpointScope:
+    """Owner of an operator's ``localCheckpoint`` intermediates; open one
+    with :func:`checkpoint_scope`.
+
+    Ownership rule — every checkpoint is released or handed over exactly
+    once:
+
+    - :meth:`checkpoint` materializes a frame, records the exact RDD id
+      (:func:`checkpointed_rdd_id`, never a diff of the persisted set)
+      and observes its row count (:meth:`rows`) in the same job;
+    - :meth:`release` frees one checkpoint early — a per-round loop
+      releases round i's state once round i+1's exists;
+    - :meth:`adopt` takes over a checkpoint an inner operator handed
+      over (a no-op for driver-local rows);
+    - an operator whose lazy result still reads a checkpoint returns
+      :meth:`result`: the result is materialized once, and at most
+      :data:`SMALL_RESULT_ROWS` rows come back as driver-local rows (an
+      Arrow-collected local relation) with everything released; a larger result is the ONE checkpoint handed
+      over, which the caller releases by adopting it into its own scope;
+      a result that reads no checkpoint of the scope stays lazy;
+    - leaving the ``with`` block, by return or by exception, releases
+      everything the scope still owns. An operator that consumes its
+      checkpoints internally (an index commit, a training loop) just
+      lets the block end; a CAS retry loop opens one scope per attempt.
+    """
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._owned: dict[int | None, object] = {}  # rdd id -> row-count Observation
+
+    def checkpoint(self, df):
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        obs = Observation()
+        out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        self._owned[checkpointed_rdd_id(out)] = obs
+        return out
+
+    def rows(self, df) -> int:
+        """Row count of a checkpoint this scope took (no extra job)."""
+        return int(self._owned[checkpointed_rdd_id(df)].get["n"])
+
+    def release(self, df) -> None:
+        rid = checkpointed_rdd_id(df)
+        if rid in self._owned:
+            del self._owned[rid]
+            unpersist_rdd_ids(self.spark, {rid})
+
+    def adopt(self, df):
+        rid = checkpointed_rdd_id(df)
+        if rid in persistent_rdd_ids(self.spark):
+            self._owned.setdefault(rid, None)
+        return df
+
+    def result(self, df):
+        if not self._owned:
+            return df  # reads no checkpoint of this scope: stays lazy
+        if self._owned.get(checkpointed_rdd_id(df)) is None:
+            df = self.checkpoint(df)
+        if self.rows(df) <= SMALL_RESULT_ROWS:
+            return self.spark.createDataFrame(df.toArrow(), df.schema)
+        del self._owned[checkpointed_rdd_id(df)]
+        return df
+
+    def close(self) -> None:
+        ids, self._owned = set(self._owned), {}
+        if ids:
+            unpersist_rdd_ids(self.spark, ids)
+
+
+@contextmanager
+def checkpoint_scope(spark: SparkSession):
+    """``with checkpoint_scope(spark) as scope:`` — see
+    :class:`CheckpointScope` for the ownership rule."""
+    scope = CheckpointScope(spark)
+    try:
+        yield scope
+    finally:
+        scope.close()
+
+
+def release_all(spark: SparkSession) -> None:
+    """Drop every cached relation and persisted RDD of the session and
+    collect dead py4j handles — the reset between independently timed
+    runs, when nothing still reads the freed blocks.
+
+    - Checkpoint blocks a caller never released stay pinned until the
+      Python-side DataFrame is garbage-collected (nondeterministic), so
+      a long run accumulates dead cached partitions and every later step
+      pays the eviction/GC churn (measured: ann_topk_batch 1.1 s in a
+      fresh session vs 6.5 s late in the bench sequence).
+    - Python-side py4j handles (Broadcast objects, DataFrames) keep their
+      JVM twins alive until Python's GC runs; Spark's ContextCleaner can
+      only reap broadcasts/shuffles whose refs are gone (measured:
+      minhash_trigram 10.2 s fresh → 19.4 s after 16 queries → 2.0 s once
+      the dead refs are collected)."""
+    import gc
+
+    spark.catalog.clearCache()
+    unpersist_rdd_ids(spark, persistent_rdd_ids(spark))
+    gc.collect()

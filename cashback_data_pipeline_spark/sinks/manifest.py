@@ -1635,7 +1635,8 @@ def write_table(
             )
     # generated columns materialize/validate FIRST (they may be cluster
     # keys or stats columns below); declarations are frozen once the
-    # table holds data, so one read is race-free
+    # table holds data, and one declared while this write runs fails it
+    # at the CAS below
     gen0 = _generated(cur0_doc)
     df = _apply_generated(df, gen0, "this write")
     ident0 = _identity(cur0_doc)
@@ -1787,6 +1788,15 @@ def write_table(
             # they were not checked against (round-10 review)
             checked_cons = _constraints(cur_doc)
             _check_constraints(df, checked_cons, "this write")
+        if _generated(cur_doc) != gen0:
+            # a generated column was declared between the write and this
+            # CAS: the written files hold none of its values, so they
+            # would read NULL where the table promises the expression —
+            # loud, never silent (the files become vacuum fodder)
+            raise RuntimeError(
+                f"generated columns of {table} changed concurrently with "
+                "this write; re-run it"
+            )
         if ident0 and _identity(cur_doc) != ident0:
             # the high-water moved under us: system-assigned ids in the
             # written files could collide with the winner's — loud,

@@ -1,8 +1,9 @@
 """Job-count budgets for the manifest inverted index (build → upsert →
 search) at sf0.001: 500 documents, an 80/20 build/upsert split; for the
 manifest IVF index (build → upsert → query) over the 500 sf0.001
-embeddings, the same split, 16 centroids and 10 queries; and for a
-date-range SQL aggregate over a registered manifest view.
+embeddings, the same split, 16 centroids and 10 queries; for the
+curate-corpus write of the corpus benchmark over the 500 documents; and
+for a date-range SQL aggregate over a registered manifest view.
 
 Job and codegen counts are deterministic for fixed inputs, unlike wall
 time, so a reintroduced redundant action (an extra ``.first()``, a
@@ -17,8 +18,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cashback_data_pipeline_spark.operators import retrieval, similarity
+from cashback_data_pipeline_spark.operators import dedup, retrieval, similarity, text
 from cashback_data_pipeline_spark.sinks import manifest as M
+from cashback_data_pipeline_spark.sinks import writers
 from cashback_data_pipeline_spark.sources import manifest_source, read_testdata
 from tests.scans import file_scans, scanned_files
 
@@ -26,7 +28,8 @@ SEARCH_MAX_JOBS = 4
 UPSERT_MAX_JOBS = 11
 IVF_BUILD_MAX_JOBS = 7
 IVF_UPSERT_MAX_JOBS = 7
-IVF_QUERY_MAX_JOBS = 8
+IVF_QUERY_MAX_JOBS = 6
+CURATE_MAX_JOBS = 24
 SQL_VIEW_MAX_JOBS = 2
 TERMS = ["data", "model", "the"]
 
@@ -184,6 +187,29 @@ def test_pooled_store_writes_charged_to_caller_job_group(spark, sf_dir, tmp_path
     total = _jobs_submitted(spark) - before
     assert total > 0
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == total
+
+
+def test_curate_corpus_job_budget(spark, sf_dir, tmp_path):
+    """Exact dedup → prefix-filter near-dup drop → quality gate →
+    partitioned warehouse write, as the corpus benchmark's curate_corpus
+    operation runs it."""
+    docs = read_testdata(spark, sf_dir, "documents")
+    before = _jobs_submitted(spark)
+    exact_kept = dedup.dedup_exact_by_fingerprint(docs)
+    pairs = dedup.ngram_jaccard_pairs_prefix(
+        exact_kept, n=1, threshold=0.75, block_cols=["lang"], bag=True
+    )
+    near_drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    quality = text.quality_score("text")
+    writers.write_warehouse(
+        exact_kept.join(near_drop, on="doc_id", how="left_anti")
+        .filter(quality >= 0.5)
+        .select("doc_id", "lang", "n_chars", (F.floor(quality * 1000000 + 0.5) / 1000000).alias("quality")),
+        str(tmp_path / "curated"),
+        partition_by="lang",
+    )
+    jobs = _jobs_submitted(spark) - before
+    assert jobs <= CURATE_MAX_JOBS, jobs
 
 
 def test_sql_view_date_range_budget(spark, tmp_path):

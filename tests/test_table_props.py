@@ -7,7 +7,10 @@ Pinned here:
 - CLONE copies every property, RESTORE states every property of its
   target (so one the target lacks is cleared);
 - a DDL commit that names one property keeps all the others (the
-  identity/generated ALTERs used to drop the bloom property).
+  identity/generated ALTERs used to drop the bloom property);
+- a property ALTER racing an append: the property lands on whichever
+  parent the CAS wins, and an append whose files predate a generated
+  column fails instead of committing NULLs for it.
 """
 
 from __future__ import annotations
@@ -125,3 +128,60 @@ def test_empty_table_alter_keeps_bloom_property(spark, tmp_path, alter):
     m = M.read_manifest(t, M.current_version(t))
     assert m["files"]
     assert all((m.get("stats") or {}).get(f, {}).get("bloom") for f in m["files"])
+
+
+def test_rename_losing_the_cas_to_an_append_lands_on_the_append(spark, tmp_path):
+    """An append commits while RENAME COLUMN attempts its CAS: the
+    rename retries on the append's version, so the committed version
+    carries the column mapping over every file of both."""
+    t = str(tmp_path / "t")
+    M.write_table(spark.range(5).selectExpr("id AS k", "CAST(id AS DOUBLE) AS price"), t)
+    orig = M._try_commit
+    raced = []
+
+    def append_first(table, *args, **kwargs):
+        if not raced and kwargs.get("operation") == "rename_column":
+            raced.append(M.write_table(
+                spark.range(5, 7).selectExpr("id AS k", "CAST(id AS DOUBLE) AS price"), t, mode="append"
+            ))
+        return orig(table, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(M, "_try_commit", append_first)
+        v = M.rename_column(t, "price", "amount")
+    assert raced == [2] and v == 3
+    appended, renamed = M.read_manifest(t, 2), M.read_manifest(t, 3)
+    assert appended.get("column_mapping") is None
+    assert renamed["column_mapping"] == {"k": "k", "amount": "price"}
+    assert set(renamed["files"]) == set(appended["files"])
+    out = M.read_table(spark, t)
+    assert out.columns == ["k", "amount"]
+    assert sorted(tuple(r) for r in out.collect()) == [(i, float(i)) for i in range(7)]
+
+
+def test_generated_alter_landing_mid_append_wins_the_cas(spark, tmp_path):
+    """ADD GENERATED COLUMN commits while an append writes its files:
+    the ALTER's version is the parent the append's CAS now meets, and
+    the append's files hold no value for the new column — the append
+    fails loudly, and a re-run materializes the column."""
+    t = str(tmp_path / "t")
+    M.create_table(t, "k BIGINT, price DOUBLE")
+    rows = spark.range(5, 7).selectExpr("id AS k", "CAST(id AS DOUBLE) AS price")
+    orig = M._write_data_files
+    altered = []
+
+    def alter_mid_write(df, table, **kw):
+        files = orig(df, table, **kw)
+        if not altered:
+            altered.append(M.add_generated_column(t, "p2", "double", "price * 2"))
+        return files
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(M, "_write_data_files", alter_mid_write)
+        with pytest.raises(RuntimeError, match="generated columns"):
+            M.write_table(rows, t, mode="append")
+    assert altered == [2] and M.current_version(t) == 2
+    assert M.read_manifest(t, 2)["files"] == []
+    assert M.write_table(rows, t, mode="append") == 3
+    assert M.read_manifest(t, 3)["generated"] == {"p2": {"expr": "price * 2", "type": "double"}}
+    assert sorted(tuple(r) for r in M.read_table(spark, t).collect()) == [(5, 5.0, 10.0), (6, 6.0, 12.0)]

@@ -34,7 +34,7 @@ os.environ.setdefault("MKL_NUM_THREADS", "1")
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from cashback_data_pipeline_spark.session import configure, DEFAULT_CPUS  # noqa: E402
+from cashback_data_pipeline_spark.session import configure, DEFAULT_CPUS, release_all  # noqa: E402
 
 
 def get_profiling_spark():
@@ -53,15 +53,6 @@ def get_profiling_spark():
     return spark
 
 
-def release(spark):
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
-    import gc
-
-    gc.collect()
-
-
 def main():
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
@@ -74,7 +65,7 @@ def main():
     sc = spark.sparkContext
     # warm-up
     Q.QUERIES["count_filtered"](spark, sf_dir).collect()
-    release(spark)
+    release_all(spark)
 
     walls: dict[str, float] = {}
     for name in args:
@@ -87,7 +78,7 @@ def main():
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             sc.setJobGroup(None, None)
-            release(spark)
+            release_all(spark)
             if best is None or dt < best[0]:
                 best = (dt, group)
         walls[name] = best  # type: ignore[assignment]

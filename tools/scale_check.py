@@ -24,11 +24,12 @@ documents/embeddings.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -36,7 +37,7 @@ for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cashback_data_pipeline_spark.session import get_spark  # noqa: E402
+from cashback_data_pipeline_spark.session import get_spark, release_all  # noqa: E402
 
 # Base corpus sizes at scale 1× — chosen to equal the driver's sf0.1
 # documents/embeddings tables so 1× timings are comparable to bench.py.
@@ -125,6 +126,23 @@ DEFAULT_OPS = [
 
 _BENCH_TERMS = ["hash", "vector", "window"]
 
+# every temp dir a sampler made; main removes what is left when the run
+# ends (the per-scale tables the caching samplers keep between samples)
+_SCRATCH_DIRS: list[str] = []
+
+
+def _scratch_table(prefix: str, name: str) -> str:
+    """Path ``name`` inside a fresh temp dir, removed by
+    :func:`_remove_table` or at the end of the run."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_DIRS.append(d)
+    return os.path.join(d, name)
+
+
+def _remove_table(table: str) -> None:
+    """Remove a :func:`_scratch_table` table with its temp dir."""
+    shutil.rmtree(os.path.dirname(table), ignore_errors=True)
+
 
 def _docs(spark, sf_dir: str):
     from cashback_data_pipeline_spark.queries import read_testdata
@@ -138,16 +156,13 @@ class _IndexBuild:
     expected exponent ≈ 1."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.operators import retrieval
 
-        table = tempfile.mkdtemp(prefix="scale_idx_") + "/idx"
+        table = _scratch_table("scale_idx_", "idx")
         t0 = time.time()
         retrieval.build_inverted_index_manifest(_docs(spark, sf_dir), table)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -161,12 +176,10 @@ class _IndexSearch:
         self.tables: dict[str, str] = {}
 
     def sample(self, spark, sf_dir: str) -> float:
-        import tempfile
-
         from cashback_data_pipeline_spark.operators import retrieval
 
         if sf_dir not in self.tables:
-            table = tempfile.mkdtemp(prefix="scale_idx_srch_") + "/idx"
+            table = _scratch_table("scale_idx_srch_", "idx")
             retrieval.build_inverted_index_manifest(_docs(spark, sf_dir), table)
             self.tables[sf_dir] = table
         t0 = time.time()
@@ -183,21 +196,18 @@ class _IndexDelta:
     is vocabulary-sized, so the exponent should track delta volume."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.operators import retrieval
 
         docs = _docs(spark, sf_dir)
-        table = tempfile.mkdtemp(prefix="scale_idx_delta_") + "/idx"
+        table = _scratch_table("scale_idx_delta_", "idx")
         retrieval.build_inverted_index_manifest(docs.filter(F.pmod("doc_id", F.lit(5)) != 0), table)
         delta = docs.filter(F.pmod("doc_id", F.lit(5)) == 0)
         t0 = time.time()
         retrieval.upsert_inverted_index(delta, table)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -208,15 +218,12 @@ class _ManifestUpsert:
     row exists to pin."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         docs = _docs(spark, sf_dir)
-        table = tempfile.mkdtemp(prefix="scale_manifest_") + "/t"
+        table = _scratch_table("scale_manifest_", "t")
         M.write_table(docs, table)
         delta = docs.filter(F.pmod("doc_id", F.lit(10)) == 0).withColumn(
             "text", F.concat(F.col("text"), F.lit(" updated"))
@@ -224,7 +231,7 @@ class _ManifestUpsert:
         t0 = time.time()
         M.upsert_table(spark, delta, table, key="doc_id")
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -233,17 +240,14 @@ class _ManifestCompact:
     read-pinned snapshot rewrite, exponent ≈ 1."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.sinks import manifest as M
 
-        table = tempfile.mkdtemp(prefix="scale_manifest_c_") + "/t"
+        table = _scratch_table("scale_manifest_c_", "t")
         M.write_table(_docs(spark, sf_dir).repartition(32), table)
         t0 = time.time()
         M.compact_table(spark, table, n_files=4)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -261,15 +265,12 @@ class _IvfDelta:
     exponent ≈ 1."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.operators import similarity
 
         vecs = _vecs(spark, sf_dir)
-        table = tempfile.mkdtemp(prefix="scale_ivf_delta_") + "/ivf"
+        table = _scratch_table("scale_ivf_delta_", "ivf")
         similarity.ivf_build_index_manifest(
             vecs.filter(F.pmod("vec_id", F.lit(5)) != 0), table, n_centroids=16
         )
@@ -277,7 +278,7 @@ class _IvfDelta:
         t0 = time.time()
         similarity.upsert_ivf_index(delta, table)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -286,17 +287,14 @@ class _IvfCompact:
     rewrite only) — snapshot read + one partitioned write, exponent ≈ 1."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.operators import similarity
 
-        table = tempfile.mkdtemp(prefix="scale_ivf_comp_") + "/ivf"
+        table = _scratch_table("scale_ivf_comp_", "ivf")
         similarity.ivf_build_index_manifest(_vecs(spark, sf_dir), table, n_centroids=16)
         t0 = time.time()
         similarity.compact_ivf_index(spark, table)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -311,19 +309,16 @@ class _IvfRetrain:
         self._spill = spill
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.operators import similarity
 
-        table = tempfile.mkdtemp(prefix="scale_ivf_rt_") + "/ivf"
+        table = _scratch_table("scale_ivf_rt_", "ivf")
         similarity.ivf_build_index_manifest(_vecs(spark, sf_dir), table, n_centroids=16)
         t0 = time.time()
         similarity.compact_ivf_index(
             spark, table, retrain=True, refine_iters=2, spill=self._spill
         )
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -335,15 +330,12 @@ class _ChangesRowsDiff:
     windows never pay it)."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         docs = _docs(spark, sf_dir)
-        table = tempfile.mkdtemp(prefix="scale_cdf_rows_") + "/t"
+        table = _scratch_table("scale_cdf_rows_", "t")
         M.write_table(docs, table)
         delta = docs.filter(F.pmod("doc_id", F.lit(10)) == 0).withColumn(
             "text", F.concat(F.col("text"), F.lit(" updated"))
@@ -354,7 +346,7 @@ class _ChangesRowsDiff:
             "noop"
         ).mode("overwrite").save()
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -366,9 +358,6 @@ class _SkipFixedWindowRead:
     raises if pruning skipped nothing."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.sinks import filestats
@@ -376,7 +365,7 @@ class _SkipFixedWindowRead:
 
         docs = _docs(spark, sf_dir)
         n = docs.count()
-        table = tempfile.mkdtemp(prefix="scale_skip_") + "/t"
+        table = _scratch_table("scale_skip_", "t")
         for i in range(8):  # id-correlated commits, stats on the id
             chunk = docs.filter(
                 (F.col("doc_id") >= i * n // 8) & (F.col("doc_id") < (i + 1) * n // 8)
@@ -394,7 +383,7 @@ class _SkipFixedWindowRead:
             "overwrite"
         ).save()
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -407,16 +396,13 @@ class _ManifestUpsertPruned:
     whole-table rewrite at exponent ≈ 1."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         docs = _docs(spark, sf_dir)
         n = docs.count()
-        table = tempfile.mkdtemp(prefix="scale_merge_pruned_") + "/t"
+        table = _scratch_table("scale_merge_pruned_", "t")
         M.write_table(
             docs, table, cluster_by=["doc_id"], cluster_files=max(16, n // 5000)
         )
@@ -427,7 +413,7 @@ class _ManifestUpsertPruned:
         M.upsert_table(spark, incoming, table, key="doc_id")
         dt = round(time.time() - t0, 3)
         m = M.read_manifest(table, M.current_version(table))
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         if len(m["files"]) < 16:
             raise RuntimeError("pruned-merge sampler lost its clustered layout")
         return dt
@@ -443,15 +429,12 @@ class _BloomPointRead:
     exponent-1 full scan this layout would otherwise force."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.sinks import filestats
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         docs = _docs(spark, sf_dir).select("doc_id", "text")
         n = docs.count()
-        table = tempfile.mkdtemp(prefix="scale_bloom_") + "/t"
+        table = _scratch_table("scale_bloom_", "t")
         M.write_table(
             docs.repartition(max(8, n // 5000), "doc_id"),
             table,
@@ -475,7 +458,7 @@ class _BloomPointRead:
         t0 = time.time()
         M.read_table(spark, table, skip=skip).write.format("noop").mode("overwrite").save()
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -489,16 +472,13 @@ class _CdfTailCommit:
     warehouse table viable."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.sinks import manifest as M
         from cashback_data_pipeline_spark.streaming import cdf_source
 
         docs = _docs(spark, sf_dir)
-        table = tempfile.mkdtemp(prefix="scale_cdf_tail_") + "/t"
+        table = _scratch_table("scale_cdf_tail_", "t")
         M.write_table(docs.filter(F.col("doc_id") >= 2000), table)  # the grown history
         M.write_table(
             docs.filter(F.col("doc_id") < 2000), table, mode="append"
@@ -514,7 +494,7 @@ class _CdfTailCommit:
         )
         q.awaitTermination()
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(os.path.dirname(table), ignore_errors=True)
+        _remove_table(table)
         return dt
 
 
@@ -528,14 +508,11 @@ class _MorDeleteFixed:
     covered by manifest-family ops; this pins the tombstone path."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         docs = _docs(spark, sf_dir)
         n = docs.count()
-        table = tempfile.mkdtemp(prefix="scale_mor_") + "/t"
+        table = _scratch_table("scale_mor_", "t")
         M.write_table(docs, table, cluster_by=["doc_id"], cluster_files=max(16, n // 5000))
         t0 = time.time()
         v = M.delete_where(
@@ -544,7 +521,7 @@ class _MorDeleteFixed:
         )
         dt = round(time.time() - t0, 3)
         m = M.read_manifest(table, v)
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         if not m.get("dv_files"):
             raise RuntimeError("no deletion vector committed — sampler is mismeasuring")
         return dt
@@ -560,14 +537,11 @@ class _OptimizeIncremental:
     contrast (manifest_compact)."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
-
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         docs = _docs(spark, sf_dir)
         n = docs.count()
-        table = tempfile.mkdtemp(prefix="scale_optinc_") + "/t"
+        table = _scratch_table("scale_optinc_", "t")
         M.write_table(docs, table, cluster_by=["doc_id"], cluster_files=max(16, n // 5000))
         # appends (100 rows) stay under target_rows=200 at every scale;
         # the clustered bulk files (>= BASE_DOCS/16 = 312 rows at 1x)
@@ -579,7 +553,7 @@ class _OptimizeIncremental:
         v = M.optimize_table(spark, table, target_rows=200)
         dt = round(time.time() - t0, 3)
         meta = M.read_manifest(table, v).get("meta", {}).get("optimize", {})
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         if meta.get("rewritten") != 6 or not meta.get("carried"):
             raise RuntimeError(f"optimize packed the wrong set: {meta}")
         return dt
@@ -599,15 +573,13 @@ class _BatchSourcePrunedRead:
         self.tables: dict[str, str] = {}
 
     def sample(self, spark, sf_dir: str) -> float:
-        import tempfile
-
         from cashback_data_pipeline_spark.sinks import manifest as M
         from cashback_data_pipeline_spark.sources import manifest_source as MS
 
         if sf_dir not in self.tables:
             docs = _docs(spark, sf_dir)
             n = docs.count()
-            table = tempfile.mkdtemp(prefix="scale_batchsrc_") + "/t"
+            table = _scratch_table("scale_batchsrc_", "t")
             M.write_table(
                 docs, table, cluster_by=["doc_id"], cluster_files=max(16, n // 5000)
             )
@@ -638,8 +610,6 @@ class _LogCommitFixed:
     of driver JSON per trickle append at 10⁵–10⁶ files)."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
         import uuid
 
         from cashback_data_pipeline_spark.sinks import manifest as M
@@ -647,7 +617,7 @@ class _LogCommitFixed:
         docs = _docs(spark, sf_dir)
         n = docs.count()
         n_files = max(100, n // 5)  # file entries ∝ corpus scale
-        table = tempfile.mkdtemp(prefix="scale_logcommit_") + "/t"
+        table = _scratch_table("scale_logcommit_", "t")
         # materialize the FIXED batch once so the timed commit never
         # rescans the scaled corpus (the batch is the constant, the
         # manifest file count is the variable)
@@ -673,7 +643,7 @@ class _LogCommitFixed:
         M.write_table(batch, table, mode="append")
         dt = round(time.time() - t0, 3)
         mv = M.read_manifest(table, M.current_version(table))
-        shutil.rmtree(table, ignore_errors=True)
+        _remove_table(table)
         if len(mv["files"]) < n_files:
             raise RuntimeError("log-commit sampler dropped its synthetic file list")
         return dt
@@ -690,8 +660,6 @@ class _PartitionedTableCache:
         self.tables: dict[str, str] = {}
 
     def get(self, spark, sf_dir: str) -> str:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cashback_data_pipeline_spark.sinks import manifest as M
@@ -701,7 +669,7 @@ class _PartitionedTableCache:
                 "grp", (F.col("doc_id") / 500).cast("int")
             )
             n = docs.count()
-            table = tempfile.mkdtemp(prefix="scale_part_") + "/t"
+            table = _scratch_table("scale_part_", "t")
             M.write_table(
                 docs.repartition(max(4, n // 500), "grp"), table,
                 partition_by=["grp"], stats_cols=["doc_id"],
@@ -768,18 +736,16 @@ class _CloneCommitFixed:
     grows 100× (the fork-before-maintenance claim)."""
 
     def sample(self, spark, sf_dir: str) -> float:
-        import shutil
-        import tempfile
         import uuid as _uuid
 
         from cashback_data_pipeline_spark.sinks import manifest as M
 
         table = _PART_TABLES.get(spark, sf_dir)
-        dst = tempfile.mkdtemp(prefix="scale_clone_") + f"/c{_uuid.uuid4().hex[:6]}"
+        dst = _scratch_table("scale_clone_", f"c{_uuid.uuid4().hex[:6]}")
         t0 = time.time()
         M.clone_table(table, dst)
         dt = round(time.time() - t0, 3)
-        shutil.rmtree(os.path.dirname(dst), ignore_errors=True)
+        _remove_table(dst)
         return dt
 
 
@@ -821,29 +787,19 @@ def ensure_dir(spark, base: str, scale: float) -> str:
     return out
 
 
-def release(spark) -> None:
-    # same state-release discipline as bench.py: clear cache, unpersist
-    # checkpointed relations, collect dead py4j refs so ContextCleaner
-    # can reap broadcasts — otherwise later timings inherit GC churn.
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
-    gc.collect()
-
-
 def time_query(spark, fn, sf_dir: str, repeats: int = 2) -> list[float]:
     runs: list[float] = []
     for _ in range(repeats):
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
-        release(spark)
+        release_all(spark)
     # box-stall defense: disagreeing or uniformly slow repeats buy a third
     if min(runs) > 2.0 and (max(runs) > 2 * min(runs) or min(runs) > 4.0):
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
-        release(spark)
+        release_all(spark)
     return runs
 
 
@@ -870,7 +826,7 @@ def main() -> None:
     qs.get(warm, qs["text_quality_scores"])(spark, dirs[scales[0]]).write.format(
         "noop"
     ).mode("overwrite").save()
-    release(spark)
+    release_all(spark)
 
     results: dict[str, dict] = {}
     lo, hi = min(scales), max(scales)
@@ -887,10 +843,10 @@ def main() -> None:
                 runs = []
                 for _ in range(2):
                     runs.append(special.sample(spark, dirs[s]))
-                    release(spark)
+                    release_all(spark)
                 if min(runs) > 2.0 and (max(runs) > 2 * min(runs) or min(runs) > 4.0):
                     runs.append(special.sample(spark, dirs[s]))
-                    release(spark)
+                    release_all(spark)
             else:
                 runs = time_query(spark, fn, dirs[s])
             per_scale[f"x{s:g}"] = min(runs)
@@ -944,4 +900,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    try:
+        main()
+    finally:
+        for d in _SCRATCH_DIRS:
+            shutil.rmtree(d, ignore_errors=True)
