@@ -166,7 +166,7 @@ def bm25_topk(
                 T.StructField("rank", T.IntegerType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
 
     terms = doc_terms(base, id_col, text_col, mode=mode)
@@ -645,7 +645,8 @@ def search_inverted_index_manifest(
 
     def _empty() -> DataFrame:
         id_field = T.StructField.fromJson(layout["id_field"])
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             [],
             T.StructType(
                 [

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.operators.text import ensure_min_parallelism
-from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
+from cashback_data_pipeline_spark.session import checkpoint_scope, local_copy, local_rows_df
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -101,8 +101,8 @@ def cosine_topk_pandas(
 
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double, rank int"
+        return local_rows_df(
+            queries.sparkSession, [], "query_id long, neighbor_id long, cos double, rank int"
         )
     qids = np.array([r[0] for r in qrows])
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
@@ -500,7 +500,7 @@ def embedding_pairs_fast(
     if small_input:
         rows = df.select(id_col, vec_col).collect()
         if not rows:
-            return spark.createDataFrame([], "id_a long, id_b long, cos double")
+            return local_rows_df(spark, [], "id_a long, id_b long, cos double")
         ids = np.array([r[0] for r in rows])
         mat = np.array([r[1] for r in rows], dtype=np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
@@ -546,8 +546,8 @@ def embedding_pairs_fast(
         n_blocks = max(2, min(by_size, 4 * by_cores))
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
     vecs = vecs.withColumn("b", blk)
-    pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)], "bi int, bj int"
+    pairs = local_rows_df(
+        spark, [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)], "bi int, bj int"
     )
     # each vector joins every block pair its block participates in —
     # side L for pairs (b, *), side R for pairs (*, b); the (b, b)
@@ -969,7 +969,8 @@ def ivf_query_index_manifest(
 
     def _empty() -> DataFrame:
         id_field = T.StructField.fromJson(layout["id_field"])
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             [],
             T.StructType(
                 [
@@ -986,9 +987,8 @@ def ivf_query_index_manifest(
     # into the scoring join anyway, so they are driver-sized by
     # construction; the list-pruning ids come from the same rows and the
     # probe pipeline (broadcast-join + window top-n) runs one job
-    probes = _probe_centroids(queries, cents, n_probe, id_col, vec_col)
-    probe_rows = probes.toArrow()
-    want = set(probe_rows.column("centroid_id").to_pylist())
+    probes = local_copy(_probe_centroids(queries, cents, n_probe, id_col, vec_col))
+    want = {r.centroid_id for r in probes.select("centroid_id").collect()}
     if not want:
         # empty query set (or an index with zero centroids): nothing to
         # probe — empty result, not a FileNotFoundError from an
@@ -1013,7 +1013,7 @@ def ivf_query_index_manifest(
     cands = _lists_as_candidates(lists, id_col, vec_col)
     return _score_probed_lists(
         cands,
-        spark.createDataFrame(probe_rows, probes.schema),
+        probes,
         k,
         rescore_with,
         rescore_factor,
@@ -1489,7 +1489,7 @@ def embedding_near_dups_lsh_fast(
     # groupBy max(cos) dedupes pairs found by several tables.
     first = df.select(vec_col).first()
     if first is None:
-        return df.sparkSession.createDataFrame([], "id_a long, id_b long, cos double")
+        return local_rows_df(df.sparkSession, [], "id_a long, id_b long, cos double")
     dim = len(first[0])
     buckets = F.array(
         *[_sign_bucket_expr(vec_col, dim, n_planes, seed + 7919 * t) for t in range(n_tables)]

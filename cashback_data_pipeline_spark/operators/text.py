@@ -8,7 +8,7 @@ the hot path), so they scan 100 TB of documents at parquet-reader speed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
@@ -24,13 +24,11 @@ _WIDE_PLAN_NODES = __import__("re").compile(
 )
 
 
-def ensure_min_parallelism(
-    df: DataFrame, target: int | None = None, small_bytes: int | None = None
-) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame, small_bytes: int | None = None) -> DataFrame:
     """Widen a too-narrow input before a fan-out-heavy stage (shingle
     explode, signature hashing, a compute-bound Python kernel):
-    repartition to ``target`` (default ``sc.defaultParallelism``) ONLY
-    when the current scan has fewer partitions.
+    repartition to ``sc.defaultParallelism`` ONLY when the current scan
+    has fewer partitions.
 
     Rationale: a small parquet file arrives as ONE input split, so an
     explode that fans 1 doc → hundreds of shingles — or a mapInPandas
@@ -63,8 +61,7 @@ def ensure_min_parallelism(
     the optimizer estimates at or under it skip the widening. Heavy
     kernels (BPE training, codec decode) pass nothing and always widen.
     """
-    sc = df.sparkSession.sparkContext
-    n = target or sc.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
 
     def _optimized_plan():
         try:
@@ -818,14 +815,16 @@ def bpe_train_merges(
                         out.append(res)
                     yield pd.DataFrame({"id": pdf["id"], "seq": out})
 
-            # checkpoint the new corpus state, then release the previous
-            # round's blocks — without this each round pins a full tokenized
-            # corpus copy (n_merges copies at once by the end)
-            nxt = scope.checkpoint(cur.mapInPandas(kernel, out_schema))
+            # checkpoint the new corpus state (its symbol total observed in
+            # the same job), then release the previous round's blocks —
+            # without this each round pins a full tokenized corpus copy
+            # (n_merges copies at once by the end)
+            tokens = Observation()
+            merged = cur.mapInPandas(kernel, out_schema)
+            nxt = scope.checkpoint(merged.observe(tokens, F.sum(F.size("seq")).alias("n")))
             scope.release(cur)
             cur = nxt
-            tokens_after = cur.agg(F.sum(F.size("seq"))).first()[0]
-            learned.append((rank, bl, br, bc, int(tokens_after)))
+            learned.append((rank, bl, br, bc, int(tokens.get["n"])))
     return local_rows_df(
         spark, learned, "rank int, lhs string, rhs string, pair_count long, corpus_tokens_after long"
     )

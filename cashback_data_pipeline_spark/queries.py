@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from cashback_data_pipeline_spark.functions import neq_null_safe
 from cashback_data_pipeline_spark.operators import curation, dedup, similarity, temporal, text
-from cashback_data_pipeline_spark.session import checkpoint_scope, local_rows_df
+from cashback_data_pipeline_spark.session import checkpoint_scope, local_copy
 from cashback_data_pipeline_spark.sources import read_events_range, read_testdata
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1131,13 +1131,14 @@ def ann_ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.upsert_ivf_index(delta, table, delta_id="delta-1")
         queries_df = emb.filter(F.col("vec_id") < 10)
         out = similarity.ivf_query_index_manifest(spark, table, queries_df, n_probe=4, k=5)
-        rows = out.select(
-            "query_id",
-            "neighbor_id",
-            (F.floor(F.col("cos") * 1000000 + 0.5) / 1000000).alias("cos"),
-            "rank",
-        ).collect()
-        return local_rows_df(spark, rows, "query_id long, neighbor_id long, cos double, rank int")
+        return local_copy(
+            out.select(
+                "query_id",
+                "neighbor_id",
+                (F.floor(F.col("cos") * 1000000 + 0.5) / 1000000).alias("cos"),
+                "rank",
+            )
+        )
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1249,13 +1250,14 @@ def ann_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.compact_ivf_index(spark, table, retrain=True, refine_iters=2, spill=4)
         queries_df = emb.filter(F.col("vec_id") < 10)
         out = similarity.ivf_query_index_manifest(spark, table, queries_df, n_probe=4, k=5)
-        rows = out.select(
-            "query_id",
-            "neighbor_id",
-            (F.floor(F.col("cos") * 1000000 + 0.5) / 1000000).alias("cos"),
-            "rank",
-        ).collect()
-        return local_rows_df(spark, rows, "query_id long, neighbor_id long, cos double, rank int")
+        return local_copy(
+            out.select(
+                "query_id",
+                "neighbor_id",
+                (F.floor(F.col("cos") * 1000000 + 0.5) / 1000000).alias("cos"),
+                "rank",
+            )
+        )
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1576,8 +1578,7 @@ def manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the (months-sized) aggregate so the table copy under
         # /tmp can be deleted before returning — repeated gate/bench runs
         # must not accumulate orders-table copies
-        rows = agg.collect()
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1636,8 +1637,7 @@ def manifest_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"), dsum2(F.col("value")).alias("sum_value")
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1716,8 +1716,7 @@ def manifest_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         if bloom_skipped == 0:
             raise ValueError("bloom pruning skipped no files — bloom skipping is broken")
         back = M.read_table(spark, table, skip=skip)
-        rows = back.collect()  # ≤3 keys' rows; materialize before rmtree
-        return local_rows_df(spark, rows, back.schema)
+        return local_copy(back)  # ≤3 keys' rows; materialize before rmtree
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1788,8 +1787,7 @@ def manifest_skip_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"), dsum2(F.col("value")).alias("sum_value")
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1835,8 +1833,7 @@ def manifest_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = delta.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"), dsum2(F.col("value")).alias("sum_value")
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1894,8 +1891,7 @@ def manifest_changes_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         v2_snapshot = M.read_table(spark, table)
         M.write_table(v2_snapshot.filter(F.pmod("o_orderkey", F.lit(10)) != 7), table)
         delta = M.read_changes_rows(spark, table, from_version=1, key="o_orderkey")
-        rows = delta.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, delta.schema)
+        return local_copy(delta)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -1998,8 +1994,7 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             r2(F.col("min_value")).alias("min_value"),
             r2(F.col("max_value")).alias("max_value"),
         )
-        rows = view.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, view.schema)
+        return local_copy(view)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2046,8 +2041,7 @@ def streaming_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = M.read_table(spark, table).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-        rows = back.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, back.schema)
+        return local_copy(back)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2115,8 +2109,7 @@ def streaming_medallion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         if (M.current_version(silver) or 0) <= (v_first or 0):
             raise ValueError("restarted stage landed nothing — incrementality broke")
         back = M.read_table(spark, silver)
-        rows = back.collect()  # materialize before the temp tables are deleted
-        return local_rows_df(spark, rows, back.schema)
+        return local_copy(back)  # materialize before the temp tables are deleted
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2168,8 +2161,7 @@ def manifest_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2227,8 +2219,7 @@ def manifest_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2291,8 +2282,7 @@ def manifest_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price")
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2348,8 +2338,7 @@ def manifest_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2401,8 +2390,7 @@ def manifest_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok = M.stage_commit(orders.filter(F.col("o_orderkey") < 5), table)
         M.publish_staged(table, tok)
         hist = M.table_history(spark, table).select("version", "operation")
-        rows = hist.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, hist.schema)
+        return local_copy(hist)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2445,8 +2433,7 @@ def manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         if M.read_manifest(table, v)["files"] != M.read_manifest(table, 1)["files"]:
             raise ValueError("restore moved data — it must be a metadata-only commit")
         back = M.read_table(spark, table)
-        rows = back.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, back.schema)
+        return local_copy(back)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2502,8 +2489,7 @@ def manifest_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not counts["deletes"] or not counts["upserts"]:
             raise ValueError(f"apply_changes folded nothing: {counts}")
         back = M.read_table(spark, tgt)
-        rows = back.collect()  # materialize before the temp tables are deleted
-        return local_rows_df(spark, rows, back.schema)
+        return local_copy(back)  # materialize before the temp tables are deleted
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2559,8 +2545,7 @@ def manifest_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2611,8 +2596,7 @@ def manifest_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("total_price")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2711,8 +2695,7 @@ def manifest_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2813,8 +2796,7 @@ def manifest_dml_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -2918,8 +2900,7 @@ def manifest_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum2(F.col("o_totalprice")).alias("sum_price"),
             F.sum((F.col("o_orderpriority") == "updated").cast("long")).alias("n_updated"),
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         spark.catalog.dropTempView("merge_cdc_r10")
         shutil.rmtree(table, ignore_errors=True)
@@ -2998,8 +2979,7 @@ def manifest_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum2(F.coalesce(F.col("bonus"), F.lit(0.0))).alias("sum_bonus"),
             F.sum("o_custkey").alias("sum_cust"),
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -3073,8 +3053,7 @@ def manifest_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -3131,8 +3110,7 @@ def manifest_cdf_batch_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = win.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -3205,8 +3183,7 @@ def manifest_optimize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -3287,8 +3264,7 @@ def manifest_batch_read_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_v1"))
         )
         out = cur_agg.join(v1_agg, "order_month")
-        rows = out.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, out.schema)
+        return local_copy(out)  # materialize before the temp table is deleted
     finally:
         for v in ("orders_mt_cur", "orders_mt_v1"):
             spark.catalog.dropTempView(v)
@@ -3374,8 +3350,7 @@ def manifest_sql_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp tables are deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp tables are deleted
     finally:
         for v_name in ("sqlins_seed_r11", "staging_rewards", "orders_t"):
             spark.catalog.dropTempView(v_name)
@@ -3477,8 +3452,7 @@ def manifest_partitioned_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             dsum2(F.col("o_totalprice")).alias("sum_price"),
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -3553,11 +3527,10 @@ def manifest_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = back.groupBy(
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
         ).agg(F.count(F.lit(1)).alias("n"), dsum2(F.col("o_totalprice")).alias("sum_price"))
-        rows = agg.collect()  # materialize before the temp tables are deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp tables are deleted
     finally:
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)
+        shutil.rmtree(_os.path.dirname(dst), ignore_errors=True)
 
 
 @query(
@@ -3692,8 +3665,7 @@ def manifest_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             dsum2(F.col("o_totalprice")).alias("sum_price"),
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -3806,8 +3778,7 @@ def manifest_convert_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             dsum2(F.col("o_totalprice")).alias("sum_price"),
         )
-        rows = agg.collect()  # materialize before the temp table is deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp table is deleted
     finally:
         shutil.rmtree(_os.path.dirname(table), ignore_errors=True)
 
@@ -3887,8 +3858,7 @@ def manifest_identity_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.sum((F.col("rid") < 1000).cast("long")).alias("n_below_start"),
         )
-        rows = agg.collect()  # materialize before the temp tables are deleted
-        return local_rows_df(spark, rows, agg.schema)
+        return local_copy(agg)  # materialize before the temp tables are deleted
     finally:
         for v_name in ("serving", "staging"):
             spark.catalog.dropTempView(v_name)
@@ -8259,8 +8229,7 @@ def indexed_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         retrieval.build_inverted_index_manifest(docs, table)
         out = retrieval.search_inverted_index_manifest(spark, table, _BM25_TERMS, k=10)
-        rows = out.collect()
-        return local_rows_df(spark, rows, out.schema)
+        return local_copy(out)
     finally:
         shutil.rmtree(table, ignore_errors=True)
 
@@ -8298,8 +8267,7 @@ def indexed_bm25_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         retrieval.build_inverted_index_manifest(base, table)
         retrieval.upsert_inverted_index(delta, table, delta_id="delta-1")
         out = retrieval.search_inverted_index_manifest(spark, table, _BM25_TERMS, k=10)
-        rows = out.collect()
-        return local_rows_df(spark, rows, out.schema)
+        return local_copy(out)
     finally:
         shutil.rmtree(table, ignore_errors=True)
 

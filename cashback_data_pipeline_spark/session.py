@@ -125,21 +125,31 @@ def apply_session_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def local_rows_df(spark: SparkSession, rows, schema, rows_per_slice: int = 100_000):
-    """``createDataFrame`` for DRIVER-LOCAL row lists, sliced by ROWS
-    instead of core count (OPTIMIZATION r12, guide §2.6/§4: size task
-    counts by data volume). Plain ``createDataFrame(list)`` parallelizes
-    into ``defaultParallelism`` pickled slices, so every later scan of a
-    commit-sized materialized result launches one task + one Python
-    worker PER CORE just to unpickle a handful of rows (~0.2 s per
-    worker measured on the bench box — the dominant fixed cost of the
-    collect→recreate pattern the oracle-materializing queries use).
-    One slice per ``rows_per_slice`` rows keeps one worker per ~100k
-    rows with identical row semantics (same pickled-row path, schema
-    applied identically); a driver-local list is by construction small
-    enough for this to be safe."""
-    n = max(1, -(-len(rows) // rows_per_slice))
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, n), schema)
+def local_rows_df(spark: SparkSession, rows, schema):
+    """The one way the engine turns driver-side rows (tuples, ``Row``s or
+    dicts; ``schema`` a ``StructType`` or DDL string) into a DataFrame:
+    one Arrow table, built by pyspark's own list converter, becomes a
+    local relation (:func:`local_copy` does the same for a DataFrame).
+    Scanning it starts no Python worker."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
+    else:
+        table = to_arrow_schema(schema).empty_table()  # the converter rejects []
+    return spark.createDataFrame(table, schema)
+
+
+def local_copy(df):
+    """A driver-local copy of ``df`` (collected once through Arrow): the
+    result no longer reads ``df``'s sources, so those may be deleted or
+    released."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -167,8 +177,9 @@ def checkpointed_rdd_id(df) -> int | None:
     records, immune to concurrent persists on a shared session. A
     checkpointed DataFrame's analyzed plan is a ``LogicalRDD`` wrapping
     exactly the block-backed RDD. Returns None for a plan that is not a
-    ``LogicalRDD``; a ``LogicalRDD`` that was never persisted (e.g.
-    :func:`local_rows_df`) yields an id that releasing ignores."""
+    ``LogicalRDD`` (e.g. a local relation); a ``LogicalRDD`` that was
+    never persisted (a :func:`local_copy` over Spark's 48 MB Arrow
+    local-relation threshold) yields an id that releasing ignores."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith("LogicalRDD"):
@@ -204,9 +215,10 @@ class CheckpointScope:
       over (a no-op for driver-local rows);
     - an operator whose lazy result still reads a checkpoint returns
       :meth:`result`: the result is materialized once, and at most
-      :data:`SMALL_RESULT_ROWS` rows come back as driver-local rows (an
-      Arrow-collected local relation) with everything released; a larger result is the ONE checkpoint handed
-      over, which the caller releases by adopting it into its own scope;
+      :data:`SMALL_RESULT_ROWS` rows come back as a :func:`local_copy`
+      with everything released; a larger result is the ONE checkpoint
+      handed over, which the caller releases by adopting it into its own
+      scope;
       a result that reads no checkpoint of the scope stays lazy;
     - leaving the ``with`` block, by return or by exception, releases
       everything the scope still owns. An operator that consumes its
@@ -249,7 +261,7 @@ class CheckpointScope:
         if self._owned.get(checkpointed_rdd_id(df)) is None:
             df = self.checkpoint(df)
         if self.rows(df) <= SMALL_RESULT_ROWS:
-            return self.spark.createDataFrame(df.toArrow(), df.schema)
+            return local_copy(df)
         del self._owned[checkpointed_rdd_id(df)]
         return df
 

@@ -846,6 +846,8 @@ def collect_file_stats(
             }
         import pandas as pd
 
+        # not session.local_rows_df: this list feeds a per-file Python
+        # footer kernel, so one task per core (the repartition) is the point
         paths_df = spark.createDataFrame(
             [(p,) for p in local.values()], T.StructType([T.StructField("path", T.StringType())])
         ).repartition(min(len(rel_files), 32))

@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cashback_data_pipeline_spark.session import local_rows_df
 from cashback_data_pipeline_spark.sinks.logstore import TMP_PREFIX, get_log_store
 
 _MANIFEST_DIR = "_manifests"
@@ -1284,7 +1285,7 @@ def read_store(
     if not files:
         if schema is None:
             raise FileNotFoundError(f"store {store!r} has no files at v{v} and no schema given")
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     reader = spark.read
     recorded = ((m.get("meta") or {}).get(_STORE_SCHEMAS) or {}).get(store)
     if apply_schema:
@@ -2856,8 +2857,6 @@ def describe_detail(spark: SparkSession, table: str) -> DataFrame:
             *[T.StructField(k, T.StringType()) for k in _DETAIL_PROPS],
         ]
     )
-    from cashback_data_pipeline_spark.session import local_rows_df
-
     return local_rows_df(spark, [row], schema)
 
 
@@ -2900,8 +2899,6 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
                 json.dumps(meta, sort_keys=True) if meta else None,
             )
         )
-    from cashback_data_pipeline_spark.session import local_rows_df
-
     return local_rows_df(
         spark,
         rows,
@@ -2972,7 +2969,7 @@ def read_staged(spark: SparkSession, table: str, token: str) -> DataFrame:
     stage = _read_stage(table, token)
     schema = T.StructType.fromJson(json.loads(stage["schema"]))
     if not stage["files"]:
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     mapping = stage.get("column_mapping")
     out = _physical_scan(
         spark, table, stage["files"], schema_json=stage["schema"],
@@ -3189,7 +3186,7 @@ def read_table(
         )
     if not files:
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     out = _read_files(
         spark, table, files, _dv_set(m), mapping=_mapping_pairs(m),
         schema_json=m["schema"], partitioning=_scan_partitioning(m) or None,
@@ -3265,7 +3262,7 @@ def read_changes(
     added = sorted(new - old)
     if not added:
         schema = T.StructType.fromJson(json.loads(m_to["schema"]))
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     return _read_files(
         spark, table, added, None, mapping=_mapping_pairs(m_to),
         schema_json=m_to["schema"], partitioning=_partitioning(m_to) or None,
@@ -3320,7 +3317,7 @@ def read_changes_rows(
             out_schema = T.StructType(
                 schema.fields + [T.StructField("_change_type", T.StringType(), False)]
             )
-            return spark.createDataFrame([], out_schema)
+            return local_rows_df(spark, [], out_schema)
         return _read_files(
             spark, table, added, None, mapping=_mapping_pairs(m_to),
             schema_json=m_to["schema"], partitioning=_partitioning(m_to) or None,
@@ -3910,7 +3907,7 @@ def merge_table(
                 schema_json=m["schema"], partitioning=_partitioning(m) or None,
             )
         else:
-            target = spark.createDataFrame([], schema)
+            target = local_rows_df(spark, [], schema)
         t = target.withColumn("__t_present", F.lit(True)).alias(t_alias)
         s = incoming_unique.withColumn("__s_present", F.lit(True)).alias(s_alias)
         j = t.join(

@@ -22,7 +22,7 @@ public infrastructure nor something an engine should embed. TOTP itself
 is RFC 6238 over stdlib hmac — no third-party dependency.
 
 Connector-sized data only: pages land driver-side as JSON records, then
-:func:`records_to_df` routes them through Spark's JSON reader with a
+:func:`records_to_df` parses them with Spark's JSON parser against a
 declared schema (ISO timestamps coerce; bad records stay PERMISSIVE).
 At 100 TB volumes sources land as files and use ``readers.read_jsonl``.
 """
@@ -41,9 +41,11 @@ from collections.abc import Callable, Iterable, Mapping
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cashback_data_pipeline_spark.plans.pipeline import with_retry
+from cashback_data_pipeline_spark.session import local_rows_df
 
 # The reference's GraphQL document, verbatim shape (api.py:189): the
 # engine sends the same operation so a Hasura-compatible server applies
@@ -216,12 +218,13 @@ class ApiSession:
 def records_to_df(
     spark: SparkSession, records: Iterable[Mapping[str, Any]], schema: T.StructType
 ) -> DataFrame:
-    """Connector page → typed DataFrame via Spark's JSON reader (not
-    ``createDataFrame``): declared schema, ISO-8601 timestamp coercion,
-    PERMISSIVE bad-record handling — identical semantics to the landed-
-    JSONL scale path (``readers.read_jsonl``), just driver-fed."""
-    lines = [json.dumps(dict(r)) for r in records]
-    return spark.read.schema(schema).json(spark.sparkContext.parallelize(lines or [""], 1))
+    """Connector page → typed DataFrame via Spark's JSON parser
+    (``from_json`` over the page's JSON lines): declared schema, ISO-8601
+    timestamp coercion, PERMISSIVE bad-record handling — the parser the
+    landed-JSONL scale path (``readers.read_jsonl``) uses, just
+    driver-fed."""
+    lines = local_rows_df(spark, [(json.dumps(dict(r)),) for r in records], "line string")
+    return lines.select(F.from_json("line", schema).alias("r")).select("r.*")
 
 
 def fetch_rewards_df(spark: SparkSession, session: ApiSession) -> DataFrame:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from cashback_data_pipeline_spark.schemas import testdata_path
+from cashback_data_pipeline_spark.session import local_rows_df
 
 
 def read_csv(
@@ -57,9 +58,7 @@ def read_json_records(
     """Materialize an in-memory list of JSON records (an API page) as a
     DataFrame. Only for connector-sized data — large volumes must land as
     JSONL and go through :func:`read_jsonl`."""
-    from cashback_data_pipeline_spark.session import local_rows_df
-
-    return local_rows_df(spark, list(records), schema)
+    return local_rows_df(spark, records, schema)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType, **options: Any) -> DataFrame:

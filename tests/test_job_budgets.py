@@ -2,8 +2,9 @@
 search) at sf0.001: 500 documents, an 80/20 build/upsert split; for the
 manifest IVF index (build → upsert → query) over the 500 sf0.001
 embeddings, the same split, 16 centroids and 10 queries; for the
-curate-corpus write of the corpus benchmark over the 500 documents; and
-for a date-range SQL aggregate over a registered manifest view.
+curate-corpus write of the corpus benchmark over the 500 documents; for
+five rounds of BPE merge training over the same documents; and for a
+date-range SQL aggregate over a registered manifest view.
 
 Job and codegen counts are deterministic for fixed inputs, unlike wall
 time, so a reintroduced redundant action (an extra ``.first()``, a
@@ -30,6 +31,7 @@ IVF_BUILD_MAX_JOBS = 7
 IVF_UPSERT_MAX_JOBS = 7
 IVF_QUERY_MAX_JOBS = 6
 CURATE_MAX_JOBS = 24
+BPE_MAX_JOBS = 17
 SQL_VIEW_MAX_JOBS = 2
 TERMS = ["data", "model", "the"]
 
@@ -210,6 +212,19 @@ def test_curate_corpus_job_budget(spark, sf_dir, tmp_path):
     )
     jobs = _jobs_submitted(spark) - before
     assert jobs <= CURATE_MAX_JOBS, jobs
+
+
+def test_bpe_train_merges_job_budget(spark, sf_dir):
+    """Five merge rounds: each round's checkpoint job also observes the
+    round's symbol total (``corpus_tokens_after``), so a round runs no
+    separate aggregate job; the learned table is a local relation whose
+    collect runs none."""
+    docs = read_testdata(spark, sf_dir, "documents")
+    before = _jobs_submitted(spark)
+    merges = text.bpe_train_merges(docs, n_merges=5).collect()
+    jobs = _jobs_submitted(spark) - before
+    assert len(merges) == 5
+    assert jobs <= BPE_MAX_JOBS, jobs
 
 
 def test_sql_view_date_range_budget(spark, tmp_path):
