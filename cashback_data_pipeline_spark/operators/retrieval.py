@@ -354,8 +354,8 @@ def _commit_index_delta(
             [T.StructField("term", T.StringType()), T.StructField("df", T.LongType())]
         )
 
-    while True:
-        cur = M.current_version(table)
+    def attempt(cur, prev):
+        nonlocal id_col, text_col
         if cur is None:
             if n_term_buckets is None:
                 raise FileNotFoundError(
@@ -368,12 +368,10 @@ def _commit_index_delta(
                 "text_col": text_col,
                 "id_field": docs.schema[id_col].jsonValue(),
             }
-            prev = None
             old_files: list[str] = []
             old_termstats = None
             old_stats = (0, 0)
         else:
-            prev = M.read_manifest(table, cur)
             layout = prev["meta"]["layout"]
             if delta_id is not None and delta_id in prev["meta"].get("delta_ids", []):
                 return None  # exact replay of an already-committed delta
@@ -512,12 +510,16 @@ def _commit_index_delta(
                 },
             }
             files = old_files + files
-            meta = M.with_store_schemas(meta, prev, files, schemas)
-            schema_json = json.dumps(postings.schema.jsonValue())
-            if M._try_commit(table, (cur or 0) + 1, files, cur, schema_json, meta=meta):
-                return (cur or 0) + 1
-            # CAS lost: a racing writer committed — recompute this delta
-            # against the winner's version (orphaned files → vacuum)
+            # CAS lost ⇒ a racing writer committed — this delta
+            # recomputes against the winner's version (orphaned files →
+            # vacuum)
+            return M._Commit(
+                files=files,
+                schema=json.dumps(postings.schema.jsonValue()),
+                meta=M.with_store_schemas(meta, prev, files, schemas),
+            )
+
+    return M._commit(table, attempt, create=True)
 
 
 def compact_inverted_index(spark, table: str) -> int:
@@ -537,11 +539,7 @@ def compact_inverted_index(spark, table: str) -> int:
 
     from cashback_data_pipeline_spark.sinks import manifest as M
 
-    while True:
-        cur = M.current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed index in {table}")
-        prev = M.read_manifest(table, cur)
+    def attempt(cur, prev):
         layout = prev["meta"]["layout"]
         nb = layout["n_term_buckets"]
         id_field = T.StructField.fromJson(layout["id_field"])
@@ -604,9 +602,9 @@ def compact_inverted_index(spark, table: str) -> int:
             "corpus": {"n_docs": n_docs, "total_tokens": total_tokens},
             "compaction": True,
         }
-        meta = M.with_store_schemas(meta, prev, files, schemas)
-        if M._try_commit(table, cur + 1, files, cur, prev["schema"], meta=meta):
-            return cur + 1
+        return M._Commit(files=files, meta=M.with_store_schemas(meta, prev, files, schemas))
+
+    return M._commit(table, attempt)
 
 
 def search_inverted_index_manifest(

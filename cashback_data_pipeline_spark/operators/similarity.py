@@ -688,9 +688,10 @@ def _commit_ivf_delta(
     from cashback_data_pipeline_spark.sinks import manifest as M
 
     spark = vectors.sparkSession
-    while True:
+
+    def attempt(cur, prev):
+        nonlocal id_col, vec_col, quantize, spill
         with checkpoint_scope(spark) as scope:
-            cur = M.current_version(table)
             if cur is None:
                 if n_centroids is None:
                     raise FileNotFoundError(
@@ -725,11 +726,9 @@ def _commit_ivf_delta(
                     "spill": spill,
                     "id_field": vectors.schema[id_col].jsonValue(),
                 }
-                prev = None
                 old_files: list[str] = []
                 fresh = vectors
             else:
-                prev = M.read_manifest(table, cur)
                 layout = prev["meta"]["layout"]
                 if delta_id is not None and delta_id in prev["meta"].get("delta_ids", []):
                     return None
@@ -807,19 +806,16 @@ def _commit_ivf_delta(
             if delta_id is not None:
                 delta_ids.append(delta_id)
             files = old_files + files
-            meta = M.with_store_schemas(
-                {"layout": layout, "delta_ids": delta_ids}, prev, files, schemas
+            # CAS lost ⇒ recompute against the winner (orphans → vacuum)
+            return M._Commit(
+                files=files,
+                schema=json.dumps(listed.schema.jsonValue()),
+                meta=M.with_store_schemas(
+                    {"layout": layout, "delta_ids": delta_ids}, prev, files, schemas
+                ),
             )
-            if M._try_commit(
-                table,
-                (cur or 0) + 1,
-                files,
-                cur,
-                json.dumps(listed.schema.jsonValue()),
-                meta=meta,
-            ):
-                return (cur or 0) + 1
-            # CAS lost — recompute against the winner (orphans → vacuum)
+
+    return M._commit(table, attempt, create=True)
 
 
 def compact_ivf_index(
@@ -866,11 +862,7 @@ def compact_ivf_index(
 
     from cashback_data_pipeline_spark.sinks import manifest as M
 
-    while True:
-        cur = M.current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed IVF index in {table}")
-        prev = M.read_manifest(table, cur)
+    def attempt(cur, prev):
         layout = prev["meta"]["layout"]
         cid = M.new_commit_id()
         schemas: dict = {}
@@ -928,9 +920,9 @@ def compact_ivf_index(
                 partition_by="__list", schemas=schemas,
             )
             files += M.store_files(prev, "centroids")  # immutable, reused as-is
-        meta = M.with_store_schemas(meta, prev, files, schemas)
-        if M._try_commit(table, cur + 1, files, cur, prev["schema"], meta=meta):
-            return cur + 1
+        return M._Commit(files=files, meta=M.with_store_schemas(meta, prev, files, schemas))
+
+    return M._commit(table, attempt)
 
 
 def ivf_query_index_manifest(

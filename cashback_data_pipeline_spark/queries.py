@@ -5985,6 +5985,24 @@ def asof_forward_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drain_to_memory(stream: DataFrame, prefix: str, output_mode: str, src: str) -> DataFrame:
+    """Run a file-source ``stream`` over the scratch dir ``src`` to the
+    end of its backlog (availableNow) into a memory-sink table, then
+    remove ``src``: the sink holds the result, so the source files are
+    spent once the query has terminated. Returns the sink's table."""
+    import shutil
+    import uuid
+
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    try:
+        stream.writeStream.format("memory").queryName(name).outputMode(
+            output_mode
+        ).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    return stream.sparkSession.table(name)
+
+
 @query(
     "streaming_windowed_counts",
     sql=f"""
@@ -6005,7 +6023,6 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BATCH twin (windowed_event_counts) is checked against — streaming
     and batch agree row-for-row."""
     import tempfile
-    import uuid
 
     from cashback_data_pipeline_spark.streaming.jobs import (
         read_events_stream,
@@ -6016,17 +6033,7 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = tempfile.mkdtemp(prefix="stream_src_")
     events.repartition(8).write.mode("overwrite").parquet(src)
     stream = read_events_stream(spark, src, max_files_per_trigger=4)
-    agg = windowed_counts_stream(stream)
-    name = f"swc_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(windowed_counts_stream(stream), "swc", "complete", src)
 
 
 @query(
@@ -6044,7 +6051,6 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     original events — the oracle is the plain batch scan of the
     un-duplicated table."""
     import tempfile
-    import uuid
 
     from cashback_data_pipeline_spark.streaming.jobs import deduped_stream, read_events_stream
 
@@ -6053,17 +6059,7 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.repartition(4).write.mode("overwrite").parquet(src)
     events.repartition(4).write.mode("append").parquet(src)  # the replay
     stream = read_events_stream(spark, src, max_files_per_trigger=3)
-    deduped = deduped_stream(stream)
-    name = f"sdr_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain_to_memory(deduped_stream(stream), "sdr", "append", src).select(
         "event_id", "user_id", "event_type", r2(F.col("value")).alias("value")
     )
 
@@ -6089,7 +6085,6 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch lag-gap formulation the `sessionization` query is checked
     against — merge-on-overlap session windows ≡ gap-break counting."""
     import tempfile
-    import uuid
 
     from cashback_data_pipeline_spark.streaming.jobs import (
         read_events_stream,
@@ -6100,18 +6095,8 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = tempfile.mkdtemp(prefix="stream_sess_src_")
     events.repartition(8).write.mode("overwrite").parquet(src)
     stream = read_events_stream(spark, src, max_files_per_trigger=4)
-    sessions = sessionized_counts_stream(stream)
-    name = f"ssz_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_to_memory(sessionized_counts_stream(stream), "ssz", "complete", src)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
     )
@@ -6698,7 +6683,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow drains the backlog, and the appended matches must equal
     the batch inequality join the oracle states."""
     import tempfile
-    import uuid
 
     from cashback_data_pipeline_spark.streaming.jobs import (
         purchases_after_signup_stream,
@@ -6710,16 +6694,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.repartition(8).write.mode("overwrite").parquet(src)
     stream = read_events_stream(spark, src, max_files_per_trigger=4)
     joined = purchases_after_signup_stream(stream, within="1 hour")
-    name = f"sij_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(joined, "sij", "append", src)
 
 
 # ---------------------------------------------------------------------------
@@ -8477,7 +8452,6 @@ def streaming_quality_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⟺ sigmoid(logit) ≥ 0.5 ⟺ logit ≥ 0 — exact on dyadic logits, so the
     stream and the oracle agree bit-for-bit."""
     import tempfile
-    import uuid
 
     from cashback_data_pipeline_spark.operators import classify
     from cashback_data_pipeline_spark.streaming.jobs import quality_routed_stream
@@ -8492,17 +8466,9 @@ def streaming_quality_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = quality_routed_stream(
         stream, weights, bias=0.125, threshold=0.5, hash_fn=classify.portable_token_hash
     )
-    name = f"sqr_{uuid.uuid4().hex[:8]}"
-    q = (
-        routed.select("doc_id", (F.col("route") == "keep").alias("keep"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(
+        routed.select("doc_id", (F.col("route") == "keep").alias("keep")), "sqr", "append", src
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------

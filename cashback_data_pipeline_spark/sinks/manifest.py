@@ -29,7 +29,8 @@ Delta's transaction log + LogStore, Iceberg's metadata pointer):
   (HDFS-atomic — the store a real cluster has). Two concurrent writers
   racing to the same version: exactly one wins; the loser re-reads the
   new current version and RETRIES its whole operation against it
-  (optimistic concurrency, serializable commits).
+  (optimistic concurrency, serializable commits). Every writer
+  publishes through the one loop that does this, :func:`_commit`.
 - Readers resolve the manifest ONCE and then read a PINNED file list:
   a concurrent commit cannot tear a running read, because the files it
   references are never touched. ``vacuum`` deletes only data dirs
@@ -282,9 +283,9 @@ def _apply_action(base: dict, doc: dict) -> dict:
     drop (with their stats), added files join (with their add_stats),
     deletion vectors likewise; schema/meta/properties are the record's
     own (every commit states them — meta is per-commit, never merged).
-    Stats for CARRIED files persist from the parent, which is exactly
-    the setdefault-carry every write path has always performed — an
-    action record therefore costs O(changed files), not O(table)."""
+    Stats for CARRIED files persist from the parent, so a writer states
+    stats for the files it adds only (the :func:`_commit` carry rule) —
+    an action record therefore costs O(changed files), not O(table)."""
     removed = set(doc.get("remove") or [])
     files = sorted((set(base["files"]) - removed) | set(doc.get("add") or []))
     stats = {
@@ -415,6 +416,28 @@ def version_changes(table: str, version: int) -> dict:
     }
 
 
+def _appended_files(table: str, start: int, end: int, refuse=None) -> list[str]:
+    """The files versions ``start`` (exclusive) to ``end`` (inclusive)
+    added, in commit order — the one per-version walk of the
+    append-only change-feed readers (:mod:`streaming.cdf_source`). Each
+    step reads ONE action record (:func:`version_changes`), never a
+    snapshot reconstruction per version. A CHANGE commit — one that
+    removed files, or changed its deletion vectors (a merge-on-read
+    DELETE modifies rows without touching the file list) — adds
+    nothing: the walk calls ``refuse(version, changes)`` for it, which
+    raises the reader's error unless the reader skips change commits
+    (``refuse=None``)."""
+    added: list[str] = []
+    for v in range(start + 1, end + 1):
+        delta = version_changes(table, v)
+        if delta["removed"] or delta["dv_changed"]:
+            if refuse is not None:
+                refuse(v, delta)
+        else:
+            added.extend(delta["added"])
+    return added
+
+
 def _read_ckpt_meta_latest(table: str, version: int) -> dict | None:
     """The folded latest-meta map a checkpoint at ``version`` carries,
     or None when there is no checkpoint there / it predates the fold
@@ -526,6 +549,9 @@ def _try_commit(
     props: dict | None = None,
 ) -> bool:
     """Atomically publish ``version``; False if another writer won it.
+    Writers do not call this directly: they publish through
+    :func:`_commit`, the one loop that picks ``version``/``parent`` and
+    retries on a lost race (the protocol is stated there).
 
     Publication is the LogStore's create-if-absent (logstore module
     docstring): the complete record appears in one atomic op — a reader
@@ -587,7 +613,7 @@ def _try_commit(
     # readers treat a missing entry as "keep the file", so mixed
     # stats/no-stats histories stay correct. Only ADDED files'
     # entries ride in the record; carried files keep the parent's
-    # (the setdefault-carry discipline, now structural).
+    # (:func:`_apply_action`).
     add_stats = {f: stats[f] for f in doc["add"] if f in stats} if stats else {}
     if props["partitioning"]:
         # EXACT partition-value stats from the added files' paths (zero
@@ -605,6 +631,66 @@ def _try_commit(
     if ok:
         _maybe_checkpoint(table, version)
     return ok
+
+
+class _Commit(dict):
+    """The action one :func:`_commit` attempt publishes, as keywords:
+    ``files``, ``schema``, ``meta``, ``stats``, ``dv_files``,
+    ``operation``, ``props`` (the :func:`_try_commit` arguments) and
+    ``result``. A key left out follows the carry rule of the loop."""
+
+
+def _commit(table: str, attempt, create: bool = False):
+    """THE commit loop: every manifest writer publishes through this one
+    optimistic-concurrency protocol (the Delta optimistic-transaction
+    shape — one place reads the snapshot, applies the action, and
+    retries on conflict):
+
+    1. read the current version ``cur`` and its snapshot ``m``. A table
+       with no version yet raises FileNotFoundError, unless the writer
+       may ``create`` it: then ``cur`` and ``m`` are None;
+    2. call ``attempt(cur, m)``. A :class:`_Commit` is the action to
+       publish; any other return value (a no-op ``cur``, ``0``,
+       ``False``, None) is returned as is and nothing is published;
+    3. publish the action as version ``(cur or 0) + 1`` over parent
+       ``cur`` with :func:`_try_commit`'s atomic create-if-absent. When
+       another writer won that version, go back to 1: ``attempt`` runs
+       again against the winner's snapshot, so every check it makes is
+       made again and concurrent writers serialize.
+
+    What the action does not state carries from ``m``: the file list,
+    the schema, the deletion vectors (an action that drops them says
+    ``dv_files=[]``) and every table property (:func:`_try_commit`'s
+    ``props`` rule). ``stats`` is read only for the files the action
+    ADDS — carried files keep the parent's entries (:func:`_apply_action`).
+    ``meta`` and ``operation`` belong to the one commit and never carry.
+
+    Returns the published version, or the action's ``result`` when it
+    names one. Data files an attempt wrote before losing the race stay
+    unreferenced (vacuum reclaims them)."""
+    while True:
+        cur = current_version(table)
+        if cur is None and not create:
+            raise FileNotFoundError(f"no committed version in {table}")
+        m = read_manifest(table, cur) if cur is not None else None
+        action = attempt(cur, m)
+        if not isinstance(action, _Commit):
+            return action
+        base = m or _EMPTY_SNAPSHOT
+        version = (cur or 0) + 1
+        if _try_commit(
+            table,
+            version,
+            action.get("files", base["files"]),
+            cur,
+            action.get("schema", base["schema"]),
+            meta=action.get("meta"),
+            stats=action.get("stats"),
+            dv_files=action.get("dv_files", _dv_set(m)),
+            operation=action.get("operation"),
+            props=action.get("props"),
+        ):
+            return action.get("result", version)
 
 
 def _write_data_files(
@@ -1060,36 +1146,35 @@ def _read_files(
     spark: SparkSession,
     table: str,
     rel_files: list[str],
-    dv_files: list[str] | None,
-    mapping: list[tuple[str, str]] | None = None,
-    schema_json: str | None = None,
-    partitioning: list[str] | None = None,
+    m: dict,
+    dv_files: list[str] | None = None,
 ) -> DataFrame:
-    """Scan a pinned file list with the version's DELETION VECTORS
-    applied (the Delta merge-on-read read path): rows whose
-    ``(file, row_index)`` appears in a tombstone relation are
-    anti-joined away. DV relations are row-count-sized for the deletes,
-    not the table, so AQE plans the anti-join as a broadcast for every
-    sane DV size; a table accumulating massive DVs should
-    ``compact_table`` (which materializes deletes and drops the DVs).
-    No DVs ⇒ the plain parquet scan, zero overhead. ``mapping`` is the
-    version's (logical, physical) column pairs (:func:`_mapping_pairs`):
-    the scan sees physical names, the returned frame logical ones — a
-    drop is simply an unselected physical.
+    """Scan ``rel_files`` (a subset of snapshot ``m``'s files) with the
+    snapshot's DELETION VECTORS applied (the Delta merge-on-read read
+    path): rows whose ``(file, row_index)`` appears in a tombstone
+    relation are anti-joined away. DV relations are row-count-sized for
+    the deletes, not the table, so AQE plans the anti-join as a
+    broadcast for every sane DV size; a table accumulating massive DVs
+    should ``compact_table`` (which materializes deletes and drops the
+    DVs). No DVs ⇒ the plain parquet scan, zero overhead. ``dv_files``
+    overrides the snapshot's DVs (the change feed reads added files
+    with ``[]``).
 
-    ``schema_json`` (the commit's schema) pins the SCAN schema instead
-    of letting Spark infer it from one file: files written before a
-    column existed read that column as NULL (the Delta schema-evolution
-    / metadata-only ADD COLUMN semantics), and the parquet readers'
-    widening promotions (Spark 4: int→long, float→double) resolve
-    narrower old files under the committed wider type. Without it a
-    mixed-physical-schema file list would resolve to whichever file the
-    reader sampled.
-
-    ``partitioning`` (the manifest's declared partition columns) makes
-    the scan recover those columns from the hive ``key=value`` path
-    segments (:func:`_physical_scan`) — they are NOT in the files,
-    exactly like Delta."""
+    Everything else derives from the snapshot. Its column mapping
+    (:func:`_mapping_pairs`): the scan sees physical names, the returned
+    frame logical ones — a drop is simply an unselected physical. Its
+    schema pins the SCAN schema instead of letting Spark infer it from
+    one file: files written before a column existed read that column as
+    NULL (the Delta schema-evolution / metadata-only ADD COLUMN
+    semantics), and the parquet readers' widening promotions (Spark 4:
+    int→long, float→double) resolve narrower old files under the
+    committed wider type. Its partition columns
+    (:func:`_scan_partitioning`) are recovered from the hive
+    ``key=value`` path segments (:func:`_physical_scan`) — they are NOT
+    in the files, exactly like Delta."""
+    mapping = _mapping_pairs(m)
+    if dv_files is None:
+        dv_files = _dv_set(m)
 
     def _logical(df: DataFrame) -> DataFrame:
         if not mapping:
@@ -1098,9 +1183,9 @@ def _read_files(
 
     store = get_log_store(table)
     tagged = _physical_scan(
-        spark, table, rel_files, schema_json=schema_json,
+        spark, table, rel_files, schema_json=m["schema"],
         mapping=dict(mapping) if mapping else None,
-        partitioning=partitioning, with_meta=bool(dv_files),
+        partitioning=_scan_partitioning(m) or None, with_meta=bool(dv_files),
     )
     if not dv_files:
         return _logical(tagged)
@@ -1372,8 +1457,8 @@ def create_table(
         schema = T._parse_datatype_string(schema)
     if partition_by:
         _validate_partition_cols(schema, list(partition_by))
-    while True:
-        cur = current_version(table)
+
+    def attempt(cur, m):
         if cur is not None:
             if if_not_exists:
                 return cur
@@ -1381,11 +1466,12 @@ def create_table(
                 f"table already exists at {table} (v{cur}); use IF NOT EXISTS "
                 "for the idempotent form"
             )
-        if _try_commit(
-            table, 1, [], None, schema.json(), meta=meta, operation="create",
+        return _Commit(
+            files=[], schema=schema.json(), meta=meta, operation="create",
             props={"partitioning": list(partition_by) if partition_by else None},
-        ):
-            return 1
+        )
+
+    return _commit(table, attempt, create=True)
 
 
 def clone_table(src: str, dst: str, version: int | None = None) -> int:
@@ -1442,22 +1528,21 @@ def clone_table(src: str, dst: str, version: int | None = None) -> int:
                 e["bloom"] = _absolute(e["bloom"])
             stats[abs_of[rel]] = e
     dv = [_absolute(f) for f in _dv_set(m)]
-    while True:
-        if current_version(dst) is not None:
+
+    def attempt(cur, _m):
+        if cur is not None:
             raise ValueError(f"clone target {dst} already exists")
-        if _try_commit(
-            dst,
-            1,
-            files,
-            None,
-            m["schema"],
+        return _Commit(
+            files=files,
+            schema=m["schema"],
             meta={"clone": {"source": src, "of_version": v}},
             stats=stats,
             dv_files=dv,
             operation="clone",
             props={k: m.get(k) for k in TABLE_PROPS},
-        ):
-            return 1
+        )
+
+    return _commit(dst, attempt, create=True)
 
 
 def convert_to_table(
@@ -1513,21 +1598,20 @@ def convert_to_table(
 
         filestats.validate_stats_cols(schema, list(stats_cols))
         stats = filestats.collect_file_stats(spark, table, files, list(stats_cols))
-    while True:
-        if current_version(table) is not None:
+
+    def attempt(cur, m):
+        if cur is not None:
             raise ValueError(f"{table} is already a manifest table")
-        if _try_commit(
-            table,
-            1,
-            files,
-            None,
-            schema.json(),
+        return _Commit(
+            files=files,
+            schema=schema.json(),
             meta={"convert": {"n_files": len(files)}},
             stats=stats,
             operation="convert",
             props={"partitioning": partitioning or None},
-        ):
-            return 1
+        )
+
+    return _commit(table, attempt, create=True)
 
 
 def write_table(
@@ -1771,9 +1855,9 @@ def write_table(
         )
     if ident0:
         props["identity"] = _advance_identity(ident0, files, stats or {})
-    while True:
-        cur = current_version(table)
-        cur_doc = read_manifest(table, cur) if cur is not None else None
+
+    def attempt(cur, cur_doc):
+        nonlocal checked_cons
         # the data files were written under `mapping`; a concurrent
         # rename/drop landing between the write and this CAS would make
         # that layout stale, and silently committing OUR mapping would
@@ -1811,15 +1895,13 @@ def write_table(
                 f"partitioning of {table} changed concurrently with this "
                 "write; re-run against the new table layout"
             )
-        base_doc = None if mode == "overwrite" else cur_doc
-        # appends commit the RECONCILED schema (parent widened by the
-        # batch, never narrowed) — resolved against the parent this CAS
-        # attempt actually lands on
-        commit_schema = (
-            schema_json if base_doc is None
-            else _reconcile_append_schema(base_doc["schema"], df.schema)
-        )
-        base = [] if base_doc is None else base_doc["files"]
+        if mode == "overwrite" or cur_doc is None:
+            # overwrite replaces the data, so its tombstones die with it
+            return _Commit(
+                files=files, schema=schema_json, meta=meta, stats=stats,
+                dv_files=[], operation=mode, props=props,
+            )
+        base = cur_doc["files"]
         if touched is not None:
             # dynamic partition overwrite: the batch's partitions drop
             # their old files (path metadata alone — zero I/O), every
@@ -1831,27 +1913,17 @@ def write_table(
                     _partition_values_from_path(f).get(c) for c in phys_part
                 ) not in touched
             ]
-        base_set = set(base)
-        merged_stats = dict(stats or {})
-        if base_doc is not None:
-            for f, st in (base_doc.get("stats") or {}).items():
-                if f in base_set:
-                    merged_stats.setdefault(f, st)
-        if _try_commit(
-            table,
-            (cur or 0) + 1,
-            base + files,
-            cur,
-            commit_schema,
-            meta=meta,
-            stats=merged_stats or None,
-            # appends keep the parent's deletion vectors in effect;
-            # overwrite replaces the data, so its tombstones die with it
-            dv_files=_dv_set(base_doc),
-            operation=mode,
-            props=props,
-        ):
-            return (cur or 0) + 1
+        # appends commit the RECONCILED schema (parent widened by the
+        # batch, never narrowed) — resolved against the parent this CAS
+        # attempt actually lands on — and keep the parent's deletion
+        # vectors in effect
+        return _Commit(
+            files=base + files,
+            schema=_reconcile_append_schema(cur_doc["schema"], df.schema),
+            meta=meta, stats=stats, operation=mode, props=props,
+        )
+
+    return _commit(table, attempt, create=True)
 
 
 def drop_partition(table: str, values: dict) -> int:
@@ -1868,11 +1940,8 @@ def drop_partition(table: str, values: dict) -> int:
     (unchanged if no file matches)."""
     if not values:
         raise ValueError("DROP PARTITION needs at least one col=value pair")
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         part = _partitioning(m)
         unknown = [c for c in values if c not in part]
         if unknown:
@@ -1894,29 +1963,19 @@ def drop_partition(table: str, values: dict) -> int:
         if not dropped:
             return cur  # no matching partition — no version churn
         dropped_set = set(dropped)
-        kept = [f for f in m["files"] if f not in dropped_set]
-        stats = {
-            f: e for f, e in (m.get("stats") or {}).items() if f not in dropped_set
-        }
         meta = dict(m.get("meta") or {})
         meta["drop_partition"] = {
             "values": {c: _hive_render(v) for c, v in values.items()},
             "files_dropped": len(dropped),
         }
-        if _try_commit(
-            table,
-            cur + 1,
-            kept,
-            cur,
-            m["schema"],
-            meta=meta,
-            stats=stats or None,
-            # tombstones referencing dropped files match nothing; ones on
-            # kept files stay in effect
-            dv_files=_dv_set(m),
-            operation="drop_partition",
-        ):
-            return cur + 1
+        # tombstones referencing dropped files match nothing; ones on
+        # kept files stay in effect
+        return _Commit(
+            files=[f for f in m["files"] if f not in dropped_set],
+            meta=meta, operation="drop_partition",
+        )
+
+    return _commit(table, attempt)
 
 
 def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -> int:
@@ -1928,21 +1987,15 @@ def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -
     be predicate literals — e.g. a CDC batch's delete keys. Returns the
     committed version (unchanged if no file could hold a delete key)."""
     keys_only = keys_df.select(key).distinct()
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         cand, carried, stats = _merge_candidate_split(spark, table, m, key, keys_only)
         if not cand:
             return cur  # no file can hold any delete key — no version churn
         # NULL-SAFE key matching (ADVICE r8): a NULL delete key must
         # remove the NULL-keyed row — the one-row-per-key invariant
         # treats NULL as a key group, so the DML surface must too
-        target = _read_files(
-            spark, table, cand, _dv_set(m), mapping=_mapping_pairs(m),
-            schema_json=m["schema"], partitioning=_partitioning(m) or None,
-        )
+        target = _read_files(spark, table, cand, m)
         dk = keys_only.select(F.col(key).alias("__del_key"))
         survivors = target.join(
             dk, on=target[key].eqNullSafe(dk["__del_key"]), how="left_anti"
@@ -1951,24 +2004,17 @@ def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -
             survivors, table, mapping=_mapping(m),
             partition_by=_phys_partitioning(m),
         )
-        merged_stats = _refresh_stats(spark, table, stats, carried, new_files)
-        merged_stats = _build_bloom_sidecar(
-            spark, table, new_files, survivors.schema, _bloom_table_conf(m), merged_stats
+        new_stats = _build_bloom_sidecar(
+            spark, table, new_files, survivors.schema, _bloom_table_conf(m),
+            _refresh_stats(spark, table, stats, new_files),
         )
         meta = dict(m.get("meta") or {})
         meta["delete"] = {"mode": "keyed", "rewritten": len(cand), "carried": len(carried)}
-        if _try_commit(
-            table,
-            cur + 1,
-            carried + new_files,
-            cur,
-            m["schema"],
-            meta=meta,
-            stats=merged_stats or None,
-            dv_files=_dv_set(m),
-            operation="delete",
-        ):
-            return cur + 1
+        return _Commit(
+            files=carried + new_files, meta=meta, stats=new_stats, operation="delete"
+        )
+
+    return _commit(table, attempt)
 
 
 def apply_changes(
@@ -2037,11 +2083,8 @@ def rename_column(table: str, old: str, new: str) -> int:
     to a pre-rename version reads under that version's own names.
     Refused for bloom-indexed columns (the sidecar path is physical;
     drop the bloom property first). Returns the committed version."""
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         schema = json.loads(m["schema"])
         names = [f["name"] for f in schema["fields"]]
         if old not in names:
@@ -2076,19 +2119,14 @@ def rename_column(table: str, old: str, new: str) -> int:
         # the declared layout FOLLOWS the rename (round-10 review: an
         # unreconciled layout bricks every later bare OPTIMIZE/compact)
         layout = _rename_in_layout(m.get("layout"), old, new)
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            json.dumps(schema),
+        return _Commit(
+            schema=json.dumps(schema),
             meta={"rename_column": {"from": old, "to": new}},
-            stats=m.get("stats") or None,
-            dv_files=_dv_set(m),
             operation="rename_column",
             props={"column_mapping": mapping, "layout": layout},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def drop_column(table: str, col: str) -> int:
@@ -2098,11 +2136,8 @@ def drop_column(table: str, col: str) -> int:
     selected again (vacuumed storage comes from the next compaction,
     which rewrites without it). Refused for bloom-indexed columns and
     for the last remaining column. Returns the committed version."""
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         schema = json.loads(m["schema"])
         names = [f["name"] for f in schema["fields"]]
         if col not in names:
@@ -2129,19 +2164,14 @@ def drop_column(table: str, col: str) -> int:
         schema["fields"] = [f for f in schema["fields"] if f["name"] != col]
         mapping = {f["name"]: mapping.get(f["name"], f["name"]) for f in schema["fields"]}
         layout = _drop_from_layout(m.get("layout"), col)
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            json.dumps(schema),
+        return _Commit(
+            schema=json.dumps(schema),
             meta={"drop_column": {"column": col}},
-            stats=m.get("stats") or None,
-            dv_files=_dv_set(m),
             operation="drop_column",
             props={"column_mapping": mapping, "layout": layout},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def add_column(table: str, name: str, dtype: "T.DataType | str") -> int:
@@ -2160,11 +2190,8 @@ def add_column(table: str, name: str, dtype: "T.DataType | str") -> int:
     exist). Returns the committed version."""
     if isinstance(dtype, str):
         dtype = T._parse_datatype_string(dtype)
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         schema = json.loads(m["schema"])
         names = [f["name"] for f in schema["fields"]]
         if name in names:
@@ -2187,19 +2214,14 @@ def add_column(table: str, name: str, dtype: "T.DataType | str") -> int:
             while phys in mapping.values():
                 phys += "_"
             mapping[name] = phys
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            json.dumps(schema),
+        return _Commit(
+            schema=json.dumps(schema),
             meta={"add_column": {"column": name, "type": dtype.simpleString()}},
-            stats=m.get("stats") or None,
-            dv_files=_dv_set(m),
             operation="add_column",
             props={"column_mapping": mapping},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 # sound type promotions the parquet readers resolve at scan time
@@ -2223,11 +2245,8 @@ def widen_column(table: str, name: str, new_type: "T.DataType | str") -> int:
     Returns the committed version."""
     if isinstance(new_type, str):
         new_type = T._parse_datatype_string(new_type)
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         schema = json.loads(m["schema"])
         field = next((f for f in schema["fields"] if f["name"] == name), None)
         if field is None:
@@ -2247,18 +2266,13 @@ def widen_column(table: str, name: str, new_type: "T.DataType | str") -> int:
                 "needs an explicit rewrite"
             )
         field["type"] = json.loads(T.StructField(name, new_type, True).json())["type"]
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            json.dumps(schema),
+        return _Commit(
+            schema=json.dumps(schema),
             meta={"widen_column": {"column": name, "from": old_s, "to": new_s}},
-            stats=m.get("stats") or None,
-            dv_files=_dv_set(m),
             operation="widen_column",
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def _constraints(m: dict | None) -> dict:
@@ -2314,11 +2328,8 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
 
     if not _re.match(r"^[A-Za-z_][A-Za-z0-9_]*$", name):
         raise ValueError(f"constraint name {name!r} must be an identifier")
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         cons = _constraints(m)
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists: {cons[name]!r}")
@@ -2328,45 +2339,30 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
             f"the existing rows of {table} v{cur}",
         )
         cons[name] = expr
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            m["schema"],
+        return _Commit(
             meta={"add_constraint": {"name": name, "expr": expr}},
-            stats=m.get("stats") or None,
-            dv_files=_dv_set(m),
             operation="add_constraint",
             props={"constraints": cons},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def drop_constraint(table: str, name: str) -> int:
     """``ALTER TABLE .. DROP CONSTRAINT name`` — metadata-only."""
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         cons = _constraints(m)
         if name not in cons:
             raise ValueError(f"no constraint {name!r} on {table} (have {sorted(cons)})")
         cons.pop(name)
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            m["schema"],
+        return _Commit(
             meta={"drop_constraint": {"name": name}},
-            stats=m.get("stats") or None,
-            dv_files=_dv_set(m),
             operation="drop_constraint",
             props={"constraints": cons or None},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def _refuse_constrained_column_change(m: dict, col: str, what: str) -> None:
@@ -2571,11 +2567,8 @@ def add_generated_column(table: str, name: str, dtype: "T.DataType | str", expr:
     contract). The CREATE TABLE → ALTER → INSERT serving flow declares
     them before any data lands. Returns the committed version."""
     dt_parsed = T._parse_datatype_string(dtype) if isinstance(dtype, str) else dtype
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         if m["files"]:
             raise ValueError(
                 f"cannot add generated column {name!r} to non-empty {table}: "
@@ -2590,17 +2583,14 @@ def add_generated_column(table: str, name: str, dtype: "T.DataType | str", expr:
         schema["fields"].append(json.loads(T.StructField(name, dt_parsed, True).json()))
         gen = _generated(m)
         gen[name] = {"expr": expr, "type": dt_parsed.simpleString()}
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            json.dumps(schema),
+        return _Commit(
+            schema=json.dumps(schema),
             meta={"add_generated_column": {"column": name, "expr": expr}},
             operation="add_generated_column",
             props={"generated": gen},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 # ---------------------------------------------------------------------------
@@ -2638,11 +2628,8 @@ def add_identity_column(table: str, name: str, start: int = 1, step: int = 1) ->
     relies on). Returns the committed version."""
     if step <= 0:
         raise ValueError(f"identity step must be positive, got {step}")
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         if m["files"]:
             raise ValueError(
                 f"cannot add identity column {name!r} to non-empty {table}: "
@@ -2657,17 +2644,14 @@ def add_identity_column(table: str, name: str, start: int = 1, step: int = 1) ->
         )
         ident = _identity(m)
         ident[name] = {"start": int(start), "step": int(step), "next": int(start)}
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            json.dumps(schema),
+        return _Commit(
+            schema=json.dumps(schema),
             meta={"add_identity_column": {"column": name, "start": start, "step": step}},
             operation="add_identity_column",
             props={"identity": ident},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def _assign_identity(df: DataFrame, ident: dict) -> tuple[DataFrame, bool]:
@@ -2776,30 +2760,23 @@ def restore_table(table: str, version: int | None = None, as_of_ts: float | None
     if version > cur0:
         raise ValueError(f"cannot restore {table} to future version {version} (current {cur0})")
     target = read_manifest(table, version)
-    while True:
-        cur = current_version(table)
-        meta = {"restore": {"of_version": version}}
-        if _try_commit(
-            table,
-            cur + 1,
-            target["files"],
-            cur,
-            target["schema"],
-            meta=meta,
-            stats=target.get("stats") or None,
-            dv_files=_dv_set(target),
-            operation="restore",
-            # the restored version's OWN table properties, every one
-            # named (None clears): inheriting the CURRENT parent's
-            # constraints or layout could reference columns the restored
-            # schema no longer has, bricking every later write/OPTIMIZE
-            # (round-10 review). Restoring also restores the identity
-            # HIGH-WATER — ids allocated after the restored version may
-            # be re-issued (they exist only in the no-longer-current
-            # history), the Delta RESTORE + identity caveat
-            props={k: target.get(k) for k in TABLE_PROPS},
-        ):
-            return cur + 1
+    # the restored version's OWN files, schema, stats, tombstones and
+    # table properties, every one named (None clears): inheriting the
+    # CURRENT parent's constraints or layout could reference columns the
+    # restored schema no longer has, bricking every later write/OPTIMIZE.
+    # Restoring also restores the identity HIGH-WATER — ids allocated
+    # after the restored version may be re-issued (they exist only in the
+    # no-longer-current history), the Delta RESTORE + identity caveat
+    restored = _Commit(
+        files=target["files"],
+        schema=target["schema"],
+        meta={"restore": {"of_version": version}},
+        stats=target.get("stats"),
+        dv_files=_dv_set(target),
+        operation="restore",
+        props={k: target.get(k) for k in TABLE_PROPS},
+    )
+    return _commit(table, lambda cur, m: restored)
 
 
 # describe_detail's property columns: bloom_conf comes last there
@@ -2994,8 +2971,8 @@ def publish_staged(table: str, token: str, meta: dict | None = None) -> int:
     same FileNotFoundError. Returns the committed version."""
     stage = _read_stage(table, token)
     store = get_log_store(table)
-    while True:
-        cur = current_version(table)
+
+    def attempt(cur, cur_doc):
         if token in committed_meta_values(table, "wap_token"):
             # a concurrent publisher of the same token won the CAS: its
             # commit is the one publication this token gets. Consume the
@@ -3009,13 +2986,6 @@ def publish_staged(table: str, token: str, meta: dict | None = None) -> int:
                 f"stage token {token!r} was already published to {table} "
                 "by a concurrent publisher"
             )
-        cur_doc = read_manifest(table, cur) if cur is not None else None
-        base = cur_doc["files"] if cur_doc else []
-        base_set = set(base)
-        merged_stats = dict(stage.get("stats") or {})
-        for f, st in ((cur_doc or {}).get("stats") or {}).items():
-            if f in base_set:
-                merged_stats.setdefault(f, st)
         # the staged files were written under the STAGE's column mapping;
         # a rename landing between stage and publish makes that layout
         # stale — refuse loudly (re-stage) rather than revert the rename
@@ -3031,20 +3001,18 @@ def publish_staged(table: str, token: str, meta: dict | None = None) -> int:
                     )
                 commit_map.setdefault(k, v)
             props = {"column_mapping": commit_map}
-        if _try_commit(
-            table,
-            (cur or 0) + 1,
-            base + stage["files"],
-            cur,
-            stage["schema"],
+        return _Commit(
+            files=(cur_doc["files"] if cur_doc else []) + stage["files"],
+            schema=stage["schema"],
             meta={**(meta or {}), "wap_token": token},
-            stats=merged_stats or None,
-            dv_files=_dv_set(cur_doc),
+            stats=stage.get("stats"),
             operation="wap_publish",
             props=props,
-        ):
-            store.delete_file(store.join(table, _STAGED_DIR, f"{token}.json"))
-            return (cur or 0) + 1
+        )
+
+    version = _commit(table, attempt, create=True)
+    store.delete_file(store.join(table, _STAGED_DIR, f"{token}.json"))
+    return version
 
 
 def discard_staged(table: str, token: str) -> None:
@@ -3187,10 +3155,7 @@ def read_table(
     if not files:
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         return local_rows_df(spark, [], schema)
-    out = _read_files(
-        spark, table, files, _dv_set(m), mapping=_mapping_pairs(m),
-        schema_json=m["schema"], partitioning=_scan_partitioning(m) or None,
-    )
+    out = _read_files(spark, table, files, m)
     if skip:
         out = out.filter(filestats.skip_condition(skip))
     return out
@@ -3263,10 +3228,7 @@ def read_changes(
     if not added:
         schema = T.StructType.fromJson(json.loads(m_to["schema"]))
         return local_rows_df(spark, [], schema)
-    return _read_files(
-        spark, table, added, None, mapping=_mapping_pairs(m_to),
-        schema_json=m_to["schema"], partitioning=_partitioning(m_to) or None,
-    )
+    return _read_files(spark, table, added, m_to, dv_files=[])
 
 
 def read_changes_rows(
@@ -3318,10 +3280,9 @@ def read_changes_rows(
                 schema.fields + [T.StructField("_change_type", T.StringType(), False)]
             )
             return local_rows_df(spark, [], out_schema)
-        return _read_files(
-            spark, table, added, None, mapping=_mapping_pairs(m_to),
-            schema_json=m_to["schema"], partitioning=_partitioning(m_to) or None,
-        ).withColumn("_change_type", F.lit("insert"))
+        return _read_files(spark, table, added, m_to, dv_files=[]).withColumn(
+            "_change_type", F.lit("insert")
+        )
     if from_version == 0:
         # snapshot bootstrap: everything visible at to_v is an insert —
         # DV-applied via read_table, no key needed even over rewrites
@@ -3420,11 +3381,9 @@ def compact_table(
     if zorder_by and stats_cols is None:
         stats_cols = list(zorder_by)
     explicit_layout = bool(cluster_by or zorder_by)
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
+        nonlocal cluster_by, zorder_by
         if not explicit_layout:
             # a bare OPTIMIZE keeps the DECLARED layout (the table
             # property write_table recorded) instead of degrading a
@@ -3474,21 +3433,21 @@ def compact_table(
         stats = _build_bloom_sidecar(
             spark, table, files, snapshot.schema, _bloom_table_conf(m), stats
         )
-        if _try_commit(
-            table,
-            cur + 1,
-            files,
-            cur,
-            snapshot.schema.json(),
+        # the rewrite materializes every deletion vector: they all drop
+        return _Commit(
+            files=files,
+            schema=snapshot.schema.json(),
             stats=stats,
+            dv_files=[],
             operation="compact",
             props=(
                 {"layout": {"cluster_by": list(cluster_by)}} if cluster_by
                 else {"layout": {"zorder_by": list(zorder_by)}} if zorder_by
                 else None
             ),
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def optimize_table(
@@ -3525,11 +3484,8 @@ def optimize_table(
 
     if predicates is not None:
         filestats.skip_condition(predicates)  # validate up front
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         files = m["files"]
         stats = dict(m.get("stats") or {})
         scope = files
@@ -3577,10 +3533,7 @@ def optimize_table(
         n_out = max(1, -(-small_rows // target_rows))
         small_set = set(small)
         carried = [f for f in files if f not in small_set]
-        packed = _read_files(
-            spark, table, small, _dv_set(m), mapping=_mapping_pairs(m),
-            schema_json=m["schema"], partitioning=_partitioning(m) or None,
-        )
+        packed = _read_files(spark, table, small, m)
         lay = m.get("layout") or {}
         if lay.get("cluster_by"):
             # the declared layout survives maintenance: packed files
@@ -3596,13 +3549,10 @@ def optimize_table(
             packed, table, mapping=_mapping(m),
             partition_by=_phys_partitioning(m),
         )
-        merged_stats = _refresh_stats(
-            spark, table, m.get("stats") or {}, carried, new_files
-        )
-        merged_stats = _build_bloom_sidecar(
+        new_stats = _build_bloom_sidecar(
             spark, table, new_files,
             T.StructType.fromJson(json.loads(m["schema"])),
-            _bloom_table_conf(m), merged_stats,
+            _bloom_table_conf(m), _refresh_stats(spark, table, m.get("stats") or {}, new_files),
         )
         # tombstone relations whose every referenced file was rewritten
         # are dead — drop them so reads stop paying the anti-join
@@ -3625,21 +3575,18 @@ def optimize_table(
             "n_out": n_out,
             "target_rows": target_rows,
         }
-        if _try_commit(
-            table,
-            cur + 1,
-            carried + new_files,
-            cur,
-            m["schema"],
+        return _Commit(
+            files=carried + new_files,
             meta=meta,
-            stats=merged_stats or None,
+            stats=new_stats,
             # untouched files keep their tombstones; entries naming the
             # rewritten files match nothing (materialized by the read),
             # and fully-dead relations drop entirely
             dv_files=keep_dvs,
             operation="optimize",
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def _orderable(dt: T.DataType) -> bool:
@@ -3745,16 +3692,14 @@ def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str)
     columns so pruning compounds across merges; stats-less tables keep
     the original whole-table rewrite."""
     incoming_unique = _one_row_per_key(incoming, key)
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            files = _write_data_files(incoming_unique, table)
-            if _try_commit(
-                table, 1, files, None, incoming_unique.schema.json(), operation="merge"
-            ):
-                return 1
-            continue
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
+        nonlocal incoming_unique
+        if m is None:
+            return _Commit(
+                files=_write_data_files(incoming_unique, table),
+                schema=incoming_unique.schema.json(), operation="merge",
+            )
         incoming_unique = _apply_generated(
             incoming_unique, _generated(m), "the MERGE source"
         )
@@ -3762,10 +3707,7 @@ def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str)
         _check_constraints(incoming_unique, _constraints(m), "the MERGE source")
         cand, carried, stats = _merge_candidate_split(spark, table, m, key, incoming_unique)
         if cand:
-            target = _read_files(
-                spark, table, cand, _dv_set(m), mapping=_mapping_pairs(m),
-                schema_json=m["schema"], partitioning=_partitioning(m) or None,
-            )
+            target = _read_files(spark, table, cand, m)
             # NULL-SAFE key collision (ADVICE r8): the NULL group is a
             # key like any other (matching _one_row_per_key's window
             # partitioning) — a NULL-keyed incoming row REPLACES the
@@ -3782,34 +3724,29 @@ def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str)
             merged, table, mapping=_extend_mapping(_mapping(m), merged.columns),
             partition_by=_phys_partitioning(m),
         )
-        merged_stats = _refresh_stats(
-            spark, table, stats, carried, new_files, extra_cols=list(_identity(m))
-        )
-        merged_stats = _build_bloom_sidecar(
-            spark, table, new_files, merged.schema, _bloom_table_conf(m), merged_stats
+        new_stats = _build_bloom_sidecar(
+            spark, table, new_files, merged.schema, _bloom_table_conf(m),
+            _refresh_stats(spark, table, stats, new_files, extra_cols=list(_identity(m))),
         )
         new_ident = (
-            _advance_identity(_identity(m), new_files, merged_stats)
+            _advance_identity(_identity(m), new_files, new_stats)
             if _identity(m) else None
         )
-        if _try_commit(
-            table,
-            cur + 1,
-            carried + new_files,
-            cur,
-            merged.schema.json(),
-            stats=merged_stats or None,
-            # carried files keep their tombstones; entries referencing the
-            # rewritten (now-unreferenced) files match nothing — harmless,
-            # reclaimed at the next compaction
-            dv_files=_dv_set(m),
+        # carried files keep their tombstones; entries referencing the
+        # rewritten (now-unreferenced) files match nothing — harmless,
+        # reclaimed at the next compaction
+        return _Commit(
+            files=carried + new_files,
+            schema=merged.schema.json(),
+            stats=new_stats,
             operation="merge",
             props={
                 "column_mapping": _extend_mapping(_mapping(m), merged.columns),
                 "identity": new_ident,
             },
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt, create=True)
 
 
 def _validate_merge_clauses(when_matched, when_not_matched, out_cols, src_cols):
@@ -3887,25 +3824,20 @@ def merge_table(
     if not wm and not wnm:
         raise ValueError("MERGE with no WHEN clauses does nothing; pass at least one")
     incoming_unique = _one_row_per_key(source, key)
-    src_cols = incoming_unique.columns
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
+        nonlocal incoming_unique
         incoming_unique = _apply_generated(
             incoming_unique, _generated(m), "the MERGE source"
         )
         _refuse_identity_missing(incoming_unique.columns, m, "the MERGE source")
-        src_cols = incoming_unique.columns
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        _validate_merge_clauses(wm, wnm, [f.name for f in schema.fields], src_cols)
+        _validate_merge_clauses(
+            wm, wnm, [f.name for f in schema.fields], incoming_unique.columns
+        )
         cand, carried, stats = _merge_candidate_split(spark, table, m, key, incoming_unique)
         if cand:
-            target = _read_files(
-                spark, table, cand, _dv_set(m), mapping=_mapping_pairs(m),
-                schema_json=m["schema"], partitioning=_partitioning(m) or None,
-            )
+            target = _read_files(spark, table, cand, m)
         else:
             target = local_rows_df(spark, [], schema)
         t = target.withColumn("__t_present", F.lit(True)).alias(t_alias)
@@ -3979,59 +3911,47 @@ def merge_table(
             merged, table, mapping=_mapping(m),
             partition_by=_phys_partitioning(m),
         )
-        merged_stats = _refresh_stats(
-            spark, table, stats, carried, new_files, extra_cols=list(_identity(m))
-        )
-        merged_stats = _build_bloom_sidecar(
-            spark, table, new_files, schema, _bloom_table_conf(m), merged_stats
+        new_stats = _build_bloom_sidecar(
+            spark, table, new_files, schema, _bloom_table_conf(m),
+            _refresh_stats(spark, table, stats, new_files, extra_cols=list(_identity(m))),
         )
         new_ident = (
-            _advance_identity(_identity(m), new_files, merged_stats)
+            _advance_identity(_identity(m), new_files, new_stats)
             if _identity(m) else None
         )
-        if _try_commit(
-            table,
-            cur + 1,
-            carried + new_files,
-            cur,
-            m["schema"],
-            stats=merged_stats or None,
-            # carried files keep their tombstones (upsert_table's note)
-            dv_files=_dv_set(m),
+        # carried files keep their tombstones (upsert_table's note)
+        return _Commit(
+            files=carried + new_files,
+            stats=new_stats,
             operation="merge",
             props={"identity": new_ident},
-        ):
-            return cur + 1
+        )
+
+    return _commit(table, attempt)
 
 
 def _refresh_stats(
     spark: SparkSession,
     table: str,
     stats: dict,
-    carried: list[str],
     new_files: list[str],
     extra_cols: "tuple | list" = (),
 ) -> dict:
-    """Stats for a partial-rewrite commit: carried files keep their
-    entries verbatim; new files get fresh stats for the UNION of columns
-    the parent tracked anywhere (so pruning compounds across DML/merges
-    instead of eroding file by file). Stats-less parents stay
-    stats-less. ``extra_cols`` forces collection for columns the parent
-    may not track yet (identity columns — their high-water advance reads
-    these entries)."""
+    """Stats for a partial-rewrite commit's NEW files: fresh entries for
+    the UNION of columns the parent ``stats`` tracked anywhere (so
+    pruning compounds across DML/merges instead of eroding file by
+    file); carried files keep their entries through the commit loop's
+    carry rule. Stats-less parents stay stats-less. ``extra_cols``
+    forces collection for columns the parent may not track yet (identity
+    columns — their high-water advance reads these entries)."""
     from cashback_data_pipeline_spark.sinks import filestats
 
     stats_cols = sorted(
         {c for e in stats.values() for c in (e.get("cols") or {})} | set(extra_cols)
     )
-    new_stats = (
-        filestats.collect_file_stats(spark, table, new_files, stats_cols)
-        if stats_cols
-        else {}
-    )
-    merged_stats = {f: stats[f] for f in carried if f in stats}
-    merged_stats.update(new_stats)
-    return merged_stats
+    if not stats_cols:
+        return {}
+    return filestats.collect_file_stats(spark, table, new_files, stats_cols)
 
 
 def append_table_if_absent(
@@ -4055,24 +3975,18 @@ def append_table_if_absent(
     files get fresh entries (previously an idempotent append silently
     DROPPED the table's stats, eroding data skipping)."""
     incoming_unique = _one_row_per_key(incoming, key)
-    while True:
-        cur = current_version(table)
-        if cur is None:
+
+    def attempt(cur, m):
+        if m is None:
             fresh = incoming_unique
-            m = None
         else:
-            m = read_manifest(table, cur)
             cand, _, _ = _merge_candidate_split(spark, table, m, key, incoming_unique)
             if cand:
                 # DV-applied key screen: a merge-on-read-DELETEd key is
                 # absent, so the NOT-EXISTS load re-admits it (ghost keys
                 # must not block re-insertion)
                 target_keys = (
-                    _read_files(
-                        spark, table, cand, _dv_set(m),
-                        mapping=_mapping_pairs(m), schema_json=m["schema"],
-                        partitioning=_partitioning(m) or None,
-                    )
+                    _read_files(spark, table, cand, m)
                     .select(F.col(key).alias("__seen_key"))
                     .distinct()
                 )
@@ -4101,43 +4015,39 @@ def append_table_if_absent(
                 fresh, table, mapping=_extend_mapping(_mapping(m), fresh.columns),
                 partition_by=_phys_partitioning(m),
             )
-            base = [] if m is None else m["files"]
-            stats = (m or {}).get("stats") or {}
-            merged_stats = _refresh_stats(
-                spark, table, stats, base, files, extra_cols=list(ident)
-            )
-            merged_stats = _build_bloom_sidecar(
-                spark, table, files, fresh.schema, _bloom_table_conf(m), merged_stats
+            new_stats = _build_bloom_sidecar(
+                spark, table, files, fresh.schema, _bloom_table_conf(m),
+                _refresh_stats(
+                    spark, table, (m or {}).get("stats") or {}, files,
+                    extra_cols=list(ident),
+                ),
             )
             new_ident = (
-                _advance_identity(ident, files, merged_stats) if ident else None
+                _advance_identity(ident, files, new_stats) if ident else None
             )
             # commit the RECONCILED schema (parent widened by the batch,
             # never narrowed) — the write_table append discipline; an
-            # old-shape idempotent load must not revert an ADD COLUMN
-            commit_schema = (
-                fresh.schema.json() if m is None
-                else _reconcile_append_schema(m["schema"], fresh.schema)
-            )
-            if _try_commit(
-                table,
-                (cur or 0) + 1,
-                base + files,
-                cur,
-                commit_schema,
-                stats=merged_stats or None,
-                dv_files=_dv_set(m),
+            # old-shape idempotent load must not revert an ADD COLUMN.
+            # On CAS loss the anti-join recomputes against the winner's
+            # version (orphaned files → vacuum)
+            return _Commit(
+                files=([] if m is None else m["files"]) + files,
+                schema=(
+                    fresh.schema.json() if m is None
+                    else _reconcile_append_schema(m["schema"], fresh.schema)
+                ),
+                stats=new_stats,
                 operation="append_if_absent",
                 props={
                     "column_mapping": _extend_mapping(_mapping(m), fresh.columns),
                     "identity": new_ident,
                 },
-            ):
-                return n
-            # CAS lost — a racing loader committed; recompute the
-            # anti-join against its version (orphaned files → vacuum)
+                result=n,
+            )
         finally:
             fresh.unpersist()
+
+    return _commit(table, attempt, create=True)
 
 
 def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_key: str) -> int:
@@ -4156,11 +4066,8 @@ def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_
     from cashback_data_pipeline_spark.sinks import filestats
 
     cond = filestats.skip_condition(predicates)
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         files = m["files"]
         stats = m.get("stats") or {}
         store = get_log_store(table)
@@ -4178,10 +4085,7 @@ def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_
         carried = [f for f in files if f not in cand_set]
         if not cand:
             return cur  # stats prove nothing matches — no version churn
-        snap = _read_files(
-            spark, table, cand, _dv_set(m), mapping=_mapping_pairs(m),
-            schema_json=m["schema"], partitioning=_partitioning(m) or None,
-        )
+        snap = _read_files(spark, table, cand, m)
         rewritten = transform(snap, cond.eqNullSafe(F.lit(True)))
         if meta_key == "update":
             _check_constraints(rewritten, _constraints(m), "the UPDATE result")
@@ -4189,29 +4093,21 @@ def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_
             rewritten, table, mapping=_mapping(m),
             partition_by=_phys_partitioning(m),
         )
-        merged_stats = _refresh_stats(spark, table, stats, carried, new_files)
-        merged_stats = _build_bloom_sidecar(
+        new_stats = _build_bloom_sidecar(
             spark,
             table,
             new_files,
             T.StructType.fromJson(json.loads(m["schema"])),
             _bloom_table_conf(m),
-            merged_stats,
+            _refresh_stats(spark, table, stats, new_files),
         )
         meta = dict(m.get("meta") or {})
         meta[meta_key] = {"rewritten": len(cand), "carried": len(carried)}
-        if _try_commit(
-            table,
-            cur + 1,
-            carried + new_files,
-            cur,
-            m["schema"],
-            meta=meta,
-            stats=merged_stats or None,
-            dv_files=_dv_set(m),
-            operation=meta_key,
-        ):
-            return cur + 1
+        return _Commit(
+            files=carried + new_files, meta=meta, stats=new_stats, operation=meta_key
+        )
+
+    return _commit(table, attempt)
 
 
 def delete_where(spark: SparkSession, table: str, predicates, mode: str = "copy_on_write") -> int:
@@ -4249,11 +4145,8 @@ def delete_where(spark: SparkSession, table: str, predicates, mode: str = "copy_
     from cashback_data_pipeline_spark.sinks import filestats
 
     filestats.skip_condition(predicates)  # validate the spec up front
-    while True:
-        cur = current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {table}")
-        m = read_manifest(table, cur)
+
+    def attempt(cur, m):
         stats = m.get("stats") or {}
         store = get_log_store(table)
         phys_preds = _phys_predicates(predicates, _mapping(m))
@@ -4317,18 +4210,9 @@ def delete_where(spark: SparkSession, table: str, predicates, mode: str = "copy_
             "rows_deleted": n_deleted,
             "files_scanned": len(cand),
         }
-        if _try_commit(
-            table,
-            cur + 1,
-            m["files"],
-            cur,
-            m["schema"],
-            meta=meta,
-            stats=stats or None,
-            dv_files=_dv_set(m) + dv_new,
-            operation="delete",
-        ):
-            return cur + 1
+        return _Commit(meta=meta, dv_files=prior + dv_new, operation="delete")
+
+    return _commit(table, attempt)
 
 
 def update_where(spark: SparkSession, table: str, assignments: dict, predicates) -> int:

@@ -208,36 +208,28 @@ class ManifestChangesStreamReader(DataSourceStreamReader):
         # regresses below the checkpointed offsets
         self._anchor = max(self._anchor or 0, end_v)
         store = mf.get_log_store(self._table)
-        added: list[str] = []
-        for v in range(start_v + 1, end_v + 1):
-            # per-commit planning reads ONE action record (O(1) for
-            # format-2 logs — the commit literally lists its adds and
-            # removes), never a snapshot reconstruction per version
-            delta = mf.version_changes(self._table, v)
-            # a changed deletion-vector set modifies rows without touching
-            # the file list (merge-on-read DELETE) — a change commit,
-            # exactly like a rewrite
-            changed = bool(delta["removed"]) or delta["dv_changed"]
-            if changed and not self._skip_change:
-                what = (
-                    f"removed {len(delta['removed'])} file(s) "
-                    "(upsert/compaction/overwrite)"
-                    if delta["removed"]
-                    else "changed its deletion vectors (merge-on-read DELETE)"
-                )
-                raise ValueError(
-                    f"{self._table} v{v} {what}: the file diff is not the row "
-                    "diff. Restart the stream from a snapshot, or set "
-                    ".option('skipChangeCommits', 'true') to skip change commits."
-                )
-            if not changed:
-                added.extend(delta["added"])
+        added = mf._appended_files(
+            self._table, start_v, end_v, None if self._skip_change else self._refuse
+        )
         return [
             ManifestFilePartition(
                 store.join(self._table, f), self._schema_json, self._column_mapping
             )
             for f in added
         ]
+
+    def _refuse(self, v: int, delta: dict) -> None:
+        what = (
+            f"removed {len(delta['removed'])} file(s) "
+            "(upsert/compaction/overwrite)"
+            if delta["removed"]
+            else "changed its deletion vectors (merge-on-read DELETE)"
+        )
+        raise ValueError(
+            f"{self._table} v{v} {what}: the file diff is not the row "
+            "diff. Restart the stream from a snapshot, or set "
+            ".option('skipChangeCommits', 'true') to skip change commits."
+        )
 
     # -- execution (workers) -----------------------------------------------
     def read(self, partition: ManifestFilePartition) -> Iterator:
@@ -342,24 +334,22 @@ class ManifestChangesBatchReader(DataSourceReader):
             raise ValueError(f"startingVersion {self._start} > endingVersion {self._end}")
         m_end = mf.read_manifest(self._table, self._end)
         store = mf.get_log_store(self._table)
-        added: list[str] = []
-        for v in range(self._start + 1, self._end + 1):
-            delta = mf.version_changes(self._table, v)
-            changed = bool(delta["removed"]) or delta["dv_changed"]
-            if changed and not self._skip_change:
-                raise ValueError(
-                    f"{self._table} v{v} rewrote files or changed deletion "
-                    "vectors: the file diff is not the row diff. Use "
-                    "read_changes_rows(key=...) for a keyed diff, or "
-                    ".option('skipChangeCommits', 'true')."
-                )
-            if not changed:
-                added.extend(delta["added"])
+        added = mf._appended_files(
+            self._table, self._start, self._end, None if self._skip_change else self._refuse
+        )
         mapping = mf._mapping(m_end) or {}
         return [
             ManifestFilePartition(store.join(self._table, f), m_end["schema"], mapping)
             for f in added
         ]
+
+    def _refuse(self, v: int, delta: dict) -> None:
+        raise ValueError(
+            f"{self._table} v{v} rewrote files or changed deletion "
+            "vectors: the file diff is not the row diff. Use "
+            "read_changes_rows(key=...) for a keyed diff, or "
+            ".option('skipChangeCommits', 'true')."
+        )
 
     def read(self, partition: ManifestFilePartition) -> Iterator:
         yield from _read_file_partition(partition)

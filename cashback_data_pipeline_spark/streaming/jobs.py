@@ -454,9 +454,10 @@ def route_batch_to_manifest(
     # makes the gate and the commit one serialized decision (the
     # ManifestStreamWriter.commit discipline).
     files: list[str] | None = None
-    schema_json = None
-    while True:
-        cur = M.current_version(table)
+    used_mapping = checked_cons = None
+
+    def attempt(cur, m):
+        nonlocal batch, files, used_mapping, checked_cons
         # normally the latest manifest carries max_epoch (O(1)); the
         # shared walk skips interleaved non-epoch commits (compactions)
         # and tolerates a pruned manifest log
@@ -467,7 +468,6 @@ def route_batch_to_manifest(
             # concurrent one); any files this attempt wrote are
             # unreferenced orphans — vacuum fodder, never visible
             return False
-        m = M.read_manifest(table, cur) if cur is not None else None
         mapping = M._extend_mapping(M._mapping(m), batch.columns)
         if files is None:
             # CHECK constraints enforce on the foreachBatch streaming
@@ -488,12 +488,6 @@ def route_batch_to_manifest(
             )
             used_mapping = mapping
             checked_cons = M._constraints(m)
-        # the committed schema reconciles against THIS attempt's parent
-        # (never narrows an evolved schema back — round-10 review)
-        schema_json = (
-            batch.schema.json() if m is None
-            else M._reconcile_append_schema(m["schema"], batch.schema)
-        )
         if M._constraints(m) != checked_cons:
             # a constraint landed between our check and this CAS attempt
             M._check_constraints(batch, M._constraints(m), "this micro-batch")
@@ -507,17 +501,17 @@ def route_batch_to_manifest(
                 f"column mapping of {table} changed mid-commit; the replay "
                 "will re-write this epoch under the new mapping"
             )
-        base = m["files"] if m else []
-        stats = dict((m or {}).get("stats") or {})
-        if M._try_commit(
-            table,
-            (cur or 0) + 1,
-            base + files,
-            cur,
-            schema_json,
+        # CAS lost ⇒ the gate re-checks against the winner's version
+        # before recommitting (data files are already on disk, write once)
+        return M._Commit(
+            files=(m["files"] if m else []) + files,
+            # the committed schema reconciles against THIS attempt's
+            # parent (never narrows an evolved schema back)
+            schema=(
+                batch.schema.json() if m is None
+                else M._reconcile_append_schema(m["schema"], batch.schema)
+            ),
             meta={"epoch": int(epoch_id), "max_epoch": max(int(epoch_id), prev_max)},
-            stats=stats or None,
-            dv_files=M._dv_set(m),
             operation="streaming_append",
             # the data files were written under the EXTENDED mapping
             # (new batch columns get identity entries); committing the
@@ -525,10 +519,10 @@ def route_batch_to_manifest(
             # unmapped — a later rename/drop rebuilds the mapping over
             # the schema and KeyErrors on them (ADVICE r9)
             props={"column_mapping": used_mapping},
-        ):
-            return True
-        # CAS lost — re-check the gate against the winner's version
-        # before recommitting (data files are already on disk, write once)
+            result=True,
+        )
+
+    return M._commit(table, attempt, create=True)
 
 
 def route_stream_to_manifest(scored: DataFrame, table: str, checkpoint: str, key: str | None = None):
@@ -594,14 +588,12 @@ def _merge_aggregate_delta(
     files from lost attempts are invisible (vacuum fodder)."""
     from cashback_data_pipeline_spark.sinks import manifest as M
 
-    while True:
-        cur = M.current_version(table)
+    def attempt(cur, m_cur):
         prev = M.latest_meta_value(table, "max_epoch", cur)
         prev_max = -1 if prev is None else prev
         if epoch_id <= prev_max:
             return False
         merged = _merge_view(spark, delta, table, cur, keys)
-        m_cur = M.read_manifest(table, cur) if cur is not None else None
         if M._identity(m_cur):
             raise ValueError(
                 f"{table} declares identity column(s): the maintained-view "
@@ -614,21 +606,23 @@ def _merge_aggregate_delta(
             merged, table, mapping=mapping,
             partition_by=M._phys_partitioning(m_cur),
         )
-        if M._try_commit(
-            table,
-            (cur or 0) + 1,
-            files,
-            cur,
-            merged.schema.json(),
+        # an overwrite: the view's rows are all new, so no tombstone
+        # survives it. CAS lost ⇒ the merge base at `cur` is stale — the
+        # loop re-reads the winner's view, re-checks the gate, and
+        # recomputes the merge
+        return M._Commit(
+            files=files,
+            schema=merged.schema.json(),
             meta={"epoch": int(epoch_id), "max_epoch": max(int(epoch_id), prev_max)},
+            dv_files=[],
             operation="overwrite",
             # the EXTENDED mapping the data files were written under —
             # the first maintenance commit must not drop it (ADVICE r9)
             props={"column_mapping": mapping},
-        ):
-            return True
-        # CAS lost: the merge base at `cur` is stale — loop re-reads the
-        # winner's view, re-checks the gate, and recomputes the merge
+            result=True,
+        )
+
+    return M._commit(table, attempt, create=True)
 
 
 def _merge_view(
@@ -878,8 +872,14 @@ def _migrate_legacy_near_dup_index(spark: SparkSession, index_path: str) -> int 
     # the manifest `schema` field means the BANDS store for this table —
     # every commit site (ingest append, compaction, migration) agrees
     meta = M.with_store_schemas({"migrated": True}, None, files, store_schemas)
-    if not M._try_commit(index_path, 1, files, None, schemas["bands"], meta=meta):
-        return M.current_version(index_path)  # a racing migrator won — use its commit
+
+    def attempt(cur, m):
+        if cur is not None:
+            return None  # a racing migrator won — use its commit
+        return M._Commit(files=files, schema=schemas["bands"], meta=meta)
+
+    if M._commit(index_path, attempt, create=True) is None:
+        return M.current_version(index_path)
     from cashback_data_pipeline_spark.sinks.logstore import get_log_store
 
     log_store = get_log_store(index_path)
@@ -912,9 +912,7 @@ def compact_near_dup_index(spark: SparkSession, index_path: str, n_files: int = 
     if M.current_version(index_path) is None:
         if _migrate_legacy_near_dup_index(spark, index_path) is None:
             return None
-    while True:
-        cur = M.current_version(index_path)
-        m = M.read_manifest(index_path, cur)
+    def attempt(cur, m):
         cid = M.new_commit_id()
         files: list[str] = []
         schemas: dict[str, str] = {}
@@ -943,8 +941,9 @@ def compact_near_dup_index(spark: SparkSession, index_path: str, n_files: int = 
             schemas[store] = snapshot.schema.json()
         meta = M.with_store_schemas({"compaction": True}, m, files, store_schemas)
         # manifest `schema` = the bands store, same as every other commit site
-        if M._try_commit(index_path, cur + 1, files, cur, schemas["bands"], meta=meta):
-            return cur + 1
+        return M._Commit(files=files, schema=schemas["bands"], meta=meta)
+
+    return M._commit(index_path, attempt)
 
 
 def near_dup_ingest_batch(
@@ -1163,8 +1162,9 @@ def near_dup_ingest_batch(
         files = M.write_store_files(new_bands, index_path, cid, "bands", schemas=store_schemas)
         files += M.write_store_files(new_sigs, index_path, cid, "sigs", schemas=store_schemas)
         screened = cur
-        while True:
-            cur2 = M.current_version(index_path)
+
+        def attempt(cur2, m2):
+            nonlocal new_bands, new_sigs, screened, files
             if cur2 is not None and cur2 != screened:
                 winner_ids = (
                     M.read_store(
@@ -1190,22 +1190,19 @@ def near_dup_ingest_batch(
                 files += M.write_store_files(
                     new_sigs, index_path, cid, "sigs", schemas=store_schemas
                 )
-                continue  # re-resolve before committing against cur2
-            m2 = M.read_manifest(index_path, cur2) if cur2 is not None else None
             all_files = (m2["files"] if m2 else []) + files
             # meta epoch is PROVENANCE only (which micro-batch committed
             # this version) — never a dedup decision: idempotence rests
             # on the id anti-join, which survives rebuilt checkpoints
-            meta = M.with_store_schemas({"epoch": int(epoch_id)}, m2, all_files, store_schemas)
-            if M._try_commit(
-                index_path,
-                (cur2 or 0) + 1,
-                all_files,
-                cur2,
-                new_bands.schema.json(),
-                meta=meta,
-            ):
-                break
+            return M._Commit(
+                files=all_files,
+                schema=new_bands.schema.json(),
+                meta=M.with_store_schemas(
+                    {"epoch": int(epoch_id)}, m2, all_files, store_schemas
+                ),
+            )
+
+        M._commit(index_path, attempt, create=True)
     finally:
         routed.unpersist()
         for df_ in keep:

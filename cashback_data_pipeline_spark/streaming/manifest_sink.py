@@ -234,9 +234,8 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages: List[Optional[WriterCommitMessage]], batchId: int) -> None:
         new_files = [f for m in messages if m is not None for f in m.files]
-        while True:
-            cur = mf.current_version(self._table)
-            m = mf.read_manifest(self._table, cur) if cur is not None else None
+
+        def attempt(cur, m):
             self._check_schema_compatible(m)
             prev_max = self._prev_max_epoch(self._table, cur)
             if batchId <= prev_max:
@@ -245,27 +244,22 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
                 # them now instead of leaving them to vacuum
                 self._delete_files(messages)
                 return
-            base = m["files"] if m else []
-            stats = dict((m or {}).get("stats") or {})
-            tracked = sorted({c for e in stats.values() for c in (e.get("cols") or {})})
-            if tracked and new_files:
-                stats.update(self._footer_stats(new_files, tracked))
-            meta = {"epoch": int(batchId), "max_epoch": max(int(batchId), prev_max)}
-            if mf._try_commit(
-                self._table,
-                (cur or 0) + 1,
-                base + new_files,
-                cur,
-                self._schema.json(),
-                meta=meta,
-                stats=stats or None,
-                dv_files=mf._dv_set(m),  # streamed appends keep tombstones in effect
+            tracked = sorted(
+                {c for e in ((m or {}).get("stats") or {}).values() for c in (e.get("cols") or {})}
+            )
+            # streamed appends keep tombstones in effect; a lost CAS
+            # recomputes against the winner's version (files are already
+            # on disk, write once)
+            return mf._Commit(
+                files=(m["files"] if m else []) + new_files,
+                schema=self._schema.json(),
+                meta={"epoch": int(batchId), "max_epoch": max(int(batchId), prev_max)},
+                stats=self._footer_stats(new_files, tracked) if tracked and new_files else None,
                 operation="streaming_append",
                 props={"column_mapping": self._mapping},
-            ):
-                return
-            # CAS lost to a concurrent writer — recompute against the
-            # winner's version (files are already on disk, write once)
+            )
+
+        mf._commit(self._table, attempt, create=True)
 
     def abort(self, messages: List[Optional[WriterCommitMessage]], batchId: int) -> None:
         self._delete_files(messages)

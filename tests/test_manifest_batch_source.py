@@ -123,6 +123,20 @@ def test_hive_layout_partition_values_reconstitute(spark, tmp_path):
     assert _rows(out.select("k", "bucket")) == _rows(df)
 
 
+def test_change_feed_reconstitutes_undeclared_partition_values(spark, tmp_path):
+    """The change feed scans the same way as read_table: files under
+    key=value dirs of a table that declares no partitioning read the
+    column from the path, not as NULL."""
+    t = str(tmp_path / "t")
+    df = spark.range(20).selectExpr("id AS k", "CAST(id % 2 AS STRING) AS bucket")
+    files = M.write_store_files(df, t, M.new_commit_id(), "main", partition_by="bucket")
+    M._try_commit(t, 1, files, None, df.schema.json(), operation="overwrite")
+    assert _rows(M.read_changes(spark, t, 0).select("k", "bucket")) == _rows(df)
+    rows = M.read_changes_rows(spark, t, 0)
+    assert _rows(rows.select("k", "bucket")) == _rows(df)
+    assert {r["_change_type"] for r in rows.collect()} == {"insert"}
+
+
 def test_all_files_pruned_reads_zero_rows(spark, tmp_path):
     """A predicate no row matches reads 0 rows, no error."""
     t = _seed(spark, tmp_path / "t")

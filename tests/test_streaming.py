@@ -837,3 +837,29 @@ def test_incremental_mv_replay_cannot_double_add(spark, tmp_path):
     # the NULL group accumulates (null-safe merge), never re-inserts
     assert view[None]["n"] == 2 and view[None]["sum_value"] == 6.0
     assert M.current_version(table) == 2  # one version per applied epoch
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_windowed_counts",
+        "streaming_dedup_replay",
+        "streaming_sessionization",
+        "streaming_interval_join",
+        "streaming_quality_route",
+    ],
+)
+def test_streaming_query_removes_its_source_dir(spark, sf_dir, name):
+    """The registered streaming queries drain a file-source stream into a
+    memory sink; once the query has terminated its scratch source dir
+    is spent and must not stay behind under the temp dir."""
+    import glob
+    import os
+
+    from cashback_data_pipeline_spark import queries as Q
+
+    pattern = os.path.join(tempfile.gettempdir(), "stream_*")
+    before = set(glob.glob(pattern))
+    out = Q.QUERIES[name](spark, sf_dir)
+    assert out.count() > 0
+    assert set(glob.glob(pattern)) - before == set()

@@ -623,8 +623,6 @@ class _LogCommitFixed:
         # manifest file count is the variable)
         batch = spark.createDataFrame(docs.limit(500).toPandas())
         M.write_table(batch, table)  # v1: real files, real schema
-        cur = M.current_version(table)
-        m = M.read_manifest(table, cur)
         fake = [
             f"data/{uuid.uuid4().hex[:12]}/part-{i:05d}.parquet" for i in range(n_files)
         ]
@@ -632,12 +630,10 @@ class _LogCommitFixed:
             f: {"rows": 5000, "cols": {"doc_id": {"min": i * 5000, "max": (i + 1) * 5000 - 1, "nulls": 0}}}
             for i, f in enumerate(fake)
         }
-        ok = M._try_commit(
-            table, cur + 1, m["files"] + fake, cur, m["schema"], stats=stats,
-            operation="append",
+        M._commit(
+            table,
+            lambda cur, m: M._Commit(files=m["files"] + fake, stats=stats, operation="append"),
         )
-        if not ok:
-            raise RuntimeError("log-commit sampler lost its own setup CAS")
         M.write_table(batch, table, mode="append")  # warm: pointer/cache steady-state
         t0 = time.time()
         M.write_table(batch, table, mode="append")
