@@ -1054,6 +1054,88 @@ def _build_bloom_sidecar(
     return out
 
 
+def _add_files(
+    spark: SparkSession,
+    table: str,
+    m: dict | None,
+    df: DataFrame,
+    stats_cols: list[str] | None = None,
+    props: dict | None = None,
+) -> tuple[list[str], dict | None, dict]:
+    """THE write tail: write ``df`` as one commit's new data files and
+    collect their per-file metadata. Every file-adding writer hands it
+    its frame and snapshot, then commits ``files`` (next to the files
+    it carries), ``stats`` and ``props``. The new files follow the table's
+    properties as of ``m`` overlaid with ``props``, the ones this
+    commit states (:func:`_try_commit`'s carry rule), so no write path
+    can erode a property file by file:
+
+    - layout: the frame is written under the column mapping extended by
+      its new columns, partitioned by the partition columns;
+    - stats: entries for ``stats_cols`` (PHYSICAL names) when the writer
+      has its own rule, else for every column the parent tracks in any
+      file plus the identity columns — pruning compounds across commits,
+      and a stats-less parent stays stats-less;
+    - bloom: a sidecar for the bloom property's columns, written into
+      the commit's immutable data dir before the CAS (a reader that
+      sees the commit sees its blooms; vacuum reclaims both together);
+    - identity: each high-water advances past the largest id the new
+      files hold (:func:`_advance_identity` reads the stats above).
+
+    Returns ``(files, stats, props)``, ``props`` with the advanced
+    ``identity``."""
+    from cashback_data_pipeline_spark.sinks import filestats
+
+    props = dict(props or {})
+    eff = {**(m or {}), **props}
+    files = _write_data_files(
+        df, table, mapping=_extend_mapping(_mapping(eff), df.columns),
+        partition_by=_phys_partitioning(eff),
+    )
+    ident = _identity(eff)
+    if stats_cols is None:
+        stats_cols = sorted(
+            {c for e in ((m or {}).get("stats") or {}).values() for c in (e.get("cols") or {})}
+            | set(ident)
+        )
+    stats = filestats.collect_file_stats(spark, table, files, stats_cols) if stats_cols else None
+    stats = _build_bloom_sidecar(spark, table, files, df.schema, _bloom_table_conf(eff), stats)
+    if ident:
+        props["identity"] = _advance_identity(ident, files, stats or {})
+    return files, stats, props
+
+
+def _candidates(table: str, m: dict, preds) -> tuple[list[str], list[str]]:
+    """THE candidate pruner: split snapshot ``m``'s files into
+    ``(cand, carried)`` for the skip-tree ``preds`` over LOGICAL names
+    (None or empty: every file is a candidate). Reads and every DML,
+    MERGE and maintenance scope prune through it, in one order:
+
+    1. derived conjuncts for monotone generated columns join the tree
+       (:func:`_augment_generated_predicates`);
+    2. names translate to physical, the key of stats and blooms;
+    3. min/max/null stats drop files whose bounds exclude every match
+       (``filestats.prune_files``);
+    4. the survivors' bloom sidecars drop files that hold none of an
+       ``==``/``in`` leaf's values (``filestats.prune_files_bloom``).
+
+    Sound: each step drops a file only when its metadata PROVES no row
+    matches — a derived conjunct is implied by its base predicate, and a
+    Bloom filter has no false negatives — and a missing entry or sidecar
+    keeps the file. A carried file therefore holds no matching row."""
+    from cashback_data_pipeline_spark.sinks import filestats
+
+    files = m["files"]
+    if not preds:
+        return list(files), []
+    stats = m.get("stats")
+    phys = _phys_predicates(_augment_generated_predicates(preds, m), _mapping(m))
+    cand, _ = filestats.prune_files(files, stats, phys)
+    cand, _ = filestats.prune_files_bloom(get_log_store(table), table, cand, stats, phys)
+    cand_set = set(cand)
+    return cand, [f for f in files if f not in cand_set]
+
+
 def _rel_file_col() -> F.Column:
     """Table-relative path of the file a row came from, recovered from
     the scan's ``_metadata.file_path``: every manifest data file lives
@@ -1642,9 +1724,10 @@ def write_table(
     (sinks/filestats.py): per-file min/max/null-count for these columns
     ride in the manifest (footer-read, no data re-scan on local stores),
     and :func:`read_table`'s ``skip=`` predicates prune files from
-    metadata alone. Appends carry the parent's stats forward for the
-    files they keep, so a time-correlated append history stays fully
-    prunable.
+    metadata alone (:func:`_candidates`). Without it an append collects
+    the columns the parent tracks. Generated and identity columns are
+    always tracked; the new files' stats, bloom sidecar and identity
+    advance follow the write tail's rule (:func:`_add_files`).
 
     ``cluster_by`` range-partitions (+ sorts within partitions) the
     commit's rows on those columns before writing, so each file covers a
@@ -1690,6 +1773,8 @@ def write_table(
     within partitions) and stats/bloom on OTHER columns; bloom on a
     partition column is refused (its values are not in the files —
     exact path stats already prune equality on it)."""
+    from cashback_data_pipeline_spark.sinks import filestats
+
     if mode not in ("overwrite", "append", "overwrite_partitions"):
         raise ValueError(f"unsupported mode {mode!r}")
     cur0 = current_version(table)
@@ -1743,8 +1828,6 @@ def write_table(
         if stats_cols is None:
             stats_cols = list(zorder_by)
     if cluster_by:
-        from cashback_data_pipeline_spark.sinks import filestats
-
         filestats.validate_stats_cols(df.schema, list(cluster_by))
         props["layout"] = {"cluster_by": list(cluster_by)}
         if stats_cols is None:
@@ -1756,9 +1839,55 @@ def write_table(
         df = df.sortWithinPartitions(*cluster_by)
     checked_cons = _constraints(cur0_doc)
     _check_constraints(df, checked_cons, "this write")
-    files = _write_data_files(
-        df, table, mapping=mapping,
-        partition_by=_phys_cols(mapping, partitioning) if partitioning else None,
+    # this write's stats rule, in PHYSICAL names for the write tail
+    # (:func:`_add_files`): the named columns, else on an append the
+    # columns the parent tracks (stats are a table property in effect —
+    # a plain append must not add an unprunable file); generated and
+    # identity columns always (derived-column predicates prune, and the
+    # identity high-water advances from these entries)
+    phys_stats_cols: list[str] = []
+    if stats_cols:
+        # LOGICAL names validate against the logical schema, so a bad
+        # column fails as loudly on a column-mapped table
+        filestats.validate_stats_cols(df.schema, list(stats_cols))
+        phys_stats_cols = _phys_cols(mapping, list(stats_cols))
+    elif mode == "append" and cur0_doc is not None:
+        parent_tracked = {
+            c for e in (cur0_doc.get("stats") or {}).values()
+            for c in (e.get("cols") or {})
+        }
+        phys_stats_cols = sorted(parent_tracked & set(_phys_cols(mapping, df.columns)))
+    if gen0 or ident0:
+        by_name = {f.name: f.dataType for f in df.schema.fields}
+        extra = [
+            n for n in (*gen0, *ident0)
+            if isinstance(by_name.get(n), filestats._STATS_OK_TYPES)
+            and n not in (partitioning or [])
+        ]
+        phys_stats_cols = sorted(set(phys_stats_cols) | set(_phys_cols(mapping, extra)))
+    if bloom_cols:
+        filestats.validate_bloom_cols(df.schema, list(bloom_cols))
+        if mapping and any(mapping.get(c, c) != c for c in bloom_cols):
+            raise ValueError(
+                "bloom_cols on a RENAMED column are unsupported (the sidecar "
+                "path operates on physical names); rename_column refuses "
+                "bloom-indexed columns for the same reason"
+            )
+        props["bloom_conf"] = {
+            "cols": sorted(bloom_cols),
+            "bits": int(bloom_bits or filestats.BLOOM_DEFAULT_BITS),
+        }
+    bloom_conf = props.get("bloom_conf") or _bloom_table_conf(cur0_doc)
+    if bloom_conf and partitioning and set(bloom_conf.get("cols") or []) & set(
+        partitioning
+    ):
+        raise ValueError(
+            "the table's bloom property covers a partition column; "
+            "partition values live in paths, not files — rebuild without "
+            "bloom on that column before partitioning on it"
+        )
+    files, stats, props = _add_files(
+        df.sparkSession, table, cur0_doc, df, phys_stats_cols, props
     )
     schema_json = df.schema.json()
     touched: set[tuple] | None = None
@@ -1770,91 +1899,6 @@ def write_table(
             tuple(_hive_render(r[c]) for c in partitioning)
             for r in df.select(*partitioning).distinct().collect()
         }
-    stats = None
-    phys_stats_cols: list[str] = []
-    if stats_cols:
-        from cashback_data_pipeline_spark.sinks import filestats
-
-        # validate the LOGICAL names against the logical schema (always —
-        # a misspelled/unprunable stats column on a column-mapped table
-        # must fail as loudly as on an unmapped one, ADVICE r9), then
-        # translate to physical names for collection
-        filestats.validate_stats_cols(df.schema, list(stats_cols))
-        phys_stats_cols = _phys_cols(mapping, list(stats_cols))
-    elif mode == "append" and cur0_doc is not None:
-        # stats are a TABLE PROPERTY in effect (r10, the bloom_conf
-        # discipline): a plain append to a stats-tracked table keeps
-        # collecting entries for the parent's tracked columns — without
-        # this every trickle append adds an UNPRUNABLE file, eroding
-        # data skipping one commit at a time. Parent entries are keyed
-        # by physical names already; columns this write doesn't carry
-        # are skipped (stats stay per-file-honest).
-        parent_tracked = {
-            c for e in (cur0_doc.get("stats") or {}).values()
-            for c in (e.get("cols") or {})
-        }
-        written = set(_phys_cols(mapping, df.columns))
-        phys_stats_cols = sorted(parent_tracked & written)
-    if gen0 or ident0:
-        # generated + identity columns auto-track in per-file stats:
-        # generated values are validated-derivable (so derived-column
-        # predicates prune files — the Delta partition-pruning trick
-        # without partitioning); identity high-waters ADVANCE from these
-        # very entries
-        from cashback_data_pipeline_spark.sinks import filestats
-
-        by_name = {f.name: f.dataType for f in df.schema.fields}
-        extra = [
-            n for n in (*gen0, *ident0)
-            if isinstance(by_name.get(n), filestats._STATS_OK_TYPES)
-            and n not in (partitioning or [])
-        ]
-        phys_stats_cols = sorted(set(phys_stats_cols) | set(_phys_cols(mapping, extra)))
-    if phys_stats_cols:
-        from cashback_data_pipeline_spark.sinks import filestats
-
-        spark = df.sparkSession
-        # stats are keyed by PHYSICAL column names (collected from the
-        # written files); skip= predicates translate at read time
-        stats = filestats.collect_file_stats(spark, table, files, phys_stats_cols)
-    if bloom_cols:
-        from cashback_data_pipeline_spark.sinks import filestats
-
-        filestats.validate_bloom_cols(df.schema, list(bloom_cols))
-        if mapping and any(mapping.get(c, c) != c for c in bloom_cols):
-            raise ValueError(
-                "bloom_cols on a RENAMED column are unsupported (the sidecar "
-                "path operates on physical names); rename_column refuses "
-                "bloom-indexed columns for the same reason"
-            )
-        bloom_conf = props["bloom_conf"] = {
-            "cols": sorted(bloom_cols),
-            "bits": int(bloom_bits or filestats.BLOOM_DEFAULT_BITS),
-        }
-    else:
-        # bloom is a TABLE PROPERTY: once set, every later write —
-        # append or overwrite — keeps building filters for its new
-        # files without the caller re-passing bloom_cols (the Delta
-        # table-property semantic; otherwise one plain append would
-        # silently erode the point-lookup path file by file)
-        bloom_conf = _bloom_table_conf(cur0_doc)
-    if bloom_conf and partitioning and set(bloom_conf.get("cols") or []) & set(
-        partitioning
-    ):
-        raise ValueError(
-            "the table's bloom property covers a partition column; "
-            "partition values live in paths, not files — rebuild without "
-            "bloom on that column before partitioning on it"
-        )
-    if bloom_conf:
-        # sidecar written into the IMMUTABLE data tree BEFORE the
-        # manifest CAS: any reader that can see the commit can see its
-        # blooms, and vacuum reclaims both together
-        stats = _build_bloom_sidecar(
-            df.sparkSession, table, files, df.schema, bloom_conf, stats
-        )
-    if ident0:
-        props["identity"] = _advance_identity(ident0, files, stats or {})
 
     def attempt(cur, cur_doc):
         nonlocal checked_cons
@@ -1981,7 +2025,7 @@ def drop_partition(table: str, values: dict) -> int:
 def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -> int:
     """Keyed DELETE driven by a RELATION (no driver-side key list):
     files whose key stats/blooms provably miss every delete key carry
-    forward untouched (the :func:`_merge_candidate_split` pruning),
+    forward untouched (the :func:`_key_predicates` pruning),
     candidates rewrite via one distributed anti-join. The scalable twin
     of ``delete_where((key, "in", [...]))`` for key sets too large to
     be predicate literals — e.g. a CDC batch's delete keys. Returns the
@@ -1989,7 +2033,7 @@ def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -
     keys_only = keys_df.select(key).distinct()
 
     def attempt(cur, m):
-        cand, carried, stats = _merge_candidate_split(spark, table, m, key, keys_only)
+        cand, carried = _candidates(table, m, _key_predicates(m, key, keys_only))
         if not cand:
             return cur  # no file can hold any delete key — no version churn
         # NULL-SAFE key matching (ADVICE r8): a NULL delete key must
@@ -2000,18 +2044,12 @@ def delete_keys(spark: SparkSession, keys_df: DataFrame, table: str, key: str) -
         survivors = target.join(
             dk, on=target[key].eqNullSafe(dk["__del_key"]), how="left_anti"
         )
-        new_files = _write_data_files(
-            survivors, table, mapping=_mapping(m),
-            partition_by=_phys_partitioning(m),
-        )
-        new_stats = _build_bloom_sidecar(
-            spark, table, new_files, survivors.schema, _bloom_table_conf(m),
-            _refresh_stats(spark, table, stats, new_files),
-        )
+        new_files, stats, props = _add_files(spark, table, m, survivors)
         meta = dict(m.get("meta") or {})
         meta["delete"] = {"mode": "keyed", "rewritten": len(cand), "carried": len(carried)}
         return _Commit(
-            files=carried + new_files, meta=meta, stats=new_stats, operation="delete"
+            files=carried + new_files, meta=meta, stats=stats, operation="delete",
+            props=props,
         )
 
     return _commit(table, attempt)
@@ -2911,17 +2949,16 @@ def stage_commit(df: DataFrame, table: str, stats_cols: list[str] | None = None)
         )
     mapping = _extend_mapping(_mapping(cur_doc), df.columns)
     _check_constraints(df, _constraints(cur_doc), "this staged write")
-    files = _write_data_files(
-        df, table, mapping=mapping, partition_by=_phys_partitioning(cur_doc)
-    )
-    stats = None
     if stats_cols:
         from cashback_data_pipeline_spark.sinks import filestats
 
         filestats.validate_stats_cols(df.schema, list(stats_cols))
-        stats = filestats.collect_file_stats(
-            df.sparkSession, table, files, _phys_cols(mapping, list(stats_cols))
-        )
+    # the staged files get the table's stats and bloom sidecar like any
+    # append (:func:`_add_files`), so publishing them erodes neither
+    files, stats, _ = _add_files(
+        df.sparkSession, table, cur_doc, df,
+        _phys_cols(mapping, list(stats_cols)) if stats_cols else None,
+    )
     token = uuid.uuid4().hex[:12]
     store = get_log_store(table)
     doc = {"files": files, "schema": df.schema.json()}
@@ -3135,23 +3172,9 @@ def read_table(
     if v is None:
         raise FileNotFoundError(f"no committed version in {table}")
     m = read_manifest(table, v)
-    files = m["files"]
-    if skip:
-        # stats/blooms key by physical names; the residual filter below
-        # runs on the logical frame with the caller's own spec. Derived
-        # generated-column conjuncts join the PRUNING spec only (they
-        # are implied by the original, so the residual stays the
-        # caller's own predicate)
-        phys_skip = _phys_predicates(
-            _augment_generated_predicates(skip, m), _mapping(m)
-        )
-        files, _ = filestats.prune_files(files, m.get("stats"), phys_skip)
-        # bloom refinement: equality/IN leaves consult the per-commit
-        # sidecar filters (loaded lazily, once each) — prunes the
-        # hash-distributed layouts min/max bounds cannot
-        files, _ = filestats.prune_files_bloom(
-            get_log_store(table), table, files, m.get("stats"), phys_skip
-        )
+    # pruning runs on metadata (:func:`_candidates`); the residual filter
+    # below re-applies the caller's own spec to the logical frame
+    files, _ = _candidates(table, m, skip)
     if not files:
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         return local_rows_df(spark, [], schema)
@@ -3373,6 +3396,8 @@ def compact_table(
     (:func:`_zorder_layout`), making min/max pruning selective on EVERY
     named dimension at once — where ``cluster_by`` helps only its
     leading column."""
+    from cashback_data_pipeline_spark.sinks import filestats
+
     if cluster_by and zorder_by:
         raise ValueError("pass cluster_by or zorder_by, not both")
     if cluster_by:
@@ -3393,8 +3418,6 @@ def compact_table(
             zorder_by = lay.get("zorder_by")
         snapshot = read_table(spark, table, cur)
         if cluster_by:
-            from cashback_data_pipeline_spark.sinks import filestats
-
             filestats.validate_stats_cols(snapshot.schema, list(cluster_by))
             rewritten = snapshot.repartitionByRange(n_files, *cluster_by).sortWithinPartitions(
                 *cluster_by
@@ -3403,10 +3426,6 @@ def compact_table(
             rewritten = _zorder_layout(snapshot, list(zorder_by), n_files)
         else:
             rewritten = snapshot.coalesce(n_files)
-        files = _write_data_files(
-            rewritten, table, mapping=_mapping(m),
-            partition_by=_phys_partitioning(m),
-        )
         # UNION the requested/layout stats columns with everything the
         # parent tracked: an OPTIMIZE must not erode data skipping (the
         # rewritten files REPLACE every stats-carrying file at once, so
@@ -3419,32 +3438,20 @@ def compact_table(
         eff_stats_cols = sorted(
             set(_phys_cols(_mapping(m), stats_cols or [])) | parent_tracked
         )
-        stats = None
-        if eff_stats_cols:
-            from cashback_data_pipeline_spark.sinks import filestats
-
-            stats = filestats.collect_file_stats(
-                spark,
-                table,
-                files,
-                eff_stats_cols,
-                schema=None if _mapping(m) else snapshot.schema,
-            )
-        stats = _build_bloom_sidecar(
-            spark, table, files, snapshot.schema, _bloom_table_conf(m), stats
-        )
-        # the rewrite materializes every deletion vector: they all drop
-        return _Commit(
-            files=files,
-            schema=snapshot.schema.json(),
-            stats=stats,
-            dv_files=[],
-            operation="compact",
+        if eff_stats_cols and not _mapping(m):
+            filestats.validate_stats_cols(snapshot.schema, eff_stats_cols)
+        files, stats, props = _add_files(
+            spark, table, m, rewritten, eff_stats_cols,
             props=(
                 {"layout": {"cluster_by": list(cluster_by)}} if cluster_by
                 else {"layout": {"zorder_by": list(zorder_by)}} if zorder_by
                 else None
             ),
+        )
+        # the rewrite materializes every deletion vector: they all drop
+        return _Commit(
+            files=files, schema=snapshot.schema.json(), stats=stats, dv_files=[],
+            operation="compact", props=props,
         )
 
     return _commit(table, attempt)
@@ -3471,14 +3478,13 @@ def optimize_table(
 
     ``predicates`` (the skip-tree language) scopes the pass — Delta's
     ``OPTIMIZE .. WHERE``: only files that MAY match are considered
-    (approximate scoping is fine for maintenance; it never changes
-    query semantics). Fewer than ``min_files`` qualifying files ⇒ no
-    version churn (returns the current version). Deletion vectors on
-    rewritten files are MATERIALIZED (the rewrite reads DV-applied
-    rows); untouched files keep their tombstones. Carried files keep
-    their stats verbatim; rewritten files get fresh entries for the
-    parent's tracked columns, and the bloom table property regenerates
-    sidecars for the new files. Optimistic CAS retry like every
+    (:func:`_candidates`; approximate scoping is fine for maintenance,
+    it never changes query semantics). Fewer than ``min_files``
+    qualifying files ⇒ no version churn (returns the current version).
+    Deletion vectors on rewritten files are MATERIALIZED (the rewrite
+    reads DV-applied rows); untouched files keep their tombstones.
+    Carried files keep their stats verbatim; the packed files are added
+    through :func:`_add_files`. Optimistic CAS retry like every
     maintenance commit."""
     from cashback_data_pipeline_spark.sinks import filestats
 
@@ -3488,12 +3494,7 @@ def optimize_table(
     def attempt(cur, m):
         files = m["files"]
         stats = dict(m.get("stats") or {})
-        scope = files
-        if predicates is not None:
-            phys_preds = _phys_predicates(
-                _augment_generated_predicates(predicates, m), _mapping(m)
-            )
-            scope, _ = filestats.prune_files(files, stats, phys_preds)
+        scope, _ = _candidates(table, m, predicates)
         # row counts: manifest stats first, one footer metadata read for
         # the rest (KBs per file, no data pages)
         unknown = [f for f in scope if stats.get(f, {}).get("rows") is None]
@@ -3514,13 +3515,18 @@ def optimize_table(
         # fraction reaches max_dv_ratio rewrite here, reclaiming the
         # dead rows and the per-read anti-join
         dvs = _dv_set(m)
-        if dvs and max_dv_ratio is not None:
-            store2 = get_log_store(table)
+        dv_counts = {}
+        if dvs:
+            # tombstones per file: one read of the deletion-vector
+            # relation serves the reclaim ratios here and the
+            # dead-relation check below
+            store = get_log_store(table)
             dv_counts = {
                 r["file"]: r["n"]
-                for r in spark.read.parquet(*[store2.join(table, f) for f in dvs])
+                for r in spark.read.parquet(*[store.join(table, f) for f in dvs])
                 .groupBy("file").agg(F.count(F.lit(1)).alias("n")).collect()
             }
+        if dvs and max_dv_ratio is not None:
             small_set0 = set(small)
             for f in scope:
                 r = stats.get(f, {}).get("rows")
@@ -3545,29 +3551,10 @@ def optimize_table(
             packed = _zorder_layout(packed, list(lay["zorder_by"]), n_out)
         else:
             packed = packed.coalesce(n_out)
-        new_files = _write_data_files(
-            packed, table, mapping=_mapping(m),
-            partition_by=_phys_partitioning(m),
-        )
-        new_stats = _build_bloom_sidecar(
-            spark, table, new_files,
-            T.StructType.fromJson(json.loads(m["schema"])),
-            _bloom_table_conf(m), _refresh_stats(spark, table, m.get("stats") or {}, new_files),
-        )
+        new_files, new_stats, props = _add_files(spark, table, m, packed)
         # tombstone relations whose every referenced file was rewritten
         # are dead — drop them so reads stop paying the anti-join
-        keep_dvs = _dv_set(m)
-        if keep_dvs:
-            carried_set = set(carried)
-            store2 = get_log_store(table)
-            referenced = {
-                r["file"]
-                for r in spark.read.parquet(
-                    *[store2.join(table, f) for f in keep_dvs]
-                ).select("file").distinct().collect()
-            }
-            if not (referenced & carried_set):
-                keep_dvs = []
+        keep_dvs = dvs if set(dv_counts) & set(carried) else []
         meta = dict(m.get("meta") or {})
         meta["optimize"] = {
             "rewritten": len(small),
@@ -3584,6 +3571,7 @@ def optimize_table(
             # and fully-dead relations drop entirely
             dv_files=keep_dvs,
             operation="optimize",
+            props=props,
         )
 
     return _commit(table, attempt)
@@ -3624,32 +3612,24 @@ def _one_row_per_key(incoming: DataFrame, key: str):
 _MERGE_IN_LIST_MAX = 1024
 
 
-def _merge_candidate_split(
-    spark: SparkSession, table: str, m: dict, key: str, incoming_unique: DataFrame
-) -> tuple[list[str], list[str], dict]:
-    """Split a manifest's files into (candidates, carried) for a MERGE on
-    ``key`` using the commit's per-file stats (the Delta MERGE
-    file-pruning idea): a file whose key stats PROVE it holds none of
-    the incoming keys cannot collide, so it carries forward untouched.
-    Small incoming key sets prune with an exact IN list (one bounded
-    driver collect); larger ones with the [min, max] key range — both
-    sound because incoming ⊆ the pruned domain. No stats / untracked
-    key / null incoming keys ⇒ everything is a candidate (the original
-    full-rewrite behavior, never wrong)."""
-    from cashback_data_pipeline_spark.sinks import filestats
-
-    files = m["files"]
+def _key_predicates(m: dict, key: str, incoming_unique: DataFrame) -> list | None:
+    """The key screen of the MERGE family (the Delta MERGE file-pruning
+    idea): the incoming frame's ``key`` values as a skip tree for
+    :func:`_candidates`, so a file whose stats or blooms PROVE it holds
+    none of them carries forward untouched. Small key sets become an
+    exact IN list (one bounded driver collect), larger ones the [min,
+    max] key range — both sound because incoming ⊆ the pruned domain.
+    None (everything is a candidate) when no stats or bloom covers the
+    key, or the incoming keys are empty or include NULL."""
     stats = m.get("stats") or {}
     # stats/bloom entries are keyed by PHYSICAL column names; the
     # incoming frame stays logical
     phys_key = (_mapping(m) or {}).get(key, key)
     tracked = any(phys_key in (e.get("cols") or {}) for e in stats.values())
     conf = _bloom_table_conf(m)
-    bloomed = bool(conf and phys_key in (conf.get("cols") or []))
-    if not (tracked or bloomed):
-        # no stat source COVERS the merge key: skip the agg + key collect
-        # outright — everything would be a candidate anyway
-        return files, [], stats
+    if not (tracked or (conf and phys_key in (conf.get("cols") or []))):
+        # no stat source COVERS the key: skip the agg + key collect
+        return None
     agg = incoming_unique.agg(
         F.min(key).alias("lo"),
         F.max(key).alias("hi"),
@@ -3657,20 +3637,10 @@ def _merge_candidate_split(
         F.sum(F.col(key).isNull().cast("long")).alias("nulls"),
     ).first()
     if agg["nd"] == 0 or (agg["nulls"] or 0) > 0:
-        # empty or null-keyed incoming: range/in pruning is not sound
-        return files, [], stats
+        return None
     if agg["nd"] <= _MERGE_IN_LIST_MAX:
-        keys = [r[0] for r in incoming_unique.select(key).distinct().collect()]
-        preds = [(phys_key, "in", keys)]
-    else:
-        preds = [(phys_key, ">=", agg["lo"]), (phys_key, "<=", agg["hi"])]
-    cand, _ = filestats.prune_files(files, stats, preds)
-    # bloom refinement (round 8): on a hash-distributed key layout every
-    # file's [min, max] covers every incoming key, so only the sidecar
-    # filters can prove a file collision-free
-    cand, _ = filestats.prune_files_bloom(get_log_store(table), table, cand, stats, preds)
-    cand_set = set(cand)
-    return cand, [f for f in files if f not in cand_set], stats
+        return [(key, "in", [r[0] for r in incoming_unique.select(key).distinct().collect()])]
+    return [(key, ">=", agg["lo"]), (key, "<=", agg["hi"])]
 
 
 def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str) -> int:
@@ -3705,7 +3675,7 @@ def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str)
         )
         _refuse_identity_missing(incoming_unique.columns, m, "the MERGE source")
         _check_constraints(incoming_unique, _constraints(m), "the MERGE source")
-        cand, carried, stats = _merge_candidate_split(spark, table, m, key, incoming_unique)
+        cand, carried = _candidates(table, m, _key_predicates(m, key, incoming_unique))
         if cand:
             target = _read_files(spark, table, cand, m)
             # NULL-SAFE key collision (ADVICE r8): the NULL group is a
@@ -3720,30 +3690,16 @@ def upsert_table(spark: SparkSession, incoming: DataFrame, table: str, key: str)
             merged = survivors.unionByName(incoming_unique)
         else:
             merged = incoming_unique  # every existing file provably collision-free
-        new_files = _write_data_files(
-            merged, table, mapping=_extend_mapping(_mapping(m), merged.columns),
-            partition_by=_phys_partitioning(m),
-        )
-        new_stats = _build_bloom_sidecar(
-            spark, table, new_files, merged.schema, _bloom_table_conf(m),
-            _refresh_stats(spark, table, stats, new_files, extra_cols=list(_identity(m))),
-        )
-        new_ident = (
-            _advance_identity(_identity(m), new_files, new_stats)
-            if _identity(m) else None
+        new_files, stats, props = _add_files(
+            spark, table, m, merged,
+            props={"column_mapping": _extend_mapping(_mapping(m), merged.columns)},
         )
         # carried files keep their tombstones; entries referencing the
         # rewritten (now-unreferenced) files match nothing — harmless,
         # reclaimed at the next compaction
         return _Commit(
-            files=carried + new_files,
-            schema=merged.schema.json(),
-            stats=new_stats,
-            operation="merge",
-            props={
-                "column_mapping": _extend_mapping(_mapping(m), merged.columns),
-                "identity": new_ident,
-            },
+            files=carried + new_files, schema=merged.schema.json(), stats=stats,
+            operation="merge", props=props,
         )
 
     return _commit(table, attempt, create=True)
@@ -3835,7 +3791,7 @@ def merge_table(
         _validate_merge_clauses(
             wm, wnm, [f.name for f in schema.fields], incoming_unique.columns
         )
-        cand, carried, stats = _merge_candidate_split(spark, table, m, key, incoming_unique)
+        cand, carried = _candidates(table, m, _key_predicates(m, key, incoming_unique))
         if cand:
             target = _read_files(spark, table, cand, m)
         else:
@@ -3907,51 +3863,13 @@ def merge_table(
         # must also keep the generated column consistent — validated here
         merged = _apply_generated(merged, _generated(m), "the MERGE result")
         _check_constraints(merged, _constraints(m), "the MERGE result")
-        new_files = _write_data_files(
-            merged, table, mapping=_mapping(m),
-            partition_by=_phys_partitioning(m),
-        )
-        new_stats = _build_bloom_sidecar(
-            spark, table, new_files, schema, _bloom_table_conf(m),
-            _refresh_stats(spark, table, stats, new_files, extra_cols=list(_identity(m))),
-        )
-        new_ident = (
-            _advance_identity(_identity(m), new_files, new_stats)
-            if _identity(m) else None
-        )
+        new_files, stats, props = _add_files(spark, table, m, merged)
         # carried files keep their tombstones (upsert_table's note)
         return _Commit(
-            files=carried + new_files,
-            stats=new_stats,
-            operation="merge",
-            props={"identity": new_ident},
+            files=carried + new_files, stats=stats, operation="merge", props=props
         )
 
     return _commit(table, attempt)
-
-
-def _refresh_stats(
-    spark: SparkSession,
-    table: str,
-    stats: dict,
-    new_files: list[str],
-    extra_cols: "tuple | list" = (),
-) -> dict:
-    """Stats for a partial-rewrite commit's NEW files: fresh entries for
-    the UNION of columns the parent ``stats`` tracked anywhere (so
-    pruning compounds across DML/merges instead of eroding file by
-    file); carried files keep their entries through the commit loop's
-    carry rule. Stats-less parents stay stats-less. ``extra_cols``
-    forces collection for columns the parent may not track yet (identity
-    columns — their high-water advance reads these entries)."""
-    from cashback_data_pipeline_spark.sinks import filestats
-
-    stats_cols = sorted(
-        {c for e in stats.values() for c in (e.get("cols") or {})} | set(extra_cols)
-    )
-    if not stats_cols:
-        return {}
-    return filestats.collect_file_stats(spark, table, new_files, stats_cols)
 
 
 def append_table_if_absent(
@@ -3980,7 +3898,7 @@ def append_table_if_absent(
         if m is None:
             fresh = incoming_unique
         else:
-            cand, _, _ = _merge_candidate_split(spark, table, m, key, incoming_unique)
+            cand, _ = _candidates(table, m, _key_predicates(m, key, incoming_unique))
             if cand:
                 # DV-applied key screen: a merge-on-read-DELETEd key is
                 # absent, so the NOT-EXISTS load re-admits it (ghost keys
@@ -4011,19 +3929,9 @@ def append_table_if_absent(
             n = fresh.count()
             if n == 0:
                 return 0
-            files = _write_data_files(
-                fresh, table, mapping=_extend_mapping(_mapping(m), fresh.columns),
-                partition_by=_phys_partitioning(m),
-            )
-            new_stats = _build_bloom_sidecar(
-                spark, table, files, fresh.schema, _bloom_table_conf(m),
-                _refresh_stats(
-                    spark, table, (m or {}).get("stats") or {}, files,
-                    extra_cols=list(ident),
-                ),
-            )
-            new_ident = (
-                _advance_identity(ident, files, new_stats) if ident else None
+            files, stats, props = _add_files(
+                spark, table, m, fresh,
+                props={"column_mapping": _extend_mapping(_mapping(m), fresh.columns)},
             )
             # commit the RECONCILED schema (parent widened by the batch,
             # never narrowed) — the write_table append discipline; an
@@ -4036,12 +3944,9 @@ def append_table_if_absent(
                     fresh.schema.json() if m is None
                     else _reconcile_append_schema(m["schema"], fresh.schema)
                 ),
-                stats=new_stats,
+                stats=stats,
                 operation="append_if_absent",
-                props={
-                    "column_mapping": _extend_mapping(_mapping(m), fresh.columns),
-                    "identity": new_ident,
-                },
+                props=props,
                 result=n,
             )
         finally:
@@ -4052,15 +3957,15 @@ def append_table_if_absent(
 
 def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_key: str) -> int:
     """Shared engine of the file-pruned copy-on-write DML ops
-    (:func:`delete_where` / :func:`update_where`): files whose manifest
-    stats PROVE no row matches the predicate tree carry forward
-    UNTOUCHED — zero read or write I/O — and only candidate files are
-    read and rewritten through ``transform(snapshot, matched)`` (matched
-    = the predicate column ``IS TRUE``, giving SQL DML null semantics).
-    Optimistic CAS retry; rewritten files get fresh stats for the same
-    columns the parent tracked, so skipping keeps working across DML;
-    ``meta[meta_key]`` records {"rewritten", "carried"} file counts (the
-    carried count is the pruning evidence). Both ops are REWRITES:
+    (:func:`delete_where` / :func:`update_where`): files whose metadata
+    PROVES no row matches the predicate tree (:func:`_candidates`) carry
+    forward UNTOUCHED — zero read or write I/O — and only candidate
+    files are read and rewritten through ``transform(snapshot,
+    matched)`` (matched = the predicate column ``IS TRUE``, giving SQL
+    DML null semantics) and added through :func:`_add_files`.
+    Optimistic CAS retry; ``meta[meta_key]`` records {"rewritten",
+    "carried"} file counts (the carried count is the pruning evidence).
+    Both ops are REWRITES:
     append-only :func:`read_changes` windows spanning them refuse, and
     :func:`read_changes_rows` shows the row-level effect."""
     from cashback_data_pipeline_spark.sinks import filestats
@@ -4068,43 +3973,20 @@ def _rewrite_where(spark: SparkSession, table: str, predicates, transform, meta_
     cond = filestats.skip_condition(predicates)
 
     def attempt(cur, m):
-        files = m["files"]
-        stats = m.get("stats") or {}
-        store = get_log_store(table)
-        # pruning consults PHYSICAL-keyed stats (with sound derived
-        # generated-column conjuncts); the residual condition applies
-        # to the logical frame below, unaugmented
-        phys_preds = _phys_predicates(
-            _augment_generated_predicates(predicates, m), _mapping(m)
-        )
-        cand, _ = filestats.prune_files(files, stats, phys_preds)
-        # bloom refinement: a keyed DELETE/UPDATE on a bloom-indexed
-        # table rewrites only the files whose filters admit the key
-        cand, _ = filestats.prune_files_bloom(store, table, cand, stats, phys_preds)
-        cand_set = set(cand)
-        carried = [f for f in files if f not in cand_set]
+        # the residual condition applies to the logical frame below
+        cand, carried = _candidates(table, m, predicates)
         if not cand:
             return cur  # stats prove nothing matches — no version churn
         snap = _read_files(spark, table, cand, m)
         rewritten = transform(snap, cond.eqNullSafe(F.lit(True)))
         if meta_key == "update":
             _check_constraints(rewritten, _constraints(m), "the UPDATE result")
-        new_files = _write_data_files(
-            rewritten, table, mapping=_mapping(m),
-            partition_by=_phys_partitioning(m),
-        )
-        new_stats = _build_bloom_sidecar(
-            spark,
-            table,
-            new_files,
-            T.StructType.fromJson(json.loads(m["schema"])),
-            _bloom_table_conf(m),
-            _refresh_stats(spark, table, stats, new_files),
-        )
+        new_files, stats, props = _add_files(spark, table, m, rewritten)
         meta = dict(m.get("meta") or {})
         meta[meta_key] = {"rewritten": len(cand), "carried": len(carried)}
         return _Commit(
-            files=carried + new_files, meta=meta, stats=new_stats, operation=meta_key
+            files=carried + new_files, meta=meta, stats=stats, operation=meta_key,
+            props=props,
         )
 
     return _commit(table, attempt)
@@ -4147,14 +4029,8 @@ def delete_where(spark: SparkSession, table: str, predicates, mode: str = "copy_
     filestats.skip_condition(predicates)  # validate the spec up front
 
     def attempt(cur, m):
-        stats = m.get("stats") or {}
         store = get_log_store(table)
-        phys_preds = _phys_predicates(predicates, _mapping(m))
-        prune_preds = _phys_predicates(
-            _augment_generated_predicates(predicates, m), _mapping(m)
-        )
-        cand, _ = filestats.prune_files(m["files"], stats, prune_preds)
-        cand, _ = filestats.prune_files_bloom(store, table, cand, stats, prune_preds)
+        cand, _ = _candidates(table, m, predicates)
         if not cand:
             return cur  # stats prove nothing matches — no version churn
         # deletion-vector bookkeeping keys rows by the data/<commit>/
@@ -4186,7 +4062,10 @@ def delete_where(spark: SparkSession, table: str, predicates, mode: str = "copy_
                 mapping=_mapping(m), partitioning=_partitioning(m) or None,
                 with_meta=True,
             )
-            .filter(filestats.skip_condition(phys_preds).eqNullSafe(F.lit(True)))
+            .filter(
+                filestats.skip_condition(_phys_predicates(predicates, _mapping(m)))
+                .eqNullSafe(F.lit(True))
+            )
             .select(
                 F.col("__row_file").alias("file"),
                 F.col("__row_ri").alias("row_index"),

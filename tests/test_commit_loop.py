@@ -11,6 +11,7 @@ same rows, the same schema and the same operation history."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -155,3 +156,30 @@ def test_try_commit_has_one_caller():
                     loops.append(rel)
     assert callers == [os.path.join("sinks", "manifest.py")]
     assert loops == [os.path.join("sinks", "manifest.py")]
+
+
+@pytest.mark.parametrize(
+    "call,owner",
+    [
+        ("_build_bloom_sidecar(", "_add_files"),
+        ("_advance_identity(", "_add_files"),
+        ("filestats.prune_files_bloom(", "_candidates"),
+        ("_augment_generated_predicates(", "_candidates"),
+    ],
+)
+def test_write_tail_and_pruner_have_one_call_site(call, owner):
+    """In ``sinks/manifest.py`` every file-adding writer gets its new
+    files' bloom sidecar and identity advance from the write tail
+    ``_add_files``, and every pruning site goes through ``_candidates``:
+    each call below has exactly one site, inside its owner."""
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "cashback_data_pipeline_spark", "sinks", "manifest.py"
+    )
+    src = open(path, encoding="utf-8").read()
+    pattern = r"(?<!def )(?<![\w.])" + re.escape(call)
+    sites = []
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            n = len(re.findall(pattern, ast.get_source_segment(src, node)))
+            sites += [node.name] * n
+    assert sites == [owner]

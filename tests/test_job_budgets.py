@@ -3,8 +3,9 @@ search) at sf0.001: 500 documents, an 80/20 build/upsert split; for the
 manifest IVF index (build → upsert → query) over the 500 sf0.001
 embeddings, the same split, 16 centroids and 10 queries; for the
 curate-corpus write of the corpus benchmark over the 500 documents; for
-five rounds of BPE merge training over the same documents; and for a
-date-range SQL aggregate over a registered manifest view.
+five rounds of BPE merge training over the same documents; for a
+date-range SQL aggregate over a registered manifest view; and for every
+manifest writer on a 600-row serving-shaped and a bloom-indexed table.
 
 Job and codegen counts are deterministic for fixed inputs, unlike wall
 time, so a reintroduced redundant action (an extra ``.first()``, a
@@ -33,6 +34,22 @@ IVF_QUERY_MAX_JOBS = 6
 CURATE_MAX_JOBS = 24
 BPE_MAX_JOBS = 17
 SQL_VIEW_MAX_JOBS = 2
+# writer -> (ceiling on the serving shape: partitioned by day with
+# stats on k; ceiling on the bloom shape: unpartitioned, bloom on k)
+WRITER_MAX_JOBS = {
+    "write_table overwrite": (1, 3),
+    "write_table append": (1, 3),
+    "append_table_if_absent": (9, 11),
+    "delete_where copy_on_write": (1, 3),
+    "update_where": (1, 3),
+    "upsert_table": (8, 10),
+    "merge_table": (9, 11),
+    "delete_keys": (5, 7),
+    "delete_where merge_on_read": (4, 4),
+    "optimize_table": (6, 8),
+    "compact_table": (1, 3),
+    "stage_commit": (1, 3),
+}
 TERMS = ["data", "model", "the"]
 
 
@@ -256,3 +273,65 @@ def test_sql_view_date_range_budget(spark, tmp_path):
     assert "BatchScan" not in plan and "PythonDataSource" not in plan, plan
     assert file_scans(q), plan
     assert scanned_files(q) < n_files, (scanned_files(q), n_files)
+
+
+def _rows(spark, lo: int, hi: int):
+    return spark.range(lo, hi).selectExpr(
+        "id AS k",
+        "date_add(DATE'2024-01-01', CAST(id % 6 AS INT)) AS day",
+        "CAST(id AS DOUBLE) AS amount",
+    )
+
+
+def _writer_steps(spark, t: str, shape: str) -> list:
+    """Every manifest writer, in order, on one table: the ``serving``
+    shape is partitioned by ``day`` with stats on ``k``, the ``bloom``
+    shape is unpartitioned with a bloom filter on ``k``. The keyed steps
+    touch a few keys, so pruning leaves some files carried."""
+    layout = (
+        {"partition_by": ["day"], "stats_cols": ["k"]} if shape == "serving"
+        else {"bloom_cols": ["k"]}
+    )
+    return [
+        ("write_table overwrite", lambda: M.write_table(_rows(spark, 0, 600), t, **layout)),
+        ("write_table append", lambda: M.write_table(_rows(spark, 600, 660), t, mode="append")),
+        ("append_table_if_absent",
+         lambda: M.append_table_if_absent(spark, _rows(spark, 650, 700), t, "k")),
+        ("delete_where copy_on_write", lambda: M.delete_where(spark, t, [("k", "==", 5)])),
+        ("update_where",
+         lambda: M.update_where(spark, t, {"amount": "amount + 1"}, [("k", "==", 7)])),
+        ("upsert_table",
+         lambda: M.upsert_table(spark, _rows(spark, 10, 12).union(_rows(spark, 700, 702)), t, "k")),
+        ("merge_table", lambda: M.merge_table(
+            spark, _rows(spark, 14, 16).union(_rows(spark, 702, 704)), t, "k",
+            when_matched=[("update", None, "*")], when_not_matched=[("insert", None, "*")])),
+        ("delete_keys", lambda: M.delete_keys(spark, _rows(spark, 20, 22).select("k"), t, "k")),
+        ("delete_where merge_on_read",
+         lambda: M.delete_where(spark, t, [("k", "==", 30)], mode="merge_on_read")),
+        ("optimize_table", lambda: M.optimize_table(spark, t)),
+        ("compact_table", lambda: M.compact_table(spark, t, n_files=2)),
+        ("stage_commit", lambda: M.publish_staged(
+            t, M.stage_commit(_rows(spark, 800, 860), t))),
+    ]
+
+
+@pytest.fixture(scope="module")
+def writer_jobs(spark, tmp_path_factory):
+    """Jobs per writer step, per table shape."""
+    return {
+        shape: _sequence(
+            spark, _writer_steps(spark, str(tmp_path_factory.mktemp("w") / "t"), shape)
+        )
+        for shape in ("serving", "bloom")
+    }
+
+
+@pytest.mark.parametrize("shape", ["serving", "bloom"])
+@pytest.mark.parametrize("writer", list(WRITER_MAX_JOBS))
+def test_manifest_writer_job_budget(writer_jobs, writer, shape):
+    """The optimize step runs on a table with a deletion vector: it reads
+    the tombstone relation once, for both its reclaim ratios and the
+    dead-relation check. ``stage_commit`` (stage + publish) builds the
+    bloom sidecar of its files on the bloom shape, like an append."""
+    ceiling = WRITER_MAX_JOBS[writer][shape == "bloom"]
+    assert writer_jobs[shape][writer] <= ceiling, writer_jobs[shape]

@@ -60,9 +60,9 @@ def test_sessionized_stream_produces_sessions(spark, events_dir):
     assert total == 10000 if "sf0.01" in events_dir else total > 0
 
 
-def test_incremental_upsert_stream_idempotent_by_key(spark, sf_dir, events_dir):
-    target = tempfile.mkdtemp(prefix="stream_target_") + "/t"
-    ckpt1 = tempfile.mkdtemp(prefix="ckpt_")
+def test_incremental_upsert_stream_idempotent_by_key(spark, sf_dir, events_dir, tmp_path):
+    target = str(tmp_path / "t")
+    ckpt1 = str(tmp_path / "ckpt1")
     source = streaming.read_events_stream(spark, events_dir, max_files_per_trigger=2)
     q = streaming.incremental_upsert_stream(spark, source, target, "event_id", ckpt1)
     q.awaitTermination(120)
@@ -72,7 +72,7 @@ def test_incremental_upsert_stream_idempotent_by_key(spark, sf_dir, events_dir):
 
     # replay the whole stream with a FRESH checkpoint (simulated re-run /
     # at-least-once duplication): key-dedup must admit nothing new
-    ckpt2 = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt2 = str(tmp_path / "ckpt2")
     source2 = streaming.read_events_stream(spark, events_dir, max_files_per_trigger=2)
     q2 = streaming.incremental_upsert_stream(spark, source2, target, "event_id", ckpt2)
     q2.awaitTermination(120)

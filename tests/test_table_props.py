@@ -185,3 +185,25 @@ def test_generated_alter_landing_mid_append_wins_the_cas(spark, tmp_path):
     assert M.write_table(rows, t, mode="append") == 3
     assert M.read_manifest(t, 3)["generated"] == {"p2": {"expr": "price * 2", "type": "double"}}
     assert sorted(tuple(r) for r in M.read_table(spark, t).collect()) == [(5, 5.0, 10.0), (6, 6.0, 12.0)]
+
+
+def test_wap_publish_keeps_bloom_and_stats(spark, tmp_path):
+    """A published stage adds its files like an append: each carries the
+    table's bloom sidecar and stats for the tracked column, so a point
+    lookup keeps only the one file holding the key."""
+    t = str(tmp_path / "t")
+
+    def rows(lo, hi, n):
+        return spark.range(lo, hi).selectExpr("id AS k", "CAST(id AS STRING) AS v").repartition(n)
+
+    M.write_table(rows(0, 400, 4), t, bloom_cols=["k"], stats_cols=["k"])
+    M.write_table(rows(400, 600, 2), t, mode="append")
+    M.publish_staged(t, M.stage_commit(rows(600, 800, 2), t))
+    m = M.read_manifest(t, M.current_version(t))
+    assert len(m["files"]) == 8
+    for f in m["files"]:
+        entry = m["stats"].get(f) or {}
+        assert entry.get("bloom") and "k" in (entry.get("cols") or {}), (f, entry)
+    hit = M.read_table(spark, t, skip=("k", "==", 100))
+    assert len(hit.inputFiles()) == 1
+    assert [r["k"] for r in hit.collect()] == [100]
